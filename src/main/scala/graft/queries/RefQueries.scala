@@ -72,6 +72,19 @@ object RefQueries {
       (r.getLong(0), r.getLong(1))
     })
 
+  /** Y5 on the 1-minute grid over the events window: events resampled
+    * by `AsofJoin.uniformGrid`, with the per-ts max(value) dedupe (the
+    * oracle's CTE `e`) fused into the tick aggregate via tieCol. The
+    * pad/backfill/nearest queries carry `ts` as a value column and
+    * rename it to `src_ts`. */
+  private def y5Resample(s: SparkSession, d: String, method: String,
+                         valueCols: Seq[String]): DataFrame = {
+    val (lo, hi) = eventsWindowUs(s, d)
+    AsofJoin.uniformGrid(s, Seq(AsofJoin.GridSeries(events(s, d), "ts", valueCols, "")),
+      lo, MinuteUs, TimeGrid.tickCount(lo, hi, MinuteUs), method,
+      tieCol = Some("value"))
+  }
+
   private def minuteGrid(spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
     val (lo, hi) = eventsWindowUs(spark, dir)
     (TimeGrid.grid(spark, lo, hi, MinuteUs, tickCol = "tick"), lo,
@@ -286,14 +299,9 @@ object RefQueries {
 
     // Y5 — as-of pad: last event at ts <= tick (app.py:164, method='pad').
     QueryDef("y5_asof_pad",
-      (s, d) => {
-        val (lo, hi) = eventsWindowUs(s, d)
-        // tieCol fuses the per-ts max(value) dedupe into the tick agg
-        AsofJoin.uniformGrid(s, events(s, d), "ts", Seq("value"),
-          lo, MinuteUs, TimeGrid.tickCount(lo, hi, MinuteUs), "pad",
-          tieCol = Some("value"))
-          .orderBy(col("tick"))
-      },
+      (s, d) => y5Resample(s, d, "pad", Seq("ts", "value"))
+        .select(col("tick"), col("ts").as("src_ts"), col("value"))
+        .orderBy(col("tick")),
       Some(s"""WITH $oracleGridCte
               |SELECT make_timestamp(g.tick_us) AS tick, e.ts AS src_ts, e.value AS value
               |FROM g ASOF LEFT JOIN e ON make_timestamp(g.tick_us) >= e.ts
@@ -301,14 +309,9 @@ object RefQueries {
 
     // Y5 — as-of backfill: first event at ts >= tick.
     QueryDef("y5_asof_backfill",
-      (s, d) => {
-        val (lo, hi) = eventsWindowUs(s, d)
-        // tieCol fuses the per-ts max(value) dedupe into the tick agg
-        AsofJoin.uniformGrid(s, events(s, d), "ts", Seq("value"),
-          lo, MinuteUs, TimeGrid.tickCount(lo, hi, MinuteUs), "backfill",
-          tieCol = Some("value"))
-          .orderBy(col("tick"))
-      },
+      (s, d) => y5Resample(s, d, "backfill", Seq("ts", "value"))
+        .select(col("tick"), col("ts").as("src_ts"), col("value"))
+        .orderBy(col("tick")),
       Some(s"""WITH $oracleGridCte
               |SELECT make_timestamp(g.tick_us) AS tick, e.ts AS src_ts, e.value AS value
               |FROM g ASOF LEFT JOIN e ON make_timestamp(g.tick_us) <= e.ts
@@ -316,14 +319,9 @@ object RefQueries {
 
     // Y5 — as-of nearest: min |ts - tick|, tie -> LATER ts [verified].
     QueryDef("y5_asof_nearest",
-      (s, d) => {
-        val (lo, hi) = eventsWindowUs(s, d)
-        // tieCol fuses the per-ts max(value) dedupe into the tick agg
-        AsofJoin.uniformGrid(s, events(s, d), "ts", Seq("value"),
-          lo, MinuteUs, TimeGrid.tickCount(lo, hi, MinuteUs), "nearest",
-          tieCol = Some("value"))
-          .orderBy(col("tick"))
-      },
+      (s, d) => y5Resample(s, d, "nearest", Seq("ts", "value"))
+        .select(col("tick"), col("ts").as("src_ts"), col("value"))
+        .orderBy(col("tick")),
       Some(s"""WITH $oracleGridCte,
               |p AS (SELECT make_timestamp(g.tick_us) AS tick, e.ts AS pts, e.value AS pv
               |      FROM g ASOF LEFT JOIN e ON make_timestamp(g.tick_us) >= e.ts),
@@ -346,14 +344,9 @@ object RefQueries {
     // single-shuffle O(ticks) kernel as `nearest` (both neighbor
     // runnings come out of one map-combined aggregate).
     QueryDef("y5_asof_interp",
-      (s, d) => {
-        val (lo, hi) = eventsWindowUs(s, d)
-        AsofJoin.uniformGrid(s, events(s, d), "ts", Seq("value"),
-          lo, MinuteUs, TimeGrid.tickCount(lo, hi, MinuteUs), "interp",
-          tieCol = Some("value"))
-          .select(col("tick"), round(col("value"), 6).as("value"))
-          .orderBy(col("tick"))
-      },
+      (s, d) => y5Resample(s, d, "interp", Seq("value"))
+        .select(col("tick"), round(col("value"), 6).as("value"))
+        .orderBy(col("tick")),
       Some(s"""WITH $oracleGridCte,
               |p AS (SELECT g.tick_us, e.ts AS pts, e.value AS pv
               |      FROM g ASOF LEFT JOIN e ON make_timestamp(g.tick_us) >= e.ts),

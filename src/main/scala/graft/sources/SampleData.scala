@@ -77,13 +77,17 @@ object SampleData {
           partitions: Int = 32): DataFrame = {
     import graft.model.Schemas.{logEventTypes, logEventWeights}
     val cum = logEventWeights.scanLeft(0.0)(_ + _).tail
-    val u = rand(seed + 1)
-    // chained when(u < cum_p_i, label_i) = weighted categorical choice
+    // chained when(u < cum_p_i, label_i) = weighted categorical choice.
+    // `u` is ONE draw per row, materialized as a column below: an inline
+    // rand() in every branch would be a separate generator per branch,
+    // each advanced only on the rows that reach it, so the later types
+    // would come out at the wrong rates.
+    val u = col("__u")
     val eventType = logEventTypes.zip(cum).init
       .foldRight(lit(logEventTypes.last): org.apache.spark.sql.Column) {
         case ((label, p), acc) => when(u < p, label).otherwise(acc)
       }
-    spark.range(0, n, 1, partitions).select(
+    spark.range(0, n, 1, partitions).withColumn("__u", rand(seed + 1)).select(
       timestamp_micros((lit(startUs) + rand(seed) * spanUs).cast("long"))
         .as("timestamp"),
       eventType.as("event_type"),

@@ -3,6 +3,7 @@ package graft.sync
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Y5 — as-of resample: align a (possibly irregular) series onto a set
   * of grid ticks, per `df.reindex(grid, method)` in the reference
@@ -15,10 +16,14 @@ import org.apache.spark.sql.functions._
   *              edges); **ties break to the LATER timestamp**;
   *  - an exact tick == ts match returns that row under all methods.
   *
+  * One kernel per grid shape: `pad`/`backfill`/`nearest` for an
+  * arbitrary grid frame, `uniformGrid` (N series, plus `interp`) for a
+  * uniform grid, `keyedPad` for the keyed trade/quote shape.
+  *
   * Scale design — the reason this module exists: the naive formulation
   * (`last(...) OVER (ORDER BY ts)` with no partitioning) serializes the
   * whole dataset through ONE partition. Instead we bucket the time axis
-  * (`bucketUs`, default 1 h) and run two cheap passes:
+  * (`bucketUs`, adaptive by default) and run two cheap passes:
   *
   *   1. union grid markers with series rows, window **partitioned by
   *      time bucket** → within-bucket as-of (parallel across buckets);
@@ -35,7 +40,7 @@ import org.apache.spark.sql.functions._
   *
   * Caveat: series rows must be unique per timestamp (dedupe upstream,
   * e.g. `groupBy(ts).agg(...)`) — same requirement pandas' reindex
-  * imposes on its index.
+  * imposes on its index. `uniformGrid` fuses that dedupe (`tieCol`).
   */
 object AsofJoin {
 
@@ -78,14 +83,38 @@ object AsofJoin {
   def pad(grid: DataFrame, gridTs: String, series: DataFrame, seriesTs: String,
           valueCols: Seq[String], bucketUs: Long = Adaptive,
           srcTsCol: String = "src_ts"): DataFrame =
-    directional(grid, gridTs, series, seriesTs, valueCols, bucketUs, srcTsCol, sign = 1L)
+    generic(grid, gridTs, series, seriesTs, valueCols, bucketUs, srcTsCol, "pad")
 
-  /** backfill/bfill: first series row at ts >= tick — pad on the
-    * time-reversed axis. */
+  /** backfill/bfill: first series row at ts >= tick. */
   def backfill(grid: DataFrame, gridTs: String, series: DataFrame, seriesTs: String,
                valueCols: Seq[String], bucketUs: Long = Adaptive,
                srcTsCol: String = "src_ts"): DataFrame =
-    directional(grid, gridTs, series, seriesTs, valueCols, bucketUs, srcTsCol, sign = -1L)
+    generic(grid, gridTs, series, seriesTs, valueCols, bucketUs, srcTsCol, "backfill")
+
+  /** nearest: min |ts - tick|, tie -> later ts, never null when the
+    * series is non-empty (SURVEY §2.4). */
+  def nearest(grid: DataFrame, gridTs: String, series: DataFrame, seriesTs: String,
+              valueCols: Seq[String], bucketUs: Long = Adaptive,
+              srcTsCol: String = "src_ts"): DataFrame =
+    generic(grid, gridTs, series, seriesTs, valueCols, bucketUs, srcTsCol, "nearest")
+
+  /** Which neighbours a method reads: (pad side, backfill side). */
+  private def sides(method: String): (Boolean, Boolean) =
+    (method != "backfill" && method != "bfill", method != "pad" && method != "ffill")
+
+  /** The as-of pick from the pad neighbour `fwd` and the backfill
+    * neighbour `back` (payload structs carrying `__src`). */
+  private def choose(method: String, fwd: Column, back: Column, tickUs: Column): Column =
+    method match {
+      case "pad" | "ffill"      => fwd
+      case "backfill" | "bfill" => back
+      case "nearest" =>
+        val dPad = tickUs - fwd.getField("__src")
+        val dBack = back.getField("__src") - tickUs
+        // tie (dPad == dBack) -> backward side = LATER timestamp [verified]
+        when(fwd.isNull || (back.isNotNull && dBack <= dPad), back).otherwise(fwd)
+      case other => throw new IllegalArgumentException(s"unknown method: $other")
+    }
 
   /** Resolve an adaptive bucket width: one min/max agg over the
     * already-built union (a cheap column scan relative to the shuffle
@@ -100,395 +129,161 @@ object AsofJoin {
         u0.sparkSession.sparkContext.defaultParallelism)
     }
 
-  /** nearest: min |ts - tick|, tie -> later ts, never null when the
-    * series is non-empty (SURVEY §2.4).
+  /** One gap fill: `out` becomes the nearest non-null `in` at or before
+    * the row in axis order (at or after it when `backward`). */
+  private case class Fill(in: String, out: String, backward: Boolean)
+
+  /** The bucketed scan both grid kernels share. `df` carries the bucket
+    * `__b`, the `axis` and each fill's sparse `in` column.
     *
-    * Fused single-shuffle formulation: ONE bucketed shuffle of
-    * (grid ∪ series) computes BOTH directions as two window frames
-    * over the same partitioning (forward last / backward first), so
-    * there is no second union pass and — unlike composing pad+backfill
-    * — no grid-sized join to recombine them. The equal-timestamp case
-    * rides the forward frame (series sorts before the grid marker at
-    * equal __t), and the backward side reuses it when src == tick. */
-  def nearest(grid: DataFrame, gridTs: String, series: DataFrame, seriesTs: String,
-              valueCols: Seq[String], bucketUs: Long = Adaptive,
-              srcTsCol: String = "src_ts"): DataFrame = {
+    *  1. Within a bucket: a running `last(ignoreNulls)` per direction,
+    *     partitioned by `__b` (parallel across buckets). The backward
+    *     pass is a DESC-ordered running frame rather than an
+    *     UnboundedFollowing one: Spark executes UnboundedFollowing by
+    *     rescanning the partition tail per row (O(n²)); the desc
+    *     formulation is a second in-partition sort over the same
+    *     exchange. `tieBreak` orders rows at an equal axis value, the
+    *     same way in both directions.
+    *  2. Across buckets: a per-bucket digest (last / first non-null
+    *     value of each fill — one row per bucket, tiny by construction)
+    *     is scanned by a deliberate single-partition window and
+    *     broadcast back as the carry-in from strictly earlier / later
+    *     buckets. */
+  private def gapFill(df: DataFrame, axis: String, tieBreak: Seq[Column],
+                      fills: Seq[Fill]): DataFrame = {
+    def running(backward: Boolean) = Window.partitionBy("__b")
+      .orderBy((if (backward) col(axis).desc else col(axis).asc) +: tieBreak: _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    def carryName(f: Fill) = s"__c${f.out}"
+    val edges = fills.map { f =>
+      val at = when(col(f.in).isNotNull, col(axis))
+      (if (f.backward) min_by(col(f.in), at) else max_by(col(f.in), at)).as(f.out)
+    }
+    val carry = df.groupBy("__b").agg(edges.head, edges.tail: _*)
+      .select(col("__b") +: fills.map { f =>
+        val w = Window.orderBy(if (f.backward) col("__b").desc else col("__b").asc)
+          .rowsBetween(Window.unboundedPreceding, -1)
+        last(col(f.out), ignoreNulls = true).over(w).as(carryName(f))
+      }: _*)
+    df.withColumns(fills.map(f =>
+        f.out -> last(col(f.in), ignoreNulls = true).over(running(f.backward))).toMap)
+      .join(broadcast(carry), Seq("__b"), "left")
+      .withColumns(fills.map(f => f.out -> coalesce(col(f.out), col(carryName(f)))).toMap)
+      .drop(fills.map(carryName): _*)
+  }
+
+  /** The generic-grid kernel: ONE bucketed shuffle of (grid ∪ series),
+    * with a running frame per direction the method needs (pad: forward
+    * last; backfill: backward first; nearest: both over the same
+    * partitioning — no second union pass and no grid-sized join to
+    * recombine them). */
+  private def generic(grid: DataFrame, gridTs: String, series: DataFrame,
+                      seriesTs: String, valueCols: Seq[String], bucketUs: Long,
+                      srcTsCol: String, method: String): DataFrame = {
     require(valueCols.nonEmpty, "asof join needs at least one value column")
+    val (needPad, needBack) = sides(method)
     val payload = struct(
       unix_micros(col(seriesTs)).as("__src") +: valueCols.map(col): _*)
     val s = series.select(
       unix_micros(col(seriesTs)).as("__t"), lit(0).as("__g"), payload.as("__p"))
-    val payloadType = s.schema("__p").dataType
-    val g = grid.select(
-      unix_micros(col(gridTs)).as("__t"), lit(1).as("__g"),
-      lit(null).cast(payloadType).as("__p"))
+    val nullP = lit(null).cast(s.schema("__p").dataType)
+    val g = grid.select(unix_micros(col(gridTs)).as("__t"), lit(1).as("__g"), nullP.as("__p"))
 
     val u0 = g.unionByName(s)
-    val effBucketUs = resolveBucketUs(u0, bucketUs)
-    def bucketed(df: DataFrame): DataFrame =
-      df.withColumn("__b", expr(s"__t div ${effBucketUs}L"))
-
-    val u = bucketed(u0)
-    // one shuffle, two running frames over it. The backward pass is a
-    // DESC-ordered running `last` rather than an UnboundedFollowing
-    // frame: Spark executes UnboundedFollowing by rescanning the
-    // partition tail per row (O(n²)); the desc formulation is a second
-    // in-partition sort (O(n log n)) over the same exchange. At equal
-    // __t the grid marker precedes series rows under BOTH orderings
-    // (asc: series __g=0 first -> fwd sees them; desc: grid __g=1
-    // first -> backward excludes them), so an exact tick==ts match
-    // rides the forward side only, reconciled below.
-    val wF = Window.partitionBy("__b").orderBy(col("__t").asc, col("__g").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wB = Window.partitionBy("__b").orderBy(col("__t").desc, col("__g").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val inBucket = u
-      .withColumn("__pf", last(col("__p"), ignoreNulls = true).over(wF))
-      .withColumn("__pb", last(col("__p"), ignoreNulls = true).over(wB))
-      .filter(col("__g") === 1)
-
-    // tiny per-bucket digest: last + first series payload per bucket,
-    // prefix-scanned forward and suffix-scanned backward for carries
-    val bucketDigest = bucketed(s).groupBy("__b").agg(
-      max_by(col("__p"), col("__t")).as("__last"),
-      min_by(col("__p"), col("__t")).as("__first"))
-    val gridBuckets = bucketed(g).select("__b").distinct()
-      .select(col("__b"), lit(1).as("__g"),
-        lit(null).cast(payloadType).as("__last"),
-        lit(null).cast(payloadType).as("__first"))
-    val ub = bucketDigest.select(col("__b"), lit(0).as("__g"), col("__last"), col("__first"))
-      .unionByName(gridBuckets)
-    // forward carry: strictly-earlier buckets (grid row precedes its
-    // bucket's series digest under __g desc); backward carry: strictly
-    // -later buckets (digest precedes grid row under __g asc)
-    val wCF = Window.orderBy(col("__b").asc, col("__g").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // backward carry as a desc-ordered running last (same O(n²)
-    // avoidance as wB): at a grid row, the most recently seen digest
-    // under (__b desc, __g desc) is the nearest strictly-later bucket
-    val wCB = Window.orderBy(col("__b").desc, col("__g").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val carry = ub
-      .withColumn("__cf", last(col("__last"), ignoreNulls = true).over(wCF))
-      .withColumn("__cb", last(col("__first"), ignoreNulls = true).over(wCB))
-      .filter(col("__g") === 1).select(col("__b"), col("__cf"), col("__cb"))
-
-    val joined = inBucket.join(broadcast(carry), Seq("__b"), "left")
-    val fwd = coalesce(col("__pf"), col("__cf"))
-    val backRaw = coalesce(col("__pb"), col("__cb"))
-    // equal-t series rows sort before the grid marker, so only the
-    // forward frame sees them; an exact match is both pad and backfill
-    val back = when(fwd.getField("__src") === col("__t"), fwd).otherwise(backRaw)
-    val dPad = col("__t") - fwd.getField("__src")
-    val dBack = back.getField("__src") - col("__t")
-    // tie (dPad == dBack) -> backward side = LATER timestamp [verified]
-    val useBack = fwd.isNull || (back.isNotNull && dBack <= dPad)
-    val pick = when(useBack, back).otherwise(fwd)
-    joined.select(
+    val u = u0.withColumn("__b", expr(s"__t div ${resolveBucketUs(u0, bucketUs)}L"))
+    // series rows sort before the grid marker at an equal __t in both
+    // directions (__g asc), so an exact tick == ts match is both the
+    // pad and the backfill row
+    val fills = (if (needPad) Seq(Fill("__p", "__fwd", backward = false)) else Nil) ++
+      (if (needBack) Seq(Fill("__p", "__back", backward = true)) else Nil)
+    val filled = gapFill(u, "__t", Seq(col("__g").asc), fills).filter(col("__g") === 1)
+    val pick = choose(method,
+      if (needPad) col("__fwd") else nullP, if (needBack) col("__back") else nullP, col("__t"))
+    filled.select(
       timestamp_micros(col("__t")).as(gridTs) +:
         timestamp_micros(pick.getField("__src")).as(srcTsCol) +:
         valueCols.map(c => pick.getField(c).as(c)): _*)
   }
 
-  /** Shared directional kernel. sign = 1 -> pad, -1 -> backfill (axis
-    * reversal flips <= into >= while reusing the same window shape). */
-  private def directional(grid: DataFrame, gridTs: String, series: DataFrame,
-                          seriesTs: String, valueCols: Seq[String], bucketUs: Long,
-                          srcTsCol: String, sign: Long): DataFrame = {
-    require(valueCols.nonEmpty, "asof join needs at least one value column")
-    val payload = struct(
-      unix_micros(col(seriesTs)).as("__src") +: valueCols.map(col): _*)
-    val s = series.select(
-      (unix_micros(col(seriesTs)) * sign).as("__t"), lit(0).as("__g"),
-      payload.as("__p"))
-    val payloadType = s.schema("__p").dataType
-    val g = grid.select(
-      (unix_micros(col(gridTs)) * sign).as("__t"), lit(1).as("__g"),
-      lit(null).cast(payloadType).as("__p"))
+  /** One resampled series for `uniformGrid`: the frame, its timestamp
+    * column, the value columns to carry, and the output column prefix
+    * (`""` keeps the names). */
+  case class GridSeries(df: DataFrame, tsCol: String,
+                        valueCols: Seq[String], prefix: String)
 
-    val u0 = g.unionByName(s)
-    val effBucketUs = resolveBucketUs(u0, bucketUs)
-    def bucketed(df: DataFrame): DataFrame =
-      df.withColumn("__b", expr(s"__t div ${effBucketUs}L"))
-
-    val u = bucketed(u0)
-    // Within one bucket: series rows sort before the grid marker at an
-    // equal __t (__g asc), so tick == ts matches its own row (inclusive).
-    val w = Window.partitionBy("__b").orderBy(col("__t").asc, col("__g").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val inBucket = u.withColumn("__pp", last(col("__p"), ignoreNulls = true).over(w))
-      .filter(col("__g") === 1)
-
-    // Bucket digest: last series payload per bucket (one row per
-    // non-empty bucket), prefix-scanned to give each grid bucket its
-    // carry-in from strictly earlier buckets. This table is tiny by
-    // construction (time-span / bucketUs rows), so the single-partition
-    // window below is deliberate, not an oversight.
-    val bucketLast = bucketed(s).groupBy("__b")
-      .agg(max_by(col("__p"), col("__t")).as("__p"))
-    val gridBuckets = bucketed(g).select("__b").distinct()
-      .select(col("__b"), lit(1).as("__g"), lit(null).cast(payloadType).as("__p"))
-    val ub = bucketLast.select(col("__b"), lit(0).as("__g"), col("__p"))
-      .unionByName(gridBuckets)
-    // __g desc: the grid marker precedes same-bucket series rows, so the
-    // (-inf, -1) frame sees only strictly-earlier buckets.
-    val wb = Window.orderBy(col("__b").asc, col("__g").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = ub.withColumn("__pc", last(col("__p"), ignoreNulls = true).over(wb))
-      .filter(col("__g") === 1).select(col("__b"), col("__pc"))
-
-    val joined = inBucket.join(broadcast(carry), Seq("__b"), "left")
-      .withColumn("__pf", coalesce(col("__pp"), col("__pc")))
-    joined.select(
-      timestamp_micros(col("__t") * sign).as(gridTs) +:
-        timestamp_micros(col("__pf").getField("__src")).as(srcTsCol) +:
-        valueCols.map(c => col("__pf").getField(c).as(c)): _*)
-  }
-
-  /** As-of resample onto a UNIFORM grid (lo + k·step, k < n) — the
-    * specialization every reference pipeline actually hits (Y4 grids
-    * are `date_range`s).
+  /** As-of resample of N series onto ONE uniform grid (lo + k·step,
+    * k < n) in a single map-combined shuffle — the grid every reference
+    * pipeline actually hits (Y4 grids are `date_range`s), and the
+    * composed pipeline's Y5+Y6 core (reference `app.py:164-176`).
     *
-    * Why a separate kernel: the generic path shuffles the ENTIRE
-    * series unioned with the grid. On a uniform grid the candidate
-    * tick of each series row is closed-form, so the series pass is a
-    * map-side-combined groupBy(tick): shuffle volume drops from
-    * O(|series|) to O(n ticks) — the difference between shuffling
-    * 100 TB and shuffling the grid. The tick axis is then gap-filled
-    * with the same bucketed running-window + digest-carry scan as the
-    * generic kernel (parallel across tick buckets).
-    *
+    * Why a separate kernel: the generic path shuffles the ENTIRE series
+    * unioned with the grid. On a uniform grid the candidate tick of
+    * each series row is closed-form:
     *  - pad candidate of tick k: last row with ts <= lo+k·step; a row
     *    at offset d=ts-lo belongs to tick ceil(d/step) (clamped at 0;
     *    rows past the last tick pad nothing);
     *  - backfill candidate: first row with ts >= tick; row belongs to
-    *    floor(d/step) (clamped at n-1; rows before lo backfill
-    *    nothing);
-    *  - nearest: combine both runnings, tie -> later ts [verified].
-    */
-  def uniformGrid(spark: org.apache.spark.sql.SparkSession,
-                  series: DataFrame, seriesTs: String, valueCols: Seq[String],
-                  loUs: Long, stepUs: Long, nTicks: Long, method: String,
-                  tickCol: String = "tick", srcTsCol: String = "src_ts",
-                  bucketTicks: Long = Adaptive,
-                  tieCol: Option[String] = None): DataFrame = {
-    require(valueCols.nonEmpty, "asof join needs at least one value column")
-    require(stepUs > 0 && nTicks > 0, "grid must be non-empty")
-    // closed-form (unlike the generic kernels, no data scan needed)
-    val effBucketTicks =
-      if (bucketTicks > 0) bucketTicks
-      else adaptiveBucketTicks(nTicks, spark.sparkContext.defaultParallelism)
-    val needPad = method != "backfill"
-    val needBack = method != "pad"
-
-    val t = unix_micros(col(seriesTs))
-    val payload = struct(t.as("__src") +: valueCols.map(col): _*)
-    val d = t - lit(loUs)
-    // exact integer floor-division (d may be negative; `div` truncates
-    // toward zero, so go through pmod)
-    def floorDiv(x: Column): Column = (x - pmod(x, lit(stepUs))) / lit(stepUs)
-
-    // `tieCol` fuses an upstream "dedupe to one row per ts keeping the
-    // MAX tie value" (pandas-reindex precondition) into this aggregate:
-    // the ordering key becomes (ts, tie) lexicographic, so the winner
-    // per tick is exactly the winner of dedupe-then-asof — and the
-    // O(|series|) dedupe shuffle disappears.
-    val src = series.select(
-      Seq(t.as("__t"), payload.as("__p"),
-        floorDiv(d + stepUs - 1).cast("long").as("__kp"),
-        floorDiv(d).cast("long").as("__kb")) ++
-        tieCol.map(c => col(c).as("__tie")): _*)
-    val payloadType = src.schema("__p").dataType
-    val ordPad = tieCol.map(_ => struct(col("__t"), col("__tie")))
-      .getOrElse(struct(col("__t")))
-    val ordBack = tieCol.map(_ => struct(col("__t"), -col("__tie")))
-      .getOrElse(struct(col("__t")))
-
-    def agg(keyExpr: Column, keep: Column, pick: Column => Column, name: String) =
-      src.filter(keep).groupBy(keyExpr.as("__k"))
-        .agg(pick(col("__p")).as(name))
-
-    val ticks = spark.range(0, nTicks).select(col("id").as("__k"))
-    var joined = ticks
-    if (needPad && needBack) {
-      // both directions in ONE scan + ONE map-combined shuffle: each
-      // row explodes into its (side, tick) assignments, and the
-      // null-ordering convention of max_by/min_by confines each
-      // aggregate to its side's rows. At 100 TB this halves the input
-      // reads of `nearest` vs running the two directional aggregates.
-      val side = col("__e").getField("__side")
-      val tagged = src.select(
-        Seq(col("__p"), col("__t"),
-          explode(array(
-            struct(lit(0).as("__side"),
-              greatest(col("__kp"), lit(0L)).as("__k"),
-              (col("__kp") <= nTicks - 1).as("__keep")),
-            struct(lit(1).as("__side"),
-              least(col("__kb"), lit(nTicks - 1)).as("__k"),
-              (col("__kb") >= 0L).as("__keep")))).as("__e")) ++
-          tieCol.map(_ => col("__tie")): _*)
-        .filter(col("__e").getField("__keep"))
-      val bothAgg = tagged.groupBy(col("__e").getField("__k").as("__k")).agg(
-        max_by(when(side === 0, col("__p")), when(side === 0, ordPad)).as("__ap"),
-        min_by(when(side === 1, col("__p")), when(side === 1, ordBack)).as("__ab"))
-      joined = joined.join(bothAgg, Seq("__k"), "left")
-    } else {
-      if (needPad) joined = joined.join(
-        agg(greatest(col("__kp"), lit(0L)), col("__kp") <= nTicks - 1,
-          p => max_by(p, ordPad), "__ap"), Seq("__k"), "left")
-      else joined = joined.withColumn("__ap", lit(null).cast(payloadType))
-      if (needBack) joined = joined.join(
-        agg(least(col("__kb"), lit(nTicks - 1)), col("__kb") >= 0L,
-          p => min_by(p, ordBack), "__ab"), Seq("__k"), "left")
-      else joined = joined.withColumn("__ab", lit(null).cast(payloadType))
-    }
-    val bucketed = joined.withColumn("__bk", expr(s"__k div ${effBucketTicks}L"))
-
-    // in-bucket gap fill (one row per tick -> no marker rows needed)
-    val wF = Window.partitionBy("__bk").orderBy(col("__k").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wB = Window.partitionBy("__bk").orderBy(col("__k").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    var filled = bucketed
-    if (needPad) filled = filled.withColumn("__fp",
-      last(col("__ap"), ignoreNulls = true).over(wF))
-    if (needBack) filled = filled.withColumn("__fb",
-      last(col("__ab"), ignoreNulls = true).over(wB))
-
-    // tiny cross-bucket carry digest (one row per non-empty bucket)
-    val digest = bucketed.groupBy("__bk").agg(
-      max_by(col("__ap"), when(col("__ap").isNotNull, col("__k"))).as("__dl"),
-      min_by(col("__ab"), when(col("__ab").isNotNull, col("__k"))).as("__df"))
-    val wCF = Window.orderBy(col("__bk").asc).rowsBetween(Window.unboundedPreceding, -1)
-    val wCB = Window.orderBy(col("__bk").desc).rowsBetween(Window.unboundedPreceding, -1)
-    val carry = digest
-      .withColumn("__cf", last(col("__dl"), ignoreNulls = true).over(wCF))
-      .withColumn("__cb", last(col("__df"), ignoreNulls = true).over(wCB))
-      .select(col("__bk"), col("__cf"), col("__cb"))
-
-    val withCarry = filled.join(broadcast(carry), Seq("__bk"), "left")
-    val fwd = if (needPad) coalesce(col("__fp"), col("__cf")) else lit(null).cast(payloadType)
-    val back = if (needBack) coalesce(col("__fb"), col("__cb")) else lit(null).cast(payloadType)
-
-    if (method == "interp") {
-      // Linear time-weighted interpolation between the pad neighbor
-      // (t0, v0) and the backfill neighbor (t1, v1):
-      //   v(tick) = v0 + (v1 - v0) * (tick - t0) / (t1 - t0)
-      // A tick landing exactly on a sample returns that sample (both
-      // neighbors collapse to it). No extrapolation: ticks before the
-      // first or after the last sample stay NULL. Value columns come
-      // back as DOUBLE; `srcTsCol` does not apply (two sources per
-      // tick) and is omitted. Same single-shuffle plan as `nearest`.
-      val tickUs = lit(loUs) + col("__k") * stepUs
-      val t0 = fwd.getField("__src")
-      val t1 = back.getField("__src")
-      val frac = (tickUs - t0).cast("double") / (t1 - t0).cast("double")
-      withCarry.select(
-        timestamp_micros(tickUs).as(tickCol) +:
-          valueCols.map { c =>
-            val v0 = fwd.getField(c).cast("double")
-            val v1 = back.getField(c).cast("double")
-            // same pushdown fence as the fused kernel: a downstream
-            // dropna filter must reference the attribute, not inline
-            // this blend into a huge generated filter stage
-            interpBarrier(
-              when(fwd.isNull || back.isNull, lit(null).cast("double"))
-                .when(t1 === t0, v0)
-                .otherwise(v0 + (v1 - v0) * frac))
-              .as(c)
-          }: _*)
-    } else {
-      val pick = method match {
-        case "pad" | "ffill"      => fwd
-        case "backfill" | "bfill" => back
-        case "nearest" =>
-          val tickUs = lit(loUs) + col("__k") * stepUs
-          val dPad = tickUs - fwd.getField("__src")
-          val dBack = back.getField("__src") - tickUs
-          // tie -> backward side = LATER timestamp [verified]
-          when(fwd.isNull || (back.isNotNull && dBack <= dPad), back).otherwise(fwd)
-        case other => throw new IllegalArgumentException(s"unknown method: $other")
-      }
-      withCarry.select(
-        timestamp_micros(lit(loUs) + col("__k") * stepUs).as(tickCol) +:
-          timestamp_micros(pick.getField("__src")).as(srcTsCol) +:
-          valueCols.map(c => pick.getField(c).as(c)): _*)
-    }
-  }
-
-  /** One resampled series for `uniformGridFused`: the frame, its
-    * timestamp column, the value columns to carry, and the output
-    * column prefix (`""` keeps the names). */
-  case class GridSeries(df: DataFrame, tsCol: String,
-                        valueCols: Seq[String], prefix: String)
-
-  /** The FUSED synchronization kernel — N series as-of-resampled onto
-    * ONE uniform grid in a single map-combined shuffle (the composed
-    * reference pipeline's Y5+Y6 core, `/root/reference/app.py:164-176`).
+    *    floor(d/step) (clamped at n-1; rows before lo backfill nothing).
+    * Every series row explodes into its (side, tick) assignments with
+    * its payload in its own sensor's slot (null in the others), and ONE
+    * groupBy(tick) computes all 2·N directional picks: the shuffle is
+    * O(ticks), not O(rows), regardless of N. The tick axis is then
+    * gap-filled with the same bucketed running-window + digest-carry
+    * scan as the generic kernel, one window pass for all sensors.
     *
-    * Why it exists: composing `uniformGrid` per sensor + an equi-join
-    * is semantically identical but schedules one shuffle PER SENSOR
-    * plus a tick-axis join. The per-sensor aggregates share the same
-    * key (the tick), so they fuse: every series row explodes into its
-    * pad/backfill tick assignments carrying its own sensor's payload
-    * slot (null in the others), and ONE groupBy(tick) computes all
-    * 2·N directional payload picks. The per-sensor gap-fill windows
-    * and the cross-bucket carry digest then ride the SAME per-tick
-    * frame — the whole alignment is one O(ticks) shuffle, one window
-    * pass, one broadcast digest, regardless of N. Same per-sensor
-    * semantics as `uniformGrid` (tie → later ts for nearest; tieCol
-    * fuses the per-ts max dedupe).
+    * Methods: pad/ffill, backfill/bfill, nearest (tie → later ts) and
+    * interp (linear in time between the pad and backfill neighbours;
+    * value columns come back as DOUBLE, no extrapolation past either
+    * end). `tieCol` fuses an upstream "dedupe to one row per ts keeping
+    * the MAX tie value" (`dedupeByTs`, the pandas-reindex precondition)
+    * into the aggregate: each sensor orders by (ts, tie) in its own
+    * slot, so sensors may carry tie columns of different types.
     *
     * The event one-hot (Y7) deliberately does NOT fuse here: the
     * struct-payload max_by buffers force this aggregate off
     * whole-stage codegen, and routing every event row through it was
-    * measured slower than `EventPivot`'s separate int-buffer pivot.
-    *
-    * All sensors must share the method and (when given) the tieCol's
-    * data type — the union branches need one ordering-struct type. */
-  def uniformGridFused(spark: org.apache.spark.sql.SparkSession,
-                       sensors: Seq[GridSeries],
-                       loUs: Long, stepUs: Long, nTicks: Long, method: String,
-                       tickCol: String = "tick",
-                       tieCol: Option[String] = None,
-                       bucketTicks: Long = Adaptive): DataFrame = {
-    require(sensors.nonEmpty, "fused grid needs at least one series")
+    * measured slower than `EventPivot`'s separate int-buffer pivot. */
+  def uniformGrid(spark: org.apache.spark.sql.SparkSession,
+                  sensors: Seq[GridSeries],
+                  loUs: Long, stepUs: Long, nTicks: Long, method: String,
+                  tickCol: String = "tick",
+                  tieCol: Option[String] = None,
+                  bucketTicks: Long = Adaptive): DataFrame = {
+    require(sensors.nonEmpty, "uniform grid needs at least one series")
     require(sensors.forall(_.valueCols.nonEmpty), "asof join needs value columns")
     require(stepUs > 0 && nTicks > 0, "grid must be non-empty")
-    val needPad = method != "backfill" && method != "bfill"
-    val needBack = method != "pad" && method != "ffill"
+    val (needPad, needBack) = sides(method)
+    // closed-form (unlike the generic kernels, no data scan needed)
     val effBucketTicks =
       if (bucketTicks > 0) bucketTicks
       else adaptiveBucketTicks(nTicks, spark.sparkContext.defaultParallelism)
 
+    // exact integer floor-division (d may be negative; `div` truncates
+    // toward zero, so go through pmod)
     def floorDiv(x: Column): Column = (x - pmod(x, lit(stepUs))) / lit(stepUs)
-
-    // per-sensor payload/ordering struct TYPES (needed for the null
-    // slots in the other branches of the union)
-    val payloadTypes = sensors.map { gs =>
-      gs.df.select(struct(unix_micros(col(gs.tsCol)).as("__src") +:
-        gs.valueCols.map(col): _*).as("__p")).schema("__p").dataType
+    def payload(gs: GridSeries) =
+      struct(unix_micros(col(gs.tsCol)).as("__src") +: gs.valueCols.map(col): _*)
+    // both sides MAXIMIZE their ordering key: pad the latest ts,
+    // backfill the earliest (its key negates ts); at an equal ts either
+    // keeps the largest tie, whatever the tie column's type
+    def ordering(key: Column) =
+      tieCol.fold(key)(tc => struct(key.as("__t"), col(tc).as("__tie")))
+    // per-sensor slot types (the null slots in the other union branches)
+    val slotTypes = sensors.map { gs =>
+      val sch = gs.df.select(payload(gs).as("p"),
+        ordering(unix_micros(col(gs.tsCol))).as("o")).schema
+      (sch("p").dataType, sch("o").dataType)
     }
-    def nullP(i: Int) = lit(null).cast(payloadTypes(i))
+    def nullP(i: Int) = lit(null).cast(slotTypes(i)._1)
 
     // one branch per sensor: explode each row into its admissible
-    // (side, tick) assignments with the payload in slot i
+    // (side, tick) assignments; its payload and the ordering key of the
+    // side each assignment feeds fill slot i, every other slot is null
     val sensorBranches = sensors.zipWithIndex.map { case (gs, i) =>
       val t = unix_micros(col(gs.tsCol))
-      val payload = struct(t.as("__src") +: gs.valueCols.map(col): _*)
       val d = t - lit(loUs)
       val kp = floorDiv(d + stepUs - 1).cast("long")
       val kb = floorDiv(d).cast("long")
-      // ordering-struct fields are aliased explicitly: the branches
-      // union positionally, and auto-generated field names would
-      // diverge (failing analysis) for sensors whose timestamp/tie
-      // columns are named differently
-      val ordP = tieCol.map(tc => struct(t.as("__t"), col(tc).as("__tie")))
-        .getOrElse(struct(t.as("__t")))
-      // backfill wants the EARLIEST ts but the LARGEST tie at equal
-      // ts — negate the tie inside a min_by (the uniformGrid rule)
-      val ordB = tieCol.map(tc => struct(t.as("__t"), (-col(tc)).as("__tie")))
-        .getOrElse(struct(t.as("__t")))
       val assignments =
         (if (needPad)
           Seq(struct(lit(0).as("__side"), greatest(kp, lit(0L)).as("__k"),
@@ -496,85 +291,47 @@ object AsofJoin {
         (if (needBack)
           Seq(struct(lit(1).as("__side"), least(kb, lit(nTicks - 1)).as("__k"),
             (kb >= 0L).as("__keep"))) else Nil)
+      val side = col("__e").getField("__side")
       gs.df.select(explode(array(assignments: _*)).as("__e"),
-          payload.as("__pp"), ordP.as("__opp"), ordB.as("__obb"))
+          payload(gs).as("__pp"), ordering(t).as("__opp"), ordering(-t).as("__obb"))
         .filter(col("__e").getField("__keep"))
-        .select(Seq(col("__e").getField("__k").as("__k"),
-          col("__e").getField("__side").as("__side"), lit(i).as("__s"),
-          col("__opp").as("__op"), col("__obb").as("__ob")) ++
-          sensors.indices.map(j =>
-            (if (j == i) col("__pp") else nullP(j)).as(s"__p$j")): _*)
+        .select(col("__e").getField("__k").as("__k") +: sensors.indices.flatMap { j =>
+          val (pType, oType) = slotTypes(j)
+          def slot(c: Column, tpe: DataType) = if (j == i) c else lit(null).cast(tpe)
+          Seq(slot(col("__pp"), pType).as(s"__p$j")) ++
+            (if (needPad) Seq(slot(when(side === 0, col("__opp")), oType).as(s"__op$j"))
+             else Nil) ++
+            (if (needBack) Seq(slot(when(side === 1, col("__obb")), oType).as(s"__ob$j"))
+             else Nil)
+        }: _*)
     }
-    val unioned = sensorBranches.reduce(_ unionAll _)
 
-    // ONE groupBy(tick): the null-ordering convention of max_by/min_by
-    // confines each aggregate to its own (sensor, side) rows
-    val aggs =
-      sensors.indices.flatMap { i =>
-        val mine = col("__s") === i
-        (if (needPad)
-          Seq(max_by(when(mine && col("__side") === 0, col(s"__p$i")),
-            when(mine && col("__side") === 0, col("__op"))).as(s"__ap$i"))
-        else Nil) ++
-        (if (needBack)
-          Seq(min_by(when(mine && col("__side") === 1, col(s"__p$i")),
-            when(mine && col("__side") === 1, col("__ob"))).as(s"__ab$i"))
-        else Nil)
-      }
-    val perTick = unioned.groupBy(col("__k")).agg(aggs.head, aggs.tail: _*)
-
-    var joined = spark.range(0, nTicks).select(col("id").as("__k"))
+    // ONE groupBy(tick): max_by skips rows whose ordering is null, so
+    // each aggregate sees only its own (sensor, side) rows
+    val aggs = sensors.indices.flatMap { i =>
+      (if (needPad) Seq(max_by(col(s"__p$i"), col(s"__op$i")).as(s"__ap$i")) else Nil) ++
+        (if (needBack) Seq(max_by(col(s"__p$i"), col(s"__ob$i")).as(s"__ab$i")) else Nil)
+    }
+    val perTick = sensorBranches.reduce(_ unionAll _)
+      .groupBy(col("__k")).agg(aggs.head, aggs.tail: _*)
+    val ticks = spark.range(0, nTicks).select(col("id").as("__k"))
       .join(perTick, Seq("__k"), "left")
-    for (i <- sensors.indices) {
-      if (!needPad) joined = joined.withColumn(s"__ap$i", nullP(i))
-      if (!needBack) joined = joined.withColumn(s"__ab$i", nullP(i))
-    }
-    val bucketed = joined.withColumn("__bk", expr(s"__k div ${effBucketTicks}L"))
-
-    // in-bucket gap fill — all 2·N last() columns share the two
-    // window specs, so Spark runs them in one pass each
-    val wF = Window.partitionBy("__bk").orderBy(col("__k").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wB = Window.partitionBy("__bk").orderBy(col("__k").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    var filled = bucketed
-    for (i <- sensors.indices) {
-      if (needPad) filled = filled.withColumn(s"__fp$i",
-        last(col(s"__ap$i"), ignoreNulls = true).over(wF))
-      if (needBack) filled = filled.withColumn(s"__fb$i",
-        last(col(s"__ab$i"), ignoreNulls = true).over(wB))
-    }
-
-    // tiny cross-bucket carry digest (one row per non-empty bucket)
-    val digestAgg = {
-      val exprs = sensors.indices.flatMap { i =>
-        Seq(max_by(col(s"__ap$i"),
-            when(col(s"__ap$i").isNotNull, col("__k"))).as(s"__dl$i"),
-          min_by(col(s"__ab$i"),
-            when(col(s"__ab$i").isNotNull, col("__k"))).as(s"__df$i"))
-      }
-      bucketed.groupBy("__bk").agg(exprs.head, exprs.tail: _*)
-    }
-    val wCF = Window.orderBy(col("__bk").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCB = Window.orderBy(col("__bk").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    var carry = digestAgg
-    for (i <- sensors.indices) {
-      carry = carry
-        .withColumn(s"__cf$i", last(col(s"__dl$i"), ignoreNulls = true).over(wCF))
-        .withColumn(s"__cb$i", last(col(s"__df$i"), ignoreNulls = true).over(wCB))
-    }
-    carry = carry.select(col("__bk") +:
-      sensors.indices.flatMap(i => Seq(col(s"__cf$i"), col(s"__cb$i"))): _*)
-    val withCarry = filled.join(broadcast(carry), Seq("__bk"), "left")
+      .withColumn("__b", expr(s"__k div ${effBucketTicks}L"))
+    // one row per tick: no marker rows, so no tie-break on the axis
+    val filled = gapFill(ticks, "__k", Nil, sensors.indices.flatMap { i =>
+      (if (needPad) Seq(Fill(s"__ap$i", s"__ap$i", backward = false)) else Nil) ++
+        (if (needBack) Seq(Fill(s"__ab$i", s"__ab$i", backward = true)) else Nil)
+    })
 
     val tickUs = lit(loUs) + col("__k") * stepUs
     val sensorCols = sensors.zipWithIndex.flatMap { case (gs, i) =>
-      val fwd = if (needPad) coalesce(col(s"__fp$i"), col(s"__cf$i")) else nullP(i)
-      val back = if (needBack) coalesce(col(s"__fb$i"), col(s"__cb$i")) else nullP(i)
+      val fwd = if (needPad) col(s"__ap$i") else nullP(i)
+      val back = if (needBack) col(s"__ab$i") else nullP(i)
       def out(c: String) = if (gs.prefix.isEmpty) c else s"${gs.prefix}_$c"
       if (method == "interp") {
+        // v(tick) = v0 + (v1 - v0) * (tick - t0) / (t1 - t0) between the
+        // pad neighbour (t0, v0) and the backfill neighbour (t1, v1); a
+        // tick landing exactly on a sample returns that sample
         val t0 = fwd.getField("__src")
         val t1 = back.getField("__src")
         val frac = (tickUs - t0).cast("double") / (t1 - t0).cast("double")
@@ -596,20 +353,11 @@ object AsofJoin {
             .as(out(c))
         }
       } else {
-        val pick = method match {
-          case "pad" | "ffill"      => fwd
-          case "backfill" | "bfill" => back
-          case "nearest" =>
-            val dPad = tickUs - fwd.getField("__src")
-            val dBack = back.getField("__src") - tickUs
-            when(fwd.isNull || (back.isNotNull && dBack <= dPad), back)
-              .otherwise(fwd)
-          case other => throw new IllegalArgumentException(s"unknown method: $other")
-        }
+        val pick = choose(method, fwd, back, tickUs)
         gs.valueCols.map(c => pick.getField(c).as(out(c)))
       }
     }
-    withCarry.select(timestamp_micros(tickUs).as(tickCol) +: sensorCols: _*)
+    filled.select(timestamp_micros(tickUs).as(tickCol) +: sensorCols: _*)
   }
 
   /** KEYED as-of join — the trade/quote shape: for each left row, the

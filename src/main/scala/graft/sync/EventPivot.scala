@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   * clamping reproduces argmin for out-of-range events). This is a pure
   * per-row expression — no join at all on the event side — followed by
   * one groupBy(tick) pivot. O(|log|) work, embarrassingly parallel,
-  * and whole-stage-codegen friendly. For a NON-uniform grid, fall back
-  * to `AsofJoin.nearest` with grid and events swapped.
+  * and whole-stage-codegen friendly. A NON-uniform grid has no closed
+  * form: `AsofJoin.nearest` with the grid as the series and the events
+  * as the grid finds each event's tick, but breaks exact-midpoint ties
+  * to the LATER tick, so it needs a tie adjustment to match.
   */
 object EventPivot {
 

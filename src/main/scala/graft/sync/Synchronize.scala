@@ -18,22 +18,6 @@ object Synchronize {
   val DefaultStepUs: Long = 33000L   // 33 ms ticks — app.py:160 (measured)
   val DefaultTolUs: Long = 100000L   // strict < 100 ms — app.py:185
 
-  /** Resample one sensor onto the uniform grid and prefix its data
-    * columns. Uses the uniform-grid as-of kernel: the sensor pass is a
-    * map-side-combined groupBy(tick), so the shuffle is O(ticks), not
-    * O(rows) — the non-uniform AsofJoin.pad/backfill/nearest kernels
-    * remain the general-grid path. */
-  private def resample(spark: SparkSession, sensor: DataFrame, method: String,
-                       prefix: String, startUs: Long, stepUs: Long,
-                       nTicks: Long, tieCol: Option[String]): DataFrame = {
-    val valueCols = sensor.columns.filterNot(_ == "timestamp").toSeq
-    val r = AsofJoin.uniformGrid(spark, sensor, "timestamp", valueCols,
-      startUs, stepUs, nTicks, method, tickCol = "timestamp", tieCol = tieCol)
-    r.select(col("timestamp") +: valueCols.map(c => col(c).as(s"${prefix}_$c")): _*)
-  }
-
-  /** Full synchronization. `log=None` skips Y7 like the reference's
-    * optional log (`app.py:178`). Returns (wide table, report). */
   /** Render an epoch-us instant the way the reference's report does
     * (pandas Timestamp str: micros shown only when non-zero). */
   private def fmtUs(us: Long): String = {
@@ -46,15 +30,21 @@ object Synchronize {
     if (micros == 0) head else f"$head.$micros%06d"
   }
 
-  /** Full synchronization. `log=None` skips Y7 like the reference's
-    * optional log (`app.py:178`). `withCounts=true` adds the two
-    * report lines that need extra counting jobs (`app.py:191,194`
-    * wording parity); off by default so the report never forces an
-    * eager recompute of the result. */
-  /** `tieCol`: when the sensors may carry duplicate timestamps, names
-    * the column whose MAX breaks the tie — fused into the resample
-    * aggregate instead of a separate dedupe shuffle (see
-    * AsofJoin.uniformGrid). */
+  /** Full synchronization. Returns (wide table, report lines).
+    *
+    *  - `method`: the as-of resample of both sensors — `nearest`
+    *    (default), `pad` (alias `ffill`), `backfill` (alias `bfill`) or
+    *    `interp` (linear in time between the two neighbours).
+    *  - `log = None` skips Y7 like the reference's optional log
+    *    (`app.py:178`).
+    *  - `withCounts = true` adds the two report lines that need extra
+    *    counting jobs (`app.py:191,194` wording parity); off by default
+    *    so the report never forces an eager recompute of the result.
+    *  - `tieCol`: when the sensors may carry duplicate timestamps, names
+    *    the column whose MAX breaks the tie. It is fused into the
+    *    resample aggregate instead of a separate dedupe shuffle (see
+    *    `AsofJoin.uniformGrid`); camera and motion may hold it in
+    *    different types. */
   def synchronize(spark: SparkSession, camera: DataFrame, motion: DataFrame,
                   log: Option[DataFrame], method: String = "nearest",
                   stepUs: Long = DefaultStepUs, tolUs: Long = DefaultTolUs,
@@ -83,33 +73,20 @@ object Synchronize {
 
     // Y5 + Y6 — FUSED: both sensors' as-of resamples share the tick
     // as their aggregation key, so the alignment runs as ONE
-    // map-combined shuffle (AsofJoin.uniformGridFused) instead of a
-    // shuffle per sensor plus a tick-axis equi-join. Falls back to
-    // the per-sensor composition only when the sensors' tie columns
-    // have different types (the union branches need one
-    // ordering-struct type).
+    // map-combined shuffle (AsofJoin.uniformGrid) instead of a shuffle
+    // per sensor plus a tick-axis equi-join.
     val camCols = cam.columns.filterNot(_ == "timestamp").toSeq
     val motCols = mot.columns.filterNot(_ == "timestamp").toSeq
-    val fusable = tieCol.forall(tc =>
-      cam.schema(tc).dataType == mot.schema(tc).dataType)
     val lgOpt = log.map(coerce)
     lgOpt.foreach { lg =>
       report :+= (if (withCounts)
         s"Mapped ${lg.count()} log events to synchronized timeline" // app.py:191
       else "Mapped log events to synchronized timeline")
     }
-    val aligned =
-      if (fusable)
-        AsofJoin.uniformGridFused(spark,
-          Seq(AsofJoin.GridSeries(cam, "timestamp", camCols, "camera"),
-            AsofJoin.GridSeries(mot, "timestamp", motCols, "motion")),
-          startUs, stepUs, nTicks, method,
-          tickCol = "timestamp", tieCol = tieCol)
-      else {
-        val camR = resample(spark, cam, method, "camera", startUs, stepUs, nTicks, tieCol)
-        val motR = resample(spark, mot, method, "motion", startUs, stepUs, nTicks, tieCol)
-        camR.join(motR, Seq("timestamp"))
-      }
+    val aligned = AsofJoin.uniformGrid(spark,
+      Seq(AsofJoin.GridSeries(cam, "timestamp", camCols, "camera"),
+        AsofJoin.GridSeries(mot, "timestamp", motCols, "motion")),
+      startUs, stepUs, nTicks, method, tickCol = "timestamp", tieCol = tieCol)
     // Y7 stays a SEPARATE codegen'd pivot aggregate: folding the event
     // rows into the fused kernel's aggregate was measured SLOWER (the
     // struct-payload max_by buffers force a non-codegen aggregate, and

@@ -31,6 +31,17 @@ class AsofJoinSpec extends GraftSpec {
 
   private val MS = 1000L // micros per milli
 
+  /** One series on the uniform grid lo + k·step (k < n) through the
+    * multi-series kernel, unprefixed; the source ts rides along as a
+    * value column and comes back as `src_ts` (interp has no source). */
+  private def ug(s: Seq[(Long, Double)], lo: Long, step: Long, n: Long, method: String,
+                 bucketTicks: Long = AsofJoin.Adaptive) = {
+    val cols = if (method == "interp") Seq("value") else Seq("ts", "value")
+    AsofJoin.uniformGrid(spark, Seq(AsofJoin.GridSeries(series(s: _*), "ts", cols, "")),
+      lo, step, n, method, bucketTicks = bucketTicks)
+      .withColumnRenamed("ts", "src_ts")
+  }
+
   test("nearest: exact tie breaks to the LATER timestamp") {
     // source at 0 ms and 100 ms, tick at 50 ms — equidistant
     val out = run("nearest", Seq(50 * MS), Seq((0L, 1.0), (100 * MS, 2.0)))
@@ -111,35 +122,32 @@ class AsofJoinSpec extends GraftSpec {
     val gTicks = (0L until n).map(k => lo + k * step)
     for (m <- Seq("pad", "backfill", "nearest")) {
       val generic = run(m, gTicks, s, bucketUs = 20000000L)
-      val ug = AsofJoin.uniformGrid(spark, series(s: _*), "ts", Seq("value"),
-        lo, step, n, m, tickCol = "tick", bucketTicks = 5L)
+      val uniform = ug(s, lo, step, n, m, bucketTicks = 5L)
         .select(unix_micros(col("tick")), unix_micros(col("src_ts")), col("value"))
         .collect().map { r =>
           r.getLong(0) -> ((if (r.isNullAt(1)) None else Some(r.getLong(1))),
             (if (r.isNullAt(2)) None else Some(r.getDouble(2))))
         }.toMap
-      assert(ug === generic, s"method=$m")
+      assert(uniform === generic, s"method=$m")
     }
   }
 
   test("uniformGrid edges: null pad before first, null backfill after last, nearest clamps") {
     val s = Seq((100 * MS, 1.0), (200 * MS, 2.0))
     // ticks at 0 and 300 ms: before-first and after-last
-    def ug(m: String) = AsofJoin.uniformGrid(spark, series(s: _*), "ts", Seq("value"),
-      0L, 300 * MS, 2L, m, tickCol = "tick")
+    def edges(m: String) = ug(s, 0L, 300 * MS, 2L, m)
       .select(unix_micros(col("tick")), unix_micros(col("src_ts")))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(ug("pad") === Map(0L -> None, 300 * MS -> Some(200 * MS)))
-    assert(ug("backfill") === Map(0L -> Some(100 * MS), 300 * MS -> None))
-    assert(ug("nearest") === Map(0L -> Some(100 * MS), 300 * MS -> Some(200 * MS)))
+    assert(edges("pad") === Map(0L -> None, 300 * MS -> Some(200 * MS)))
+    assert(edges("backfill") === Map(0L -> Some(100 * MS), 300 * MS -> None))
+    assert(edges("nearest") === Map(0L -> Some(100 * MS), 300 * MS -> Some(200 * MS)))
   }
 
   test("interp: linear between neighbors, exact ticks fixpoint, null edges") {
     // samples: (100ms, 1.0), (200ms, 3.0); ticks every 50 ms from 0
     val s = Seq((100 * MS, 1.0), (200 * MS, 3.0))
-    val out = AsofJoin.uniformGrid(spark, series(s: _*), "ts", Seq("value"),
-      0L, 50 * MS, 6L, "interp", tickCol = "tick")
+    val out = ug(s, 0L, 50 * MS, 6L, "interp")
       .select(unix_micros(col("tick")), col("value"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
@@ -156,8 +164,7 @@ class AsofJoinSpec extends GraftSpec {
     val s = (0 until 40).map(i =>
       (i * 37 * MS + rnd.nextInt(20000), rnd.nextDouble() * 100))
       .sortBy(_._1).distinct
-    val rows = AsofJoin.uniformGrid(spark, series(s: _*), "ts", Seq("value"),
-      0L, 25 * MS, 60L, "interp", tickCol = "tick")
+    val rows = ug(s, 0L, 25 * MS, 60L, "interp")
       .select(unix_micros(col("tick")), col("value")).collect()
     for (r <- rows if !r.isNullAt(1)) {
       val tick = r.getLong(0); val v = r.getDouble(1)
@@ -174,8 +181,7 @@ class AsofJoinSpec extends GraftSpec {
 
   test("uniformGrid on an empty series yields all-null ticks, never crashes") {
     for (m <- Seq("pad", "backfill", "nearest")) {
-      val out = AsofJoin.uniformGrid(spark, series(), "ts", Seq("value"),
-        0L, 1000000L, 3L, m, tickCol = "tick")
+      val out = ug(Nil, 0L, 1000000L, 3L, m)
         .select(col("src_ts"), col("value")).collect()
       assert(out.length === 3, m)
       assert(out.forall(r => r.isNullAt(0) && r.isNullAt(1)), m)
@@ -229,11 +235,79 @@ class AsofJoinSpec extends GraftSpec {
           .collect().map(r => (r.getLong(0),
             if (r.isNullAt(1)) -1L else r.getLong(1),
             if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(_._1).toSeq
-      val adaptive = snap(AsofJoin.uniformGrid(spark, series(s: _*), "ts",
-        Seq("value"), lo, step, n, m))
-      val explicit = snap(AsofJoin.uniformGrid(spark, series(s: _*), "ts",
-        Seq("value"), lo, step, n, m, bucketTicks = 3L))
+      val adaptive = snap(ug(s, lo, step, n, m))
+      val explicit = snap(ug(s, lo, step, n, m, bucketTicks = 3L))
       assert(adaptive === explicit, s"method=$m")
+    }
+  }
+
+  test("multi-series uniformGrid equals dedupeByTs + the generic kernels, per series") {
+    import spark.implicits._
+    val rng = new scala.util.Random(53)
+    // duplicate timestamps; (ts, tie) pairs unique so the winner is defined
+    def draw(n: Int) = (0 until n).map(_ =>
+      (100 * MS + rng.nextInt(390) * 10 * MS, rng.nextInt(40), rng.nextDouble()))
+      .groupBy(r => (r._1, r._2)).values.map(_.head).toSeq
+    // the tie is an int in one series and a string in the other; the
+    // string compares lexicographically ("s9" > "s10"), never as a number
+    val a = draw(160).toDF("us", "seq", "a")
+      .select(timestamp_micros(col("us")).as("ts"), col("seq"), col("a"))
+    val b = draw(120).map { case (us, k, v) => (us, s"s$k", v, v * 2 - 1) }
+      .toDF("us", "seq", "b1", "b2")
+      .select(timestamp_micros(col("us")).as("ts"), col("seq"), col("b1"), col("b2"))
+    assert(a.count() > a.select("ts").distinct().count())
+    assert(b.count() > b.select("ts").distinct().count())
+    val sensors = Seq(("x", a, Seq("a")), ("y", b, Seq("b1", "b2")))
+    // ticks before the first and after the last sample, on samples
+    // (k = 5, 15, ...) and midway between two (k = 0, 10, ...)
+    val (lo, step, n) = (5 * MS, 61 * MS, 75L)
+    val ticks = (0L until n).map(k => lo + k * step)
+
+    type Picks = Map[Long, Option[(Long, Seq[Double])]]
+    def snap(df: org.apache.spark.sql.DataFrame, src: String, cols: Seq[String]): Picks =
+      df.select(unix_micros(col("tick")) +: unix_micros(col(src)) +: cols.map(col): _*)
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None
+          else Some((r.getLong(1), cols.indices.map(i => r.getDouble(i + 2)))))).toMap
+    def oracle(kind: String, df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Picks = {
+      val fn = kind match {
+        case "pad"      => AsofJoin.pad _
+        case "backfill" => AsofJoin.backfill _
+        case "nearest"  => AsofJoin.nearest _
+      }
+      snap(fn(grid(ticks: _*), "tick", AsofJoin.dedupeByTs(df, "ts", "seq"), "ts", cols,
+        300 * MS, "src_ts"), "src_ts", cols)
+    }
+    def kernel(method: String, withSrc: Boolean) = AsofJoin.uniformGrid(spark,
+      sensors.map { case (p, df, cols) =>
+        AsofJoin.GridSeries(df, "ts", (if (withSrc) Seq("ts") else Nil) ++ cols, p) },
+      lo, step, n, method, tieCol = Some("seq"), bucketTicks = 7L)
+
+    for ((m, base) <- Seq("pad" -> "pad", "ffill" -> "pad", "backfill" -> "backfill",
+                          "bfill" -> "backfill", "nearest" -> "nearest")) {
+      val out = kernel(m, withSrc = true)
+      for ((p, df, cols) <- sensors)
+        assert(snap(out, s"${p}_ts", cols.map(c => s"${p}_$c")) === oracle(base, df, cols),
+          s"method=$m series=$p")
+    }
+
+    val out = kernel("interp", withSrc = false)
+    for ((p, df, cols) <- sensors) {
+      val (pad, back) = (oracle("pad", df, cols), oracle("backfill", df, cols))
+      val rows = out.select(unix_micros(col("tick")) +: cols.map(c => col(s"${p}_$c")): _*)
+        .collect()
+      assert(rows.length === n)
+      for (r <- rows) {
+        val tick = r.getLong(0)
+        (pad(tick), back(tick)) match {
+          case (Some((t0, v0)), Some((t1, v1))) =>
+            val expect = if (t1 == t0) v0 else v0.zip(v1).map { case (x0, x1) =>
+              x0 + (x1 - x0) * (tick - t0).toDouble / (t1 - t0).toDouble }
+            expect.zipWithIndex.foreach { case (v, i) =>
+              assert(r.getDouble(i + 1) === v +- 1e-9, s"interp series=$p tick=$tick") }
+          case _ =>
+            assert(cols.indices.forall(i => r.isNullAt(i + 1)), s"interp series=$p tick=$tick")
+        }
+      }
     }
   }
 
