@@ -12,68 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    // bench-scale shuffles are tiny: capping reducer count below the
-    // thread count cuts task-scheduling overhead without limiting scan
-    // parallelism (AQE would coalesce reducers anyway, but map-side
-    // splits follow this number too)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    // implicit (memory-sink) streaming checkpoints land under this
-    // base — tmpfs when available, so per-batch WAL fsyncs don't bill
-    // a fixed disk tax to every q_stream_* number; removed on exit
-    val streamCpBase =
-      graft.streaming.StreamingEtl.scratchDir("graft_bench_cp")
-    val builder = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.checkpointLocation",
-        streamCpBase.toString)
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; a ~700-query
-      // suite generates thousands of codegen units, so retrials and
-      // cross-query shared shapes (same scan/agg schema => identical
-      // generated source) were recompiling via Janino on every run.
-      // Sized to hold the whole suite — a long-lived cluster session
-      // would be exactly this warm.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — extra session confs for A/B
-    // experiments without recompiling (the driver never sets it)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.addShutdownHook {
-      try org.apache.commons.io.FileUtils
-        .deleteDirectory(streamCpBase.toFile)
-      catch { case _: Throwable => () }
-    }
-
-    // warm-up: JVM + codegen + parquet footer reads. The grid-kernel
-    // query warms the as-of codegen paths too — otherwise the first
-    // y5_* run absorbs whole-stage-codegen compile cost and reads as a
-    // plan regression in the per-query numbers. q_stream_tumbling
-    // warms the WHOLE micro-batch machinery (offset log, state store
-    // provider, streaming codegen) once, the way the batch queries
-    // get their one-time costs here — previously the first q_stream_*
-    // in alphabetical order absorbed it.
-    spark.range(0, 1000000, 1, 4).selectExpr("sum(id)").collect()
-    Seq("q1_pricing_summary", "y5_asof_nearest", "q_stream_tumbling")
-      .foreach(w =>
-      SparkEntry.queries.get(w).foreach { fn =>
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup $w failed: ${e.getMessage}")
-        }
-      })
+    val spark = Graft.session()
+    warmUp(spark, sfDir)
     // ONE-TIME index/layout/artifact construction (like CREATE INDEX
     // before a bench): bucketed table, hive-partitioned + range-
     // clustered layouts, min/max skip index, IVF quantizer, maintained
@@ -282,5 +222,26 @@ object Bench {
     while (line.length > 1900 && n > 0) { n -= 1; line = compactLine(n) }
     println(line)
     spark.stop()
+  }
+
+  /** Session warm-up: JVM + codegen + parquet footer reads, so query #1
+    * doesn't absorb startup. The grid-kernel query warms the as-of
+    * codegen paths too — otherwise the first y5_* run absorbs
+    * whole-stage-codegen compile cost and reads as a plan regression in
+    * the per-query numbers. q_stream_tumbling warms the WHOLE
+    * micro-batch machinery (offset log, state store provider, streaming
+    * codegen) once, the way the batch queries get their one-time costs
+    * here — otherwise the first q_stream_* in alphabetical order
+    * absorbs it. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(0, 1000000, 1, 4).selectExpr("sum(id)").collect()
+    Seq("q1_pricing_summary", "y5_asof_nearest", "q_stream_tumbling")
+      .foreach(w =>
+      SparkEntry.queries.get(w).foreach { fn =>
+        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] warmup $w failed: ${e.getMessage}")
+        }
+      })
   }
 }

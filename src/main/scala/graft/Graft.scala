@@ -1,33 +1,45 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Session + table helpers shared by the engine, Verify, Bench and tests.
+/** The one session factory: every main and the test suite build their
+  * session here, so a number from `Bench`, a dump from `Verify`, a
+  * `Probe` line and a test all run under the same settings; only the
+  * core count differs.
   *
-  * Design point: local[32] here, but every operator is written for a
-  * multi-executor cluster — partition-parallel generation, bucketed
-  * as-of windows (no global single-partition sort), broadcast of
-  * small dimensions, AQE left on.
+  * Design point: a single local JVM here, but every operator is written
+  * for a multi-executor cluster — partition-parallel generation,
+  * bucketed as-of windows (no global single-partition sort), broadcast
+  * of small dimensions, AQE left on.
   */
 object Graft {
 
-  /** Build a session with scale-appropriate defaults. */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
+  /** Cores of the local master: `SPARK_GRAFT_CPUS`, else the host's. */
+  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Build (or return the running) session on `local[cpus]`.
+    *
+    * Shuffle partitions are capped at 8: at the scales this runs, a
+    * reducer count below the thread count cuts task-scheduling
+    * overhead without limiting scan parallelism (AQE would coalesce
+    * reducers anyway, but map-side splits follow this number too).
+    * The generated-class cache defaults to 100 entries; a ~700-query
+    * suite generates thousands of codegen units, so shapes shared
+    * across queries and trials would recompile through Janino on every
+    * run. It is sized to hold the whole suite, as warm as a long-lived
+    * cluster session. */
+  def session(cpus: Int = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", math.min(cpus, 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Load one of the driver's parquet tables (TESTDATA.md); handles
-    * the events table's TIMESTAMP(NANOS) encoding. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    sources.Tables.load(spark, sfDir, name)
 }

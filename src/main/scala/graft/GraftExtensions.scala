@@ -1,9 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
 
 /** Session extension wiring the engine's custom Catalyst expressions
   * into the SQL surface:
@@ -13,10 +10,11 @@ import graft.functions._
   * SELECT cosine_sim(a.embedding, b.embedding) FROM ...
   * }}}
   *
-  * The same functions are registered lazily by the Column API wrappers
-  * (VectorFunctions / TextHashFunctions / ExactPercentile); this makes
-  * them first-class for pure-SQL users and notebooks without touching
-  * the internal registry by hand. */
+  * The functions are the table in `graft.functions.Registry`; the
+  * Column API wrappers register any name a session lacks through
+  * `Registry.ensure`. The extension makes them first-class for
+  * pure-SQL users and notebooks without touching the internal registry
+  * by hand. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -25,78 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft.plans.BandedRangeJoinRule
     ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)
 
-    def info(name: String, usage: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-        "", "", "", "", "", "", "scala_udf")
-
-    def intArg(e: Expression, default: Int): Int =
-      e.eval(null).asInstanceOf[Number].intValue()
-
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "dot product of two numeric arrays"),
-      (es: Seq[Expression]) => DotProduct(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine similarity of two numeric arrays"),
-      (es: Seq[Expression]) => CosineSimilarity(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_shingles60"),
-      info("graft_shingles60", "md5-60 hashes of distinct word n-gram shingles"),
-      (es: Seq[Expression]) =>
-        Shingles60(es.head, if (es.size > 1) intArg(es(1), 3) else 3)))
-    ext.injectFunction((FunctionIdentifier("graft_tokens60"),
-      info("graft_tokens60", "md5-60 hashes of distinct tokens"),
-      (es: Seq[Expression]) => TokensDistinct60(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "16-permutation MinHash signature"),
-      (es: Seq[Expression]) => MinHashSig(es.head,
-        graft.ext.Dedup.PermA.toArray, graft.ext.Dedup.PermB.toArray)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "SimHash fingerprint over hashed tokens"),
-      (es: Seq[Expression]) =>
-        SimHash64(es.head, if (es.size > 1) intArg(es(1), 32) else 32)))
-    ext.injectFunction((FunctionIdentifier("graft_rolling_hash"),
-      info("graft_rolling_hash", "polynomial rolling hash mod 1e9+7"),
-      (es: Seq[Expression]) => RollingHash(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_bow_md5"),
-      info("graft_bow_md5", "md5 of the sorted distinct token set"),
-      (es: Seq[Expression]) => BowMd5(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_token_stats"),
-      info("graft_token_stats", "one-pass token statistics struct"),
-      (es: Seq[Expression]) => TokenStats(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_lang_id"),
-      info("graft_lang_id", "marker-word language-ID"),
-      (es: Seq[Expression]) => LangId(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_percentile"),
-      info("graft_percentile", "exact linear-interpolation percentiles"),
-      (es: Seq[Expression]) => {
-        val ps = es(1).eval(null) match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData => a.toDoubleArray().toSeq
-          case d: java.lang.Number => Seq(d.doubleValue())
-          case other => throw new IllegalArgumentException(
-            s"graft_percentile: non-foldable percentage $other")
-        }
-        ExactPercentile(es.head, ps).toAggregateExpression()
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_strings"),
-      info("graft_shingle_strings", "distinct word n-gram shingle strings"),
-      (es: Seq[Expression]) =>
-        ShingleStrings(es.head, if (es.size > 1) intArg(es(1), 3) else 3)))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_token_count"),
-      info("graft_bpe_token_count", "BPE-ish token count without materializing tokens"),
-      (es: Seq[Expression]) => BpeTokenCount(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_char_entropy"),
-      info("graft_char_entropy", "character-level Shannon entropy (bits/char)"),
-      (es: Seq[Expression]) => CharEntropy(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_compression_ratio"),
-      info("graft_compression_ratio", "deflate compressed/raw byte ratio"),
-      (es: Seq[Expression]) => CompressionRatio(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_heavy_hitters"),
-      info("graft_heavy_hitters", "Misra-Gries heavy hitters with k counters"),
-      (es: Seq[Expression]) =>
-        MisraGries(es.head, intArg(es(1), 16)).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("graft_gram"),
-      info("graft_gram",
-        "exact integer Gram accumulator: struct(n, sums, upper-tri products)"),
-      (es: Seq[Expression]) =>
-        GramMatrix(es.head, intArg(es(1), 64)).toAggregateExpression()))
+    graft.functions.Registry.all.foreach(f =>
+      ext.injectFunction((f.id, f.info, f.builder)))
   }
 }

@@ -31,4 +31,24 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** `oracleSql` as one JSON object (name -> SQL), restricted to the
+    * names `only` keeps so a filtered dump stays self-consistent (the
+    * checker treats an oracle with no dump as a failed query). The
+    * escape covers backslash, quote and ALL control chars (< 0x20): a
+    * tab or CR in an oracle would otherwise make the checker's
+    * `json.load` fail and zero the whole correctness gate. */
+  def oracleJson(only: Option[Set[String]] = None): String = {
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,26 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // tmpfs-backed base for the memory-sink streams' checkpoints
-    // (see Bench: per-batch WAL fsyncs on disk are pure harness tax)
-    val streamCpBase =
-      graft.streaming.StreamingEtl.scratchDir("graft_verify_cp")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.checkpointLocation",
-        streamCpBase.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    sys.addShutdownHook {
-      try org.apache.commons.io.FileUtils
-        .deleteDirectory(streamCpBase.toFile)
-      catch { case _: Throwable => () }
-    }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -39,25 +19,7 @@ object Verify {
         if (sys.env.contains("SPARK_GRAFT_DEBUG")) e.printStackTrace()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // restrict to the filtered queries so a partial dump stays
-    // self-consistent (oracle keys == expected result dirs — the
-    // checker treats an oracle with no dump as a FAILED query)
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), SparkEntry.oracleJson(only))
     spark.stop()
   }
 }

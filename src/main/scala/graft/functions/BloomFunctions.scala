@@ -52,19 +52,14 @@ object BloomFunctions {
     id
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      es => {
-        val id = es(1).eval(null).asInstanceOf[Number].longValue()
-        BloomMightContainLong(es.head, handles.getOrElse(id,
-          throw new IllegalArgumentException(s"unknown bloom handle $id")))
-      }, "scala_udf")
+  private[functions] def handle(id: Long): Broadcast[BloomFilter] =
+    handles.getOrElse(id,
+      throw new IllegalArgumentException(s"unknown bloom handle $id"))
 
   /** Predicate: key may be in the handle's filter (never a false
     * negative). */
   def mightContain(key: Column, handle: Long): Column = {
-    register(SparkSession.active)
+    Registry.ensure(SparkSession.active)
     call_function("graft_bloom_might_contain", key, lit(handle))
   }
 }

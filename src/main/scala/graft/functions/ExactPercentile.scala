@@ -105,26 +105,9 @@ case class ExactPercentile(
 
 object ExactPercentile {
 
-  /** Idempotent registration; the percentage argument must be a
-    * foldable array/double literal (same restriction as the built-in
-    * `percentile`). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_percentile", { es =>
-      val ps = es(1).eval(null) match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          a.toDoubleArray().toSeq
-        case d: java.lang.Number => Seq(d.doubleValue())
-        case other => throw new IllegalArgumentException(
-          s"graft_percentile: non-foldable percentage $other")
-      }
-      ExactPercentile(es.head, ps).toAggregateExpression()
-    }, "scala_udf")
-  }
-
   /** Column API: exact percentiles of `e` at `ps`, as array<double>. */
   def percentiles(e: Column, ps: Seq[Double]): Column = {
-    register(SparkSession.active)
+    Registry.ensure(SparkSession.active)
     call_function("graft_percentile", e, array(ps.map(lit): _*))
   }
 }

@@ -119,18 +119,10 @@ case class GramMatrix(
 
 object GramAggregate {
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_gram", { es =>
-      val d = es(1).eval(null).asInstanceOf[Number].intValue()
-      GramMatrix(es.head, d).toAggregateExpression()
-    }, "scala_udf")
-  }
-
   /** Column API: exact Gram accumulator of a d-dim array<bigint>
     * column, as struct(n, s, p) with upper-triangle p. */
   def gram(e: Column, d: Int): Column = {
-    register(SparkSession.active)
+    Registry.ensure(SparkSession.active)
     call_function("graft_gram", e, lit(d))
   }
 }

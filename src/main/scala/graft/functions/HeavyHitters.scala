@@ -147,18 +147,10 @@ case class MisraGries(
 
 object HeavyHitters {
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_heavy_hitters", { es =>
-      val k = es(1).eval(null).asInstanceOf[Number].intValue()
-      MisraGries(es.head, k).toAggregateExpression()
-    }, "scala_udf")
-  }
-
   /** Column API: Misra-Gries top terms of `e` with k counters, as
     * array<struct<term, count_lb>> sorted by (count_lb desc, term). */
   def heavyHitters(e: Column, k: Int): Column = {
-    register(SparkSession.active)
+    Registry.ensure(SparkSession.active)
     call_function("graft_heavy_hitters", e, lit(k))
   }
 }

@@ -184,106 +184,52 @@ object LangId {
 
 object TextHashFunctions {
 
-  /** Idempotent registration (same public-API pattern as
-    * VectorFunctions: registry + call_function, no private Column
-    * constructors). Int literals in the SQL surface arrive as
-    * Literal expressions; constants are extracted eagerly. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def intArg(e: Expression): Int =
-      e.eval(null).asInstanceOf[Number].intValue()
-    // the optional prefix arg must be a foldable non-NULL string — a
-    // clear AnalysisException beats the NPE/ClassCastException that a
-    // bare eval+cast would throw on `graft_shingles_pos60(t, 3, col)`
-    def strArg(fn: String, e: Expression): String = {
-      if (!e.foldable) throw new IllegalArgumentException(
-        s"$fn: prefix argument must be a foldable string literal, got $e")
-      e.eval(null) match {
-        case null => ""
-        case u: UTF8String => u.toString
-        case other => other.toString
-      }
-    }
-    reg.createOrReplaceTempFunction("graft_shingles60",
-      es => Shingles60(es.head, if (es.size > 1) intArg(es(1)) else 3), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_tokens60",
-      es => TokensDistinct60(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_tokens_all60",
-      es => TokensAll60(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingles_pos60",
-      es => ShinglesPos60(es.head,
-        if (es.size > 1) intArg(es(1)) else 3,
-        if (es.size > 2) strArg("graft_shingles_pos60", es(2)) else ""),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingle_strings",
-      es => ShingleStrings(es.head, if (es.size > 1) intArg(es(1)) else 3), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      es => MinHashSig(es.head, graft.ext.Dedup.PermA.toArray,
-        graft.ext.Dedup.PermB.toArray), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      es => SimHash64(es.head, if (es.size > 1) intArg(es(1)) else 32), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_rolling_hash",
-      es => RollingHash(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bow_md5",
-      es => BowMd5(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_token_stats",
-      es => TokenStats(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_lang_id",
-      es => LangId(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bpe_token_count",
-      es => BpeTokenCount(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_char_entropy",
-      es => CharEntropy(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_compression_ratio",
-      es => CompressionRatio(es.head), "scala_udf")
-  }
-
   private def sess: SparkSession = SparkSession.active
 
   def shingles60(text: Column, n: Int): Column = {
-    register(sess); call_function("graft_shingles60", text, org.apache.spark.sql.functions.lit(n))
+    Registry.ensure(sess); call_function("graft_shingles60", text, org.apache.spark.sql.functions.lit(n))
   }
   def tokens60(text: Column): Column = {
-    register(sess); call_function("graft_tokens60", text)
+    Registry.ensure(sess); call_function("graft_tokens60", text)
   }
   def tokensAll60(text: Column): Column = {
-    register(sess); call_function("graft_tokens_all60", text)
+    Registry.ensure(sess); call_function("graft_tokens_all60", text)
   }
   def shinglesPos60(text: Column, n: Int, prefix: String = ""): Column = {
-    register(sess)
+    Registry.ensure(sess)
     call_function("graft_shingles_pos60", text,
       org.apache.spark.sql.functions.lit(n),
       org.apache.spark.sql.functions.lit(prefix))
   }
   def shingleStrings(text: Column, n: Int): Column = {
-    register(sess)
+    Registry.ensure(sess)
     call_function("graft_shingle_strings", text, org.apache.spark.sql.functions.lit(n))
   }
   def minhashSig(hashes: Column): Column = {
-    register(sess); call_function("graft_minhash_sig", hashes)
+    Registry.ensure(sess); call_function("graft_minhash_sig", hashes)
   }
   def simhash(hashes: Column, nBits: Int): Column = {
-    register(sess); call_function("graft_simhash", hashes, org.apache.spark.sql.functions.lit(nBits))
+    Registry.ensure(sess); call_function("graft_simhash", hashes, org.apache.spark.sql.functions.lit(nBits))
   }
   def rollingHash(text: Column): Column = {
-    register(sess); call_function("graft_rolling_hash", text)
+    Registry.ensure(sess); call_function("graft_rolling_hash", text)
   }
   def bowMd5(text: Column): Column = {
-    register(sess); call_function("graft_bow_md5", text)
+    Registry.ensure(sess); call_function("graft_bow_md5", text)
   }
   def tokenStats(text: Column): Column = {
-    register(sess); call_function("graft_token_stats", text)
+    Registry.ensure(sess); call_function("graft_token_stats", text)
   }
   def langId(text: Column): Column = {
-    register(sess); call_function("graft_lang_id", text)
+    Registry.ensure(sess); call_function("graft_lang_id", text)
   }
   def bpeTokenCount(text: Column): Column = {
-    register(sess); call_function("graft_bpe_token_count", text)
+    Registry.ensure(sess); call_function("graft_bpe_token_count", text)
   }
   def charEntropy(text: Column): Column = {
-    register(sess); call_function("graft_char_entropy", text)
+    Registry.ensure(sess); call_function("graft_char_entropy", text)
   }
   def compressionRatio(text: Column): Column = {
-    register(sess); call_function("graft_compression_ratio", text)
+    Registry.ensure(sess); call_function("graft_compression_ratio", text)
   }
 }

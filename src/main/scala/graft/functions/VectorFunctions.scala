@@ -254,37 +254,20 @@ case class LshSignatures(child: Expression, nTables: Int, nPlanes: Int, dim: Int
 
 object VectorFunctions {
 
-  /** Idempotent per-session registration: `SELECT cosine_sim(a, b)` and
-    * the Column wrappers below both resolve through the function
-    * registry (the public path — no Spark-private Column constructors). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", es => DotProduct(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSimilarity(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_signatures", { es =>
-      def intArg(i: Int, name: String): Int = es(i).eval(null) match {
-        case n: java.lang.Number => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"lsh_signatures: non-foldable $name $other")
-      }
-      LshSignatures(es.head, intArg(1, "nTables"), intArg(2, "nPlanes"), intArg(3, "dim"))
-    }, "scala_udf")
-  }
-
   /** Column-API entry points. Need a session to register against —
     * callers pass the DataFrame's own session. */
   def vec_dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("vec_dot", a, b)
+    Registry.ensure(spark); call_function("vec_dot", a, b)
   }
 
   def cosine_sim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("cosine_sim", a, b)
+    Registry.ensure(spark); call_function("cosine_sim", a, b)
   }
 
   /** array<long> of the vector's packed sign-signature per LSH table. */
   def lsh_signatures(spark: SparkSession, vec: Column,
                      nTables: Int, nPlanes: Int, dim: Int): Column = {
-    register(spark)
+    Registry.ensure(spark)
     call_function("lsh_signatures", vec,
       org.apache.spark.sql.functions.lit(nTables),
       org.apache.spark.sql.functions.lit(nPlanes),

@@ -20,24 +20,14 @@ final case class QueryDef(
     oracle: Option[String])
 
 object QueryDef {
-  /** CONCURRENCY CONTRACT (r17, per review): a few query bodies flip
-    * session-wide confs (spark.sql.adaptive.enabled,
-    * autoBroadcastJoinThreshold) around a bounded iteration and
-    * restore them in `finally`. That is safe because every harness
-    * that executes these queries — Bench, Verify, ScaleBench, the
-    * test suites — runs queries strictly ONE AT A TIME on the shared
-    * session. Any future parallel runner must either isolate such
-    * queries in `spark.newSession()` clones or serialize them. */
-
-  /** Optional intermediate-plan sink (r17): multi-action digest
-    * queries end in a LocalTableScan, so their final explain carries
-    * no pipeline — when a dump tool installs this sink, bodies hand
-    * their heaviest INTERMEDIATE frame here right before executing
-    * it, so plans/rNN can carry the real pipeline. None (a no-op) in
-    * Bench/Verify/production. */
-  @volatile var planProbe: Option[(String, DataFrame) => Unit] = None
-  def probePlan(tag: String, df: DataFrame): Unit =
-    planProbe.foreach(_(tag, df))
+  /** Concurrency contract: a few query bodies flip session-wide confs
+    * (spark.sql.adaptive.enabled, autoBroadcastJoinThreshold) around a
+    * bounded iteration and restore them in `finally`. That is safe
+    * because every harness that executes these queries — Bench,
+    * Verify, ScaleBench, Probe, the test suites — runs queries strictly
+    * ONE AT A TIME on the shared session. Any parallel runner must
+    * either isolate such queries in `spark.newSession()` clones or
+    * serialize them. */
 
   def tables(spark: SparkSession, sfDir: String, names: String*): Map[String, DataFrame] =
     names.map(n => n -> graft.sources.Tables.load(spark, sfDir, n)).toMap

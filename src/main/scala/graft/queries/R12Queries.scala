@@ -1395,7 +1395,6 @@ object R12Queries {
           // explode-agg partial-aggregates map-side and only the tiny
           // node digest crosses; the keep joins broadcast), so each
           // round pipelines into ~one stage over the cached edges.
-          QueryDef.probePlan(s"peel_k$k", e)
           val core = e.localCheckpoint()
           kept.foreach(_.unpersist())
           // profile stays LAZY: all three k's profiles union into ONE

@@ -1727,7 +1727,6 @@ object R13Queries {
         // self-join — materialize the 1-row pair aggregate once and
         // derive the rows locally (§1.2), 3× fewer pair-join passes.
         val one = pairs.crossJoin(span)
-        QueryDef.probePlan("pairs", one)
         val oneLocal = QueryDef.digest(s, one)
         val hs = Seq(("p60", 60.0), ("p300", 300.0), ("p3600", 3600.0))
         val rows = hs.map { case (pc, hsec) =>
@@ -1833,7 +1832,6 @@ object R13Queries {
         // what you throw away; same discipline as QueryDef.digest
         // everywhere else).
         val one = ws.crossJoin(tot)
-        QueryDef.probePlan("wsum", one)
         val oneLocal = QueryDef.digest(s, one)
         val rows = Seq(("s60", 60.0), ("s300", 300.0), ("s3600", 3600.0))
           .map { case (sc, hsec) =>

@@ -328,7 +328,8 @@ object StreamingEtl {
   // without memoization each trial re-pays 2-3 Spark jobs (max-ts
   // probe, sentinel write) plus file copies that have nothing to do
   // with the streaming operator being measured. Staged dirs live for
-  // the JVM and are torn down by one shutdown hook.
+  // the JVM and are torn down by one shutdown hook, together with each
+  // tag's last file-sink output (only a tag's NEXT run reclaims it).
   private val stageCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
   private val maxUsCache =
@@ -336,6 +337,7 @@ object StreamingEtl {
   locally {
     val _ = sys.addShutdownHook {
       stageCache.values().forEach(p => rmTree(p))
+      fileSinkLast.values().forEach(p => rmFileSinkRun(p))
     }
   }
 
@@ -514,6 +516,12 @@ object StreamingEtl {
       tag = "dedup")
   }
 
+  /** Delete one file-sink run: its output dir and `.ckpt` sibling. */
+  private def rmFileSinkRun(out: java.nio.file.Path): Unit = {
+    rmTree(out)
+    rmTree(out.resolveSibling(out.getFileName.toString + ".ckpt"))
+  }
+
   /** Run a streaming Dataset to a parquet FILE sink under AvailableNow
     * and return the committed result. For row-heavy outputs (dedup:
     * the whole deduped table; sessionize: ~one session per event) the
@@ -529,13 +537,11 @@ object StreamingEtl {
     * trial replays the full stream from scratch. The previous run's
     * dirs are reclaimed on the next entry per tag (the returned
     * DataFrame may be lazily read any time until then, which makes
-    * next-entry the earliest safe deletion point). */
+    * next-entry the earliest safe deletion point); each tag's last run
+    * is reclaimed by the staging shutdown hook. */
   private def fileSinkRun(spark: SparkSession, ds: Dataset[_],
       needsFlush: Boolean, rowsHint: Long, tag: String): DataFrame = {
-    Option(fileSinkLast.remove(tag)).foreach { prev =>
-      rmTree(prev)
-      rmTree(prev.resolveSibling(prev.getFileName.toString + ".ckpt"))
-    }
+    Option(fileSinkLast.remove(tag)).foreach(rmFileSinkRun)
     val out = scratchDir(s"graft_${tag}_out")
     fileSinkLast.put(tag, out)
     withStreamConf(spark, needsFlush = needsFlush, rowsHint = rowsHint) {

@@ -1,9 +1,9 @@
 package org.apache.spark
 
-/** Bench-only access to the private[spark] listener bus drain: the
-  * per-query executor-CPU attribution in graft.ScaleBench must read
-  * its counter AFTER every TaskEnd event of the just-finished query
-  * has been delivered — a fixed sleep undercounts short queries (tail
+/** Harness access to the private[spark] listener bus drain: the
+  * per-query attribution in graft.ScaleBench and graft.Probe must read
+  * its counters AFTER every event of the just-finished query has been
+  * delivered — a fixed sleep undercounts short queries (tail
   * events land in the next query's delta and inflate its ratio). */
 object GraftListenerDrain {
   def drain(sc: SparkContext, timeoutMs: Long = 10000L): Unit =

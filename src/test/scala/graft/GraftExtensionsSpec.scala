@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
+
 /** The SQL surface: a session built with
   * `spark.sql.extensions=graft.GraftExtensions` (the shared test
   * session sets it) resolves every custom function from plain SQL. */
@@ -64,5 +66,36 @@ class GraftExtensionsSpec extends GraftSpec {
         |FROM emb a JOIN emb b ON a.vec_id < b.vec_id
         |ORDER BY sim DESC LIMIT 1""".stripMargin).head()
     assert((rows.getLong(0), rows.getLong(1)) === ((1L, 2L)))
+  }
+
+  test("the functions the wrappers used to add resolve from pure SQL") {
+    val handle = graft.functions.BloomFunctions.buildBroadcast(
+      spark.range(0, 10).toDF("k"), "k", 10L, 0.01)
+    val r = spark.sql(
+      s"""SELECT
+         |  graft_tokens_all60('a b a') AS toks,
+         |  graft_shingles_pos60('a b c', 2, 'p') AS pos,
+         |  lsh_signatures(array(1.0d, -1.0d), 2, 3, 2) AS lsh,
+         |  graft_bloom_might_contain(3L, $handle) AS hit
+         |""".stripMargin).head()
+    assert(r.getSeq[Long](0).size === 3)
+    assert(r.getSeq[Long](1).size === 2)
+    assert(r.getSeq[Long](2).size === 2)
+    assert(r.getBoolean(3))
+  }
+
+  test("a Column wrapper registers its function again after it is dropped") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    assert(reg.dropFunction(FunctionIdentifier("graft_rolling_hash")))
+    val c = graft.functions.TextHashFunctions.rollingHash(lit("ab"))
+    assert(spark.range(1).select(c).head().getLong(0) === 3105L)
+    assert(spark.sql("SELECT graft_rolling_hash('ab')").head().getLong(0) === 3105L)
+  }
+
+  test("graft_shingles_pos60 rejects a non-foldable prefix") {
+    val e = intercept[Exception](spark.range(1)
+      .selectExpr("graft_shingles_pos60('a b c', 2, cast(id AS string))").head())
+    assert(e.getMessage.contains("foldable"))
   }
 }

@@ -7,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (sbt runs forked suites
   * sequentially, so one session is safe and saves ~5 s per suite). */
 object GraftSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Graft.session(cpus = 4)
 }
 
 abstract class GraftSpec extends AnyFunSuite with org.scalactic.Tolerance {
