@@ -4206,11 +4206,11 @@ object ExtQueries {
     // in SQL to match Spark's `lit(1.0) - lit(0.7)` IEEE result.
     QueryDef("emb_mmr_rerank",
       (s, d) => {
-        // r16: AQE OFF for the fixed-depth greedy unroll (restored in
-        // finally) — every table in the selection rounds is per-query-
-        // bounded (pool 10, pairwise 100 rows/query), so runtime
-        // re-planning buys nothing and its one-driver-job-per-exchange
-        // scheduling was the floor (33 jobs exclusive). mmrRerank now
+        // r16: AQE OFF for the fixed-depth greedy unroll — every table
+        // in the selection rounds is per-query-bounded (pool 10,
+        // pairwise 100 rows/query), so runtime re-planning buys
+        // nothing and its one-driver-job-per-exchange scheduling was
+        // the floor (33 jobs exclusive). mmrRerank now
         // also materializes + releases its two stage caches (eager —
         // see its scaladoc), which is why the toggle must wrap the
         // CALL, not just the returned frame.
@@ -4221,16 +4221,14 @@ object ExtQueries {
         // key after the rank-limit pushdown, so there is no skewed
         // data-sized shuffle for AQE to save; scoping the toggle would
         // require splitting the operator for no measurable risk.
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
           val emb = graft.sources.Tables.load(s, d, "embeddings")
           Similarity.mmrRerank(emb, emb.filter(col("vec_id") < 10),
               k = 3, poolK = 10, lambda = 0.7)
             .select(col("query_id"), col("mmr_rank"), col("neighbor_id"),
               round(col("score"), 6).as("score"))
             .orderBy(col("query_id"), col("mmr_rank"))
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        }
       },
       Some("""WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |q AS (SELECT vec_id, v FROM t WHERE vec_id < 10),
@@ -8022,9 +8020,7 @@ object ExtQueries {
           .localCheckpoint()
         // every data-sized stage is materialized above with AQE on;
         // the model assembly below rides class/vocab/test digests
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         val docLen = testtf.groupBy(col("doc_id").as("dl_id"))
           .agg(sum(col("tf")).as("nd"))
         val present = testtf.join(lik, "term")
@@ -8054,7 +8050,7 @@ object ExtQueries {
           .groupBy(col("lang").as("true_lang"), col("g_cl").as("pred_lang"))
           .agg(count(lit(1)).as("n"))
           .orderBy(col("true_lang"), col("pred_lang")))
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        }
       },
       Some("""WITH toks AS (SELECT doc_id, lang,
              |    unnest(string_split(lower(text),' ')) AS term

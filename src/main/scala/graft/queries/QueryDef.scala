@@ -20,14 +20,32 @@ final case class QueryDef(
     oracle: Option[String])
 
 object QueryDef {
-  /** Concurrency contract: a few query bodies flip session-wide confs
-    * (spark.sql.adaptive.enabled, autoBroadcastJoinThreshold) around a
-    * bounded iteration and restore them in `finally`. That is safe
-    * because every harness that executes these queries — Bench,
-    * Verify, ScaleBench, Probe, the test suites — runs queries strictly
-    * ONE AT A TIME on the shared session. Any parallel runner must
-    * either isolate such queries in `spark.newSession()` clones or
-    * serialize them. */
+  /** Run `body` with the session confs `kv` set, then put every key
+    * back, on a normal return and on a throw alike. A key the session
+    * had not set before is unset again rather than pinned to its
+    * default, which is why the previous values come from `getAll`:
+    * `getOption` reports a registered conf's default even when unset.
+    * Scopes nest: the inner one restores what the outer one set.
+    *
+    * Concurrency contract: the confs change on the caller's session in
+    * place, so they are visible to anything else running on it while
+    * `body` runs. That is safe because every harness that executes these
+    * queries — Bench, Verify, ScaleBench, Probe, the test suites — runs
+    * queries strictly ONE AT A TIME on the shared session; a parallel
+    * runner must serialize the queries that call this. A fresh
+    * `spark.newSession()` per scope is no substitute: `Tables.events`
+    * memoizes per session, and a frame executes under the conf of the
+    * session that built it. */
+  def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val conf = s.conf
+    val before = conf.getAll
+    try {
+      kv.foreach { case (k, v) => conf.set(k, v) }
+      body
+    } finally kv.foreach { case (k, _) =>
+      before.get(k).fold(conf.unset(k))(conf.set(k, _))
+    }
+  }
 
   def tables(spark: SparkSession, sfDir: String, names: String*): Map[String, DataFrame] =
     names.map(n => n -> graft.sources.Tables.load(spark, sfDir, n)).toMap

@@ -527,27 +527,23 @@ object R11Queries {
         // discipline, r15): 4 half-steps × AQE's one-job-per-exchange
         // scheduling measured 38 driver jobs; with static planning the
         // whole mutual-reinforcement chain executes as the 4 broadcast
-        // digests plus one final action. Every persist registers for
-        // release in the finally so a mid-iteration failure can't leak
-        // cached blocks. MEASUREMENT NOTE (r16 same-window A/B at
-        // sf0.1): the r15 form's published ~1.4-1.7 s was CACHE-
-        // FLATTERED — it never unpersisted the per-half-step score
-        // tables, so Bench trials 2-3 read trial 1's InMemoryRelations
-        // (and leaked them into the session). Honest fresh-compute
-        // medians: this static+broadcast form 2.1-2.5 s / 14 jobs vs
+        // digests plus one final action, and the digest releases every
+        // persist even when that action fails. MEASUREMENT NOTE (r16
+        // same-window A/B at sf0.1): the r15 form's published
+        // ~1.4-1.7 s was CACHE-FLATTERED — it never unpersisted the
+        // per-half-step score tables, so Bench trials 2-3 read trial
+        // 1's InMemoryRelations (and leaked them into the session).
+        // Honest fresh-compute medians: this static+broadcast form 2.1-2.5 s / 14 jobs vs
         // the AQE form WITH cleanup 4.0-4.3 s / 39 jobs — static wins
         // on both axes once every trial actually computes.
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        val partsWas = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        // the partition count AQE would have coalesced to: every
-        // post-edge table is score-digest sized, so 32-wide exchanges
-        // are near-empty tasks; 8 keeps the one data-sized shuffle
-        // (edge distinct) at 75k rows per task
-        s.conf.set("spark.sql.shuffle.partitions", "8")
+        // shuffle.partitions 8 is the count AQE would have coalesced
+        // to: every post-edge table is score-digest sized, so 32-wide
+        // exchanges are near-empty tasks; 8 keeps the one data-sized
+        // shuffle (edge distinct) at 75k rows per task
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false",
+            "spark.sql.shuffle.partitions" -> "8") {
         val live = scala.collection.mutable.ArrayBuffer.empty[
           org.apache.spark.sql.DataFrame]
-        try {
         val e = graft.sources.Tables.load(s, d, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
           .join(graft.sources.Tables.load(s, d, "lineitem")
@@ -589,18 +585,9 @@ object R11Queries {
         val auth = a.orderBy(col("a").desc, col("p")).limit(15)
           .select(lit("authority").as("role"), col("p").as("node"),
             col("a").as("score_e9"))
-        // materialize the 30-row result so the unpersist/AQE-restore
-        // in the finally cannot invalidate the caller's lazy plan
-        val rows = hub.unionAll(auth)
-          .orderBy(col("role"), col("score_e9").desc, col("node"))
-          .collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          rows.head.schema)
-        } finally {
-          s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          s.conf.set("spark.sql.shuffle.partitions", partsWas)
-          live.foreach(df =>
-            try df.unpersist() catch { case _: Throwable => () })
+        QueryDef.digest(s, hub.unionAll(auth)
+          .orderBy(col("role"), col("score_e9").desc, col("node")),
+          live.toSeq: _*)
         }
       },
       Some("""WITH e AS (SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS p
@@ -838,9 +825,9 @@ object R11Queries {
     // on the vocabulary-sized digest.
     QueryDef("text_textrank_keywords",
       (s, d) => {
-        // r16: AQE OFF for the fixed-3-round kernel (restored in
-        // finally) — the iterations run on the vocabulary-sized edge
-        // digest where runtime re-planning buys nothing, and AQE's
+        // r16: AQE OFF for the fixed-3-round kernel — the iterations
+        // run on the vocabulary-sized edge digest where runtime
+        // re-planning buys nothing, and AQE's
         // one-driver-job-per-exchange scheduling was the floor
         // (25 jobs / 1.65 s exclusive median -> see commit).
         // r17 (VERDICT item 7): the toggle is SCOPED — the data-sized
@@ -868,9 +855,7 @@ object R11Queries {
           .unionAll(prs.select(col("hb").as("src"), col("ha").as("dst")))
           .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
           .localCheckpoint()
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         val wt = eb.groupBy(col("src")).agg(sum(col("w")).as("wt"))
         var r = wt.select(col("src").as("node"), lit(1000000L).as("sc"))
         for (_ <- 1 to 3) {
@@ -888,7 +873,7 @@ object R11Queries {
           .orderBy(col("sc").desc, col("word")).limit(20)
           .select(col("word"), col("sc").as("score_e6"))
           .orderBy(col("score_e6").desc, col("word")))
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        }
       },
       Some("""WITH t AS (SELECT string_split(lower(text), ' ') AS tk
              |  FROM documents WHERE len(string_split(lower(text), ' ')) >= 2),

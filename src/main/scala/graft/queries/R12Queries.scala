@@ -1233,8 +1233,7 @@ object R12Queries {
         // it was on (frontier/reach are reachable-node-sized; at
         // 100 TB they outgrow a broadcast and this becomes the
         // co-partitioned join AQE would pick dynamically).
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         val e = s.read.parquet(SqlQueries.copurchaseEdgesOf(s, d))
         val eb = e.select(col("p1").as("src"), col("p2").as("dst"))
           .unionAll(e.select(col("p2").as("src"), col("p1").as("dst")))
@@ -1268,11 +1267,8 @@ object R12Queries {
           .select(col("seed"), col("n_reached"), col("h60"),
             round(col("h60").cast("double") / 60.0, 6).as("harmonic"))
           .orderBy(col("seed"))
-        val rows = res.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-        } finally {
-          s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          try eb.unpersist() catch { case _: Throwable => () }
+        QueryDef.digest(s, res)
+        } finally try eb.unpersist() catch { case _: Throwable => () }
         }
       }, {
       val hops = (1 to 6).map { h =>
@@ -1334,7 +1330,7 @@ object R12Queries {
         // data through every round). The 3-row profile is collected
         // so every per-round cache releases.
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        // AQE OFF for the peel (restored below): a fixed-round
+        // AQE OFF for the peel: a fixed-round
         // iterative kernel gains nothing from runtime re-planning —
         // both join sides are edge-sized (SMJ either way) and the
         // partition count is already right-sized — but AQE turns
@@ -1342,8 +1338,7 @@ object R12Queries {
         // rounds, a pure scheduling floor that the 10× sweep's
         // cpu_ratio 1.76 proved is overhead, not data work). One job
         // per eager action instead.
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         // every persist() registers here so a mid-peel failure can't
         // leak MEMORY_AND_DISK blocks into the long-lived bench
         // session — the finally releases whatever is still cached
@@ -1409,15 +1404,13 @@ object R12Queries {
                 .as("core_edges"))
           seed = core
         }
-        val rows = profs.result().reduce(_ unionAll _).collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          rows.head.schema)
+        QueryDef.digest(s, profs.result().reduce(_ unionAll _))
         } finally {
-          s.conf.set("spark.sql.adaptive.enabled", aqeWas)
           // idempotent: per-k `kept` frames are already unpersisted on
           // the success path; this releases e0 plus anything a
           // mid-peel failure left cached
           live.foreach(df => try df.unpersist() catch { case _: Throwable => () })
+        }
         }
       }, {
       def chain(k: Int) = (1 to 5).map { r =>
@@ -1641,7 +1634,7 @@ object R12Queries {
     // together at the origin.
     QueryDef("q_dbscan_grid",
       (s, d) => {
-        // r16: AQE OFF for the bounded loop (restored in finally). The
+        // r16: AQE OFF for the bounded loop. The
         // connected-components loop runs over the CORE-CELL graph,
         // whose size is bounded by the fixed quantization grid (≤
         // 200×200 cells) at ANY data scale — so static planning is
@@ -1668,9 +1661,7 @@ object R12Queries {
         // needed on top)
         val cells = pts.groupBy(col("cx"), col("cy"))
           .agg(count(lit(1)).as("npts")).localCheckpoint()
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         val cores = cells.filter(col("npts") >= 5)
           .withColumn("cid", (col("cx") + 100) * 1000 + col("cy") + 100)
           .persist()
@@ -1698,7 +1689,7 @@ object R12Queries {
             // labels: connectedComponents returns its final round
             // PERSISTED — r17 CacheAudit caught it surviving the query
             col("largest_cluster_points")), cells, cores, clus, labels)
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        }
       },
       Some("""WITH RECURSIVE pts AS (SELECT vec_id,
              |    CAST(round(embedding[1]::DOUBLE * 1000) AS BIGINT) AS z0,

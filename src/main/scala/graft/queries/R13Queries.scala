@@ -606,8 +606,8 @@ object R13Queries {
         // plan riding a ≤366-row calendar digest. The one data-sized
         // stage (events → daily counts) materializes here WITH AQE on
         // (runtime skew handling at scale); the segment search below
-        // runs static and the ≤3-row result is digested before AQE is
-        // restored in finally.
+        // runs static and the ≤3-row result is digested inside that
+        // scope.
         val daily = graft.sources.Tables.events(s, d)
           .groupBy(to_date(col("ts")).as("day"))
           .agg(count(lit(1)).as("y"))
@@ -660,9 +660,7 @@ object R13Queries {
           .select(col("lvl"), col("a"), col("b"),
             col("pt.t").as("cp"), col("gain"))
         val n = daily.agg(max(col("t")).as("n"))
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         val lvl1 = best(broadcast(n)
           .select(lit(1L).as("lvl"), lit(1L).as("a"), col("n").as("b")))
         val segs2 = lvl1.select(lit(2L).as("lvl"), col("a"),
@@ -685,7 +683,7 @@ object R13Queries {
           // sides until round 15 — the 3 rows matched by join-order
           // luck at sf0.01 and diverged at sf0.1.
           .orderBy(col("lvl"), col("a_day")))
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        }
       },
       Some("""WITH daily AS (SELECT day,
              |    row_number() OVER (ORDER BY day) AS t, y FROM (

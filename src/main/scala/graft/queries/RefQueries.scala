@@ -36,12 +36,10 @@ object RefQueries {
     * (sort, rounding) runs on a depth-0 leaf and the conf flip cannot
     * leak into the caller's execution. */
   private def flagshipFrame(s: SparkSession, d: String,
-                            method: String): DataFrame = {
-    val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try flagshipLazy(s, d, method).localCheckpoint()
-    finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-  }
+                            method: String): DataFrame =
+    QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
+      flagshipLazy(s, d, method).localCheckpoint()
+    }
 
   /** The flagship's LAZY synchronized frame (no conf flip, no
     * materialization) — the plan PlanLawsSpec's shuffle-budget law

@@ -7976,8 +7976,8 @@ object SqlQueries {
         // InMemoryRelation shares one cached RDD, so the ONE eager
         // action at the end computes every round's shuffle exactly
         // once; the old per-round count() barriers were 6 extra
-        // full-DAG actions), and every persist registers for release
-        // in the finally. Exclusive 5-trial medians at sf0.1/32c:
+        // full-DAG actions), and every persist is released by the
+        // digest. Exclusive 5-trial medians at sf0.1/32c:
         // 2.35 s / 24 jobs -> see commit (same answer, both SFs).
         // r17 AQE-scoping note (VERDICT item 7): unlike dbscan/
         // textrank there is NO separable data-sized pre-stage here —
@@ -7988,11 +7988,9 @@ object SqlQueries {
         // shuffles are the per-round degree digests (post partial-agg,
         // node-distinct keys) and keep joins on those digests — a hot
         // node collapses map-side before any exchange.
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        val live = scala.collection.mutable.ArrayBuffer.empty[
-          org.apache.spark.sql.DataFrame]
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
+          val live = scala.collection.mutable.ArrayBuffer.empty[
+            org.apache.spark.sql.DataFrame]
           var e = s.read.parquet(copurchaseEdgesOf(s, d))
             .select(col("p1"), col("p2")).persist(MEMORY_AND_DISK)
           live += e
@@ -8015,10 +8013,6 @@ object SqlQueries {
               (sum(col("deg")) / 2).cast("long").as("core_edges"),
               min(col("deg")).as("min_core_degree"))
           QueryDef.digest(s, res, live.toSeq: _*)
-        } finally {
-          s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          live.foreach(df =>
-            try df.unpersist() catch { case _: Throwable => () })
         }
       },
       Some("""WITH pp AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -10281,9 +10275,7 @@ object SqlQueries {
           .select(col("b").as("bucket"), col("x").as("x_sec"),
             col("y").as("value_milli"))
           .orderBy(col("bucket"))
-        val rows = res.collect()
-        pts.unpersist()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+        QueryDef.digest(s, res, pts)
       },
       Some("""WITH ev AS (SELECT event_id, floor(epoch(ts))::BIGINT AS xa,
              |    floor(value * 1000)::BIGINT AS y
@@ -10856,9 +10848,7 @@ object SqlQueries {
         // 1.46 -> 1.18 s); the label-count aggregates reduce through
         // the session shuffle conf as before, and a skewed hub label
         // collapses map-side in the partial aggregate.
-        val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
+        QueryDef.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
         val e = s.read.parquet(copurchaseEdgesOf(s, d))
         val eb = e.select(col("p1").as("src"), col("p2").as("dst"))
           .unionAll(e.select(col("p2").as("src"), col("p1").as("dst")))
@@ -10896,7 +10886,7 @@ object SqlQueries {
             .crossJoin(broadcast(mdf))
             .select(col("m").as("n_edges"), col("n_communities"),
               round(col("q0"), 6).as("q_modularity")))
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
+        }
       },
       Some("""WITH pp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
              |e AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2

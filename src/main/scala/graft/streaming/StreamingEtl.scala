@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.queries.QueryDef
 
 /** Structured Streaming face of the event ETL (BASELINE.json
   * north star: "Structured Streaming + DataFrame transformations").
@@ -192,10 +193,8 @@ object StreamingEtl {
     * — at this harness's data scale that fixed cost dominates the
     * actual state work, measured ~1 s per join query at 8 partitions
     * vs 4. Production sizes `spark.sql.shuffle.partitions` to the
-    * cluster; this knob only right-sizes the LOCAL harness (override
-    * via SPARK_GRAFT_STREAM_SHUFFLE). */
-  private val streamShufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4")
+    * cluster; this only right-sizes the LOCAL harness. */
+  private val StreamShufflePartitions = 4L
 
   /** Run one streaming scenario under the harness streaming conf:
     * right-sized state-store partitioning, and no-data micro-batches
@@ -206,17 +205,10 @@ object StreamingEtl {
     * streaming dedup, foreachBatch merges — skip the trailing
     * no-data batch, which is pure fixed cost for them (~0.8 s
     * measured). The conf is session-global, so the block SERIALIZES
-    * streaming runs (they are sequential in Bench/Verify anyway) and
-    * restores the previous values after. */
+    * streaming runs (they are sequential in Bench/Verify anyway). */
   private def withStreamConf[T](spark: SparkSession, needsFlush: Boolean,
       rowsHint: Long = 0L)(
       body: => T): T = synchronized {
-    val conf = spark.conf
-    val oldShuffle = conf.get("spark.sql.shuffle.partitions")
-    val oldNoData =
-      conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val oldCkpt =
-      conf.getOption("spark.sql.streaming.checkpointLocation")
     // state-store checkpoints on the fastest local medium (tmpfs when
     // available): every micro-batch pays per-partition delta-file
     // write+fsync on this path, and the default temp checkpoint lands
@@ -224,7 +216,6 @@ object StreamingEtl {
     // stateful stages. A cluster would point this at fast local/HDFS
     // storage the same way. Scratch is reclaimed after the run.
     val ckptBase = scratchDir("graft_ckpt")
-    conf.set("spark.sql.streaming.checkpointLocation", ckptBase.toString)
     // throughput-aware state partitioning: 4 partitions is right when
     // the per-store fixed load+commit cost dominates (the bench-scale
     // default), but the stateful operator's wall is (rows through it
@@ -237,25 +228,15 @@ object StreamingEtl {
     // tasks than cores adds store-open cost, no parallelism).
     // Production sizes this to the cluster; the hint only right-sizes
     // the LOCAL harness the same way a cluster operator would.
-    // The cap applies only to the hint-derived growth — an explicit
-    // SPARK_GRAFT_STREAM_SHUFFLE override above it must win (it is
-    // the operator saying "I know my cluster width").
-    val parts = math.max(streamShufflePartitions.toLong,
+    val parts = math.max(StreamShufflePartitions,
       math.min(spark.sparkContext.defaultParallelism.toLong,
         rowsHint / 25000L))
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
-    conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      needsFlush.toString)
-    try body
-    finally {
-      conf.set("spark.sql.shuffle.partitions", oldShuffle)
-      conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
-      oldCkpt match {
-        case Some(v) => conf.set("spark.sql.streaming.checkpointLocation", v)
-        case None => conf.unset("spark.sql.streaming.checkpointLocation")
-      }
-      rmTree(ckptBase)
-    }
+    try QueryDef.withConf(spark,
+        "spark.sql.streaming.checkpointLocation" -> ckptBase.toString,
+        "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          needsFlush.toString)(body)
+    finally rmTree(ckptBase)
   }
 
   /** Execute the tumbling aggregate as a REAL Structured Streaming run:
@@ -349,8 +330,7 @@ object StreamingEtl {
     * order is insertion order, and a stage is only read between a
     * scenario's start() and awaitTermination(), which the cache's
     * synchronized build + the withStreamConf lock serialize). */
-  private val StageBudgetBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_STAGE_BUDGET_MB", "4096").toLong << 20
+  private val StageBudgetBytes: Long = 4096L << 20
   private val stageOrder =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
@@ -1281,9 +1261,7 @@ object StreamingEtl {
       .filter(col("cterm").isNotNull && col("cnt") * (k + 1) > col("n"))
       .select(col("cterm").as("term"), col("cnt"))
       .orderBy(col("cnt").desc, col("term"))
-    val out = res.collect()
-    stats.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), res.schema)
+    QueryDef.digest(spark, res, stats)
   }
 
   /** Streaming distinct-user cardinality via a KMV sketch: each

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.QueryDef
 
 /** Physical-plan laws for the round-8 operators — the properties that
   * make them survive a 100× scale-up, asserted on the executed plan so
@@ -41,9 +42,7 @@ class PlanLawsSpec extends GraftSpec {
           n == "Range" || n.contains("ExistingRDD")
     }
     val offenders = Seq.newBuilder[String]
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    QueryDef.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         // streaming/stateful queries EXECUTE on construction; their
         // plans are graded by their own specs
@@ -59,7 +58,7 @@ class PlanLawsSpec extends GraftSpec {
           } catch { case _: Throwable => () } // plan failures graded by Verify
         }
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
     val bad = offenders.result()
     assert(bad.isEmpty,
       s"unpartitioned windows over unbounded input:\n${bad.mkString("\n")}")
@@ -125,15 +124,13 @@ class PlanLawsSpec extends GraftSpec {
     // the exploded-token exchange must be planned once and reused —
     // two Generate nodes in the final plan means the corpus is being
     // tokenized twice again
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    QueryDef.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = SparkEntry.queries("text_oov_rate")(spark, sfDir)
         .queryExecution.executedPlan.toString
       val generates = "Generate explode".r.findAllIn(plan).size
       assert(generates <= 1,
         s"expected one tokenize (ReusedExchange for the vocab branch), got $generates:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("text_winnowing: every full 4-shingle window yields a fingerprint") {
@@ -168,9 +165,7 @@ class PlanLawsSpec extends GraftSpec {
     // count or drops the broadcast carry fails here, not on a cluster.
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    QueryDef.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       // audit the LAZY frame: the graded QueryDefs now materialize the
       // frame via localCheckpoint inside a static-planning wrapper
       // (r16 job-count work), so their returned plan is a sort over a
@@ -211,7 +206,7 @@ class PlanLawsSpec extends GraftSpec {
           case _ => ()
         }
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("pipe_multi_epoch_order: epochs produce different heads, reproducibly") {

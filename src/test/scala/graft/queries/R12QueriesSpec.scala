@@ -613,9 +613,7 @@ class R12QueriesSpec extends GraftSpec {
 
   test("io_bucketed_join: the join reads buckets and never shuffles " +
     "on the join key") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    QueryDef.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = byName("io_bucketed_join")(spark, "/root/testdata/sf0.001")
       df.collect() // force execution so AQE finalizes the plan
       val plan = df.queryExecution.executedPlan.toString
@@ -624,7 +622,7 @@ class R12QueriesSpec extends GraftSpec {
         !plan.contains("hashpartitioning(l_orderkey"),
         s"join key shuffled:\n$plan")
       assert(df.count() === 5L)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** independent Viterbi reference with the query's integer tables */

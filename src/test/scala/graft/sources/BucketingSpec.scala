@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.GraftSpec
+import graft.queries.QueryDef
 import org.apache.spark.sql.functions._
 
 /** Bucketed-join law: two tables bucketed on the join key with the
@@ -10,9 +11,8 @@ class BucketingSpec extends GraftSpec {
 
   test("join of same-key bucketed tables elides both exchanges") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try QueryDef.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       (1L to 100L).map(k => (k, s"o$k")).toDF("o_orderkey", "o_tag")
         .write.mode("overwrite")
         .bucketBy(4, "o_orderkey").sortBy("o_orderkey")
@@ -37,7 +37,6 @@ class BucketingSpec extends GraftSpec {
           col("l_orderkey") === col("o_orderkey"))
       assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS graft_spec_orders_b")
       spark.sql("DROP TABLE IF EXISTS graft_spec_lineitem_b")
     }
