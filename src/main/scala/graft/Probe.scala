@@ -25,20 +25,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * sbt "runMain graft.Probe <sfDir> <all|name,name,...> [planDir]"
   * }}}
   *
-  * One line per query: cold and warm wall; Catalyst phase ms and Janino
-  * compiles for the cold run; jobs, the top stages (summed, max and
-  * median task ms) and executor CPU for the warm run; the most records
-  * through any `SinglePartition` exchange (an unpartitioned
-  * `Window.orderBy` compiles to one, so a count that grows with the
-  * input is a scale bug); `CartesianProduct` and
+  * One line per query, `[probe] <name> {"cold":…,"warm":…,"leak":…}`,
+  * with each run's `Report.json`: wall; Catalyst phase ms and Janino
+  * compiles (the cold run pays them); jobs, the top stages (summed, max
+  * and median task ms), executor CPU, shuffle bytes read and written
+  * and spill; the most records through any `SinglePartition` exchange
+  * (an unpartitioned `Window.orderBy` compiles to one, so a count that
+  * grows with the input is a scale bug); `CartesianProduct` and
   * `BroadcastNestedLoopJoin` nodes; streaming batches, state-commit ms
-  * and state rows; the caches the query left behind.
-  *
-  * Listeners do the measuring, after the model of Structured
-  * Streaming's per-trigger progress metrics, so query bodies carry no
-  * hooks: a `QueryExecutionListener` sees every executed plan, the
-  * intermediate actions of digest queries included, and with `planDir`
-  * set each warm-run plan is written to `<name>_<i>.txt`.
+  * and state rows; then the caches the query left behind. With
+  * `planDir` set each warm-run plan is written to `<name>_<i>.txt`.
   *
   * A query that leaves a persisted RDD or a CacheManager entry behind
   * would flatter the next bench trial of the same query (it would read
@@ -50,29 +46,47 @@ object Probe {
   final case class Stage(id: Int, name: String, tasks: Int, sumMs: Long,
       maxMs: Long, medMs: Long)
 
-  final case class Report(name: String, coldS: Double, warmS: Double,
+  /** One run's metrics. `leak` is filled in by a caller that reclaims
+    * caches after the run (`main`); the collector itself leaves caches
+    * alone, so `Bench` keeps its cross-query near-dup memo. */
+  final case class Report(name: String, wallS: Double,
       phasesMs: Map[String, Long], compiles: Long, compileMs: Long,
       jobs: Int, stages: Seq[Stage], cpuS: Double,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
       singlePartitionMax: Long, cartesian: Int, bnlj: Int,
       batches: Int, commitMs: Long, stateRows: Long,
-      plans: Seq[QueryExecution], leak: Option[String],
-      failure: Option[String]) {
-    def line: String = {
-      val phases = phasesMs.toSeq.sorted
-        .map { case (p, ms) => s"$p=${ms}ms" }.mkString(" ")
+      plans: Seq[QueryExecution], failure: Option[String],
+      leak: Option[String] = None) {
+
+    /** Stage count, summed task ms and the top stages: a wall far above
+      * sum(top)/cores with MANY small stages is a sequential-barrier
+      * chain, not a straggler — a different fix. */
+    def stagesJson: String = {
       val top = stages.sortBy(-_.sumMs).take(3).map(s =>
-        s"[${s.id} ${s.name} n=${s.tasks} sum=${s.sumMs} max=${s.maxMs} " +
-          s"med=${s.medMs}]").mkString(" ")
-      f"[probe] $name cold=$coldS%.3fs warm=$warmS%.3fs $phases " +
-        s"compiles=$compiles compile_ms=$compileMs jobs=$jobs " +
-        f"cpu=$cpuS%.2fs single_partition_max=$singlePartitionMax " +
-        s"cartesian=$cartesian bnlj=$bnlj batches=$batches " +
-        s"commit_ms=$commitMs state_rows=$stateRows plans=${plans.size} " +
-        s"leak=${leak.getOrElse("none")}" +
-        failure.fold("")(f => s" FAILED ${f.take(120)}") +
-        (if (top.isEmpty) "" else s" stages $top")
+        f"""{"stage":${s.id},"name":"${jsonSafe(s.name)}","tasks":${s.tasks},"sum_ms":${s.sumMs},"max_ms":${s.maxMs},"med_ms":${s.medMs},"skew":${s.maxMs.toDouble / math.max(s.medMs, 1L)}%.1f}""")
+        .mkString("[", ",", "]")
+      s"""{"n_stages":${stages.size},"sum_all_ms":${stages.map(_.sumMs).sum},"top":$top}"""
+    }
+
+    /** The run's layer split as one JSON object (`Bench`'s `layers`,
+      * `Probe.main`'s lines). */
+    def json: String = {
+      val phases = phasesMs.toSeq.sorted
+        .map { case (p, ms) => s""""$p":$ms""" }.mkString("{", ",", "}")
+      f"""{"wall_s":$wallS%.3f,"phases_ms":$phases,"compiles":$compiles,"compile_ms":$compileMs,""" +
+        f""""jobs":$jobs,"cpu_s":$cpuS%.3f,"shuffle_read_bytes":$shuffleReadBytes,""" +
+        s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,""" +
+        s""""single_partition_max":$singlePartitionMax,"cartesian":$cartesian,"bnlj":$bnlj,""" +
+        s""""batches":$batches,"commit_ms":$commitMs,"state_rows":$stateRows,"plans":${plans.size},""" +
+        s""""failure":${failure.fold("null")(f => "\"" + jsonSafe(f.take(200)) + "\"")},""" +
+        s""""stages":$stagesJson}"""
     }
   }
+
+  /** Keep hand-built JSON valid for any text: printable ASCII only, with
+    * the two JSON-structural chars dropped. */
+  private def jsonSafe(s: String): String =
+    s.filter(c => c >= ' ' && c <= '~' && c != '"' && c != '\\')
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -81,18 +95,23 @@ object Probe {
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
-      else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      else SparkEntry.names(args(1))
     Bench.warmUp(spark, sfDir)
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    val queries = SparkEntry.queries
     val probe = new Probe(spark)
     val reports = names.map { name =>
-      val r = probe.run(name, sfDir, SparkEntry.queries(name))
-      println(r.line)
-      planDir.foreach(d => r.plans.zipWithIndex.foreach { case (qe, i) =>
+      val cold = probe.run(name, sfDir, queries(name))
+      val coldLeak = probe.reclaimCaches()
+      val warm = probe.run(name, sfDir, queries(name))
+        .copy(leak = probe.reclaimCaches().orElse(coldLeak))
+      println(s"""[probe] $name {"cold":${cold.json},"warm":${warm.json},""" +
+        s""""leak":"${warm.leak.getOrElse("none")}"}""")
+      planDir.foreach(d => warm.plans.zipWithIndex.foreach { case (qe, i) =>
         Files.writeString(Paths.get(d, s"${name}_$i.txt"),
           qe.explainString(FormattedMode))
       })
-      r.copy(plans = Nil)
+      warm.copy(plans = Nil, failure = warm.failure.orElse(cold.failure))
     }
     probe.close()
     val leaks = reports.count(_.leak.nonEmpty)
@@ -111,8 +130,13 @@ object Probe {
   })
 }
 
-/** The listeners behind `Probe.main`, for one session; `close` detaches
-  * them. Queries must run one at a time. */
+/** The one measurement collector, for one session: `Probe.main`,
+  * `Bench` and `ScaleBench` all time queries through `run`. Listeners
+  * do the measuring, after the model of Structured Streaming's
+  * per-trigger progress metrics, so query bodies carry no hooks: a
+  * `QueryExecutionListener` sees every executed plan, the intermediate
+  * actions of digest queries included. `close` detaches the listeners.
+  * Queries must run one at a time. */
 final class Probe(spark: SparkSession) extends AutoCloseable {
   import Probe._
 
@@ -121,6 +145,9 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
   private val stageNames = mutable.Map.empty[Int, String]
   private var jobs = 0
   private var cpuNs = 0L
+  private var shuffleRead = 0L
+  private var shuffleWrite = 0L
+  private var spill = 0L
   private var batches = 0
   private var commitMs = 0L
   private var stateRows = 0L
@@ -135,7 +162,13 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
       Probe.this.synchronized { jobs += 1 }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       Probe.this.synchronized {
-        if (e.taskMetrics != null) cpuNs += e.taskMetrics.executorCpuTime
+        val m = e.taskMetrics
+        if (m != null) {
+          cpuNs += m.executorCpuTime
+          shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          spill += m.diskBytesSpilled
+        }
         if (e.taskInfo != null)
           taskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty) +=
             e.taskInfo.duration
@@ -171,28 +204,13 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
     drain()
     synchronized {
       plans.clear(); taskMs.clear(); stageNames.clear()
-      jobs = 0; cpuNs = 0L; batches = 0; commitMs = 0L; stateRows = 0L
+      jobs = 0; cpuNs = 0L; shuffleRead = 0L; shuffleWrite = 0L; spill = 0L
+      batches = 0; commitMs = 0L; stateRows = 0L
     }
   }
 
-  /** One timed noop-sink run of `fn`; the failure message if it threw. */
-  private def once(name: String, sfDir: String,
-      fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
-    // this query grades its (deliberately memoized) grouping
-    // computation — every run must recompute, not read the cache
-    if (name == "dedup_neardup_groups")
-      graft.queries.ExtQueries.invalidateNearDupGroups()
-    val t0 = System.nanoTime()
-    val failure =
-      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
-      catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
-    val wallS = (System.nanoTime() - t0) / 1e9
-    drain()
-    (wallS, failure)
-  }
-
   /** Caches the last run left behind, released; a description if any. */
-  private def reclaimCaches(): Option[String] = {
+  def reclaimCaches(): Option[String] = {
     // the ONE sanctioned cross-query cache: the memoized near-dup
     // grouping (offline-artifact semantics, documented at its
     // definition; Bench invalidates it per trial for the query that
@@ -215,20 +233,29 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
     }
   }
 
+  /** One timed run of `fn` through the noop sink, with the listener bus
+    * drained before and after so the counters hold exactly this run's
+    * events. A failure is reported, not thrown. */
   def run(name: String, sfDir: String,
       fn: (SparkSession, String) => DataFrame): Report = {
     reset()
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def compileMs = CodeGenerator.compileTime / 1000000L
     val (n0, ms0) = (compiles, compileMs)
-    val (coldS, coldFailure) = once(name, sfDir, fn)
+    // name the stages after the query: the RDD call site is captured
+    // from the submitting thread's local properties (AQE futures
+    // inherit them via withThreadLocalCaptured), so without this every
+    // stage reads `$anonfun$...` — telemetry that cannot name its own
+    // offender
+    spark.sparkContext.setCallSite(name)
+    val t0 = System.nanoTime()
+    val failure =
+      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
+      catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+      finally spark.sparkContext.clearCallSite()
+    val wallS = (System.nanoTime() - t0) / 1e9
     val (n1, ms1) = (compiles, compileMs)
-    val phasesMs = synchronized(plans.toSeq).flatMap(_.tracker.phases)
-      .groupMapReduce(_._1)(p => p._2.endTimeMs - p._2.startTimeMs)(_ + _)
-    val coldLeak = reclaimCaches()
-    reset()
-    val (warmS, warmFailure) = once(name, sfDir, fn)
-    val leak = reclaimCaches().orElse(coldLeak)
+    drain()
     synchronized {
       val executed = plans.toSeq
       val all = executed.flatMap(qe => nodes(qe.executedPlan))
@@ -236,17 +263,19 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
         case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
           e.metrics.get("shuffleRecordsWritten").fold(0L)(_.value)
       }.maxOption.getOrElse(0L)
-      Report(name, coldS, warmS, phasesMs, n1 - n0, ms1 - ms0, jobs,
-        taskMs.toSeq.map { case (id, ds) =>
+      Report(name, wallS,
+        executed.flatMap(_.tracker.phases)
+          .groupMapReduce(_._1)(p => p._2.endTimeMs - p._2.startTimeMs)(_ + _),
+        n1 - n0, ms1 - ms0, jobs,
+        taskMs.toSeq.sortBy(_._1).map { case (id, ds) =>
           val s = ds.sorted
           Stage(id, stageNames.getOrElse(id, "?"), s.size, s.sum, s.last,
             s(s.size / 2))
         },
-        cpuNs / 1e9, singlePartitionMax,
+        cpuNs / 1e9, shuffleRead, shuffleWrite, spill, singlePartitionMax,
         all.count(_.isInstanceOf[CartesianProductExec]),
         all.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
-        batches, commitMs, stateRows, executed, leak,
-        warmFailure.orElse(coldFailure))
+        batches, commitMs, stateRows, executed, failure)
     }
   }
 

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale rehearsal: runs the three heaviest pipeline queries at 1× and
-  * at a synthesized 10× of the same data, and reports the wall-time
+/** Scale rehearsal: runs the heavy pipeline queries of `Queries` at 1×
+  * and at a synthesized 10× of the same data, and reports the wall-time
   * ratio — direct evidence for the "would this hold at a bigger SF"
   * claims, beyond plan inspection. Near-linear (≈10×) scaling means no
   * quadratic candidate blow-up, no single-partition serialization, no
@@ -16,11 +16,16 @@ import org.apache.spark.sql.functions._
   * so no cross-replica near-duplicates are fabricated and the dedup
   * workload's pair structure scales ~linearly like a real corpus.
   *
-  * Output: one JSON line on stdout, and BENCH_r07_scale.json in cwd.
+  * {{{
+  * sbt "runMain graft.ScaleBench [name,name,...]"
+  * }}}
+  *
+  * Each query runs once per scale through the `Probe` collector.
+  * Output: one JSON line on stdout, and BENCH_scale.json in cwd.
   */
 object ScaleBench {
 
-  private val Queries = Seq("y_sync_flagship", "y_sync_flagship_interp",
+  val Queries: Seq[String] = Seq("y_sync_flagship", "y_sync_flagship_interp",
     "dedup_neardup_groups",
     "pipe_seq_pack", "sim_topk_lsh", "corpus_ngram_topk", "q_sessionize",
     // the sketch should scale FLAT in state (O(k) partials): at 10×
@@ -154,32 +159,25 @@ object ScaleBench {
     "q_stream_sessionize", "q_stream_join", "q_stream_dedup",
     "q_stream_recover", "q_stream_asof")
 
+  /** Replication factor of the synthesized scale-up. */
+  val Reps = 10
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
+    // optional first argument: sweep just the named queries (local
+    // iteration aid)
+    val swept = args.headOption.map(SparkEntry.names)
+      .fold(Queries)(only => Queries.filter(only.contains))
     val spark = Graft.session()
 
-    val scaled = ensureScaledDir(spark, sfDir, reps)
-
-    // SPARK_GRAFT_SCALE_ONLY=a,b,c: local iteration aid (the driver
-    // never sets it) — sweep just the named queries
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val swept = Queries.filter(q => only.forall(_.contains(q)))
+    val scaled = ensureScaledDir(spark, sfDir, Reps)
 
     // warm up every query SHAPE at the smallest SF (a different dir:
     // per-dir memoization stays cold for the timed scales, but
     // whole-stage codegen compiles once here instead of inflating the
     // first timed run)
-    spark.range(0, 1000000, 1, 4).selectExpr("sum(id)").collect()
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
-    swept.foreach { q =>
-      try SparkEntry.queries(q)(spark, warmDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[scale] warmup $q failed: ${e.getMessage}")
-      }
-    }
+    Bench.warmUp(spark, warmDir, swept)
 
     // one-time offline artifacts (quantizers, zone maps, RP-tree
     // thresholds, the minhash truth set) built OUTSIDE the timed
@@ -189,150 +187,34 @@ object ScaleBench {
     // 33× CPU at 10× when its threshold fit billed to the query; the
     // prewarmed query itself is ~0.6 s). The build cost still ships
     // per scale so artifact SCALING stays visible.
-    def buildArtifacts(dir: String): Double = {
-      val t0 = System.nanoTime()
-      // per-artifact try: the scaled dir holds only events/documents/
-      // embeddings, so the TPC-H-table artifacts (bucketed orders,
-      // lineitem MVs) fail there — that must not abort the builds the
-      // swept queries actually need (quantizers, RP thresholds, truth
-      // set), or their cost lands back on first query touch
-      Seq[(String, () => Unit)](
-        "bucketed-orders" -> (() => graft.sources.Bucketing.ensureOrderBucketed(spark, dir)),
-        "ext-artifacts" -> (() => graft.queries.ExtQueries.prewarmArtifacts(spark, dir)),
-        "sql-artifacts" -> (() => graft.queries.SqlQueries.prewarmArtifacts(spark, dir)),
-        // streaming scenarios stage their input (sentinel-tagged
-        // single-file copies) into a memoized scratch dir on first
-        // touch — a coalesce(1) write that is serial BY DESIGN. Warm
-        // each swept stream query once per dir so the timed run
-        // measures the streaming operator, not the one-off staging
-        // (each timed run still replays the full stream from a fresh
-        // checkpoint — only file staging and codegen are warm).
-        "stream-stages" -> (() => swept.filter(_.startsWith("q_stream_"))
-          .foreach { q =>
-            SparkEntry.queries(q)(spark, dir)
-              .write.mode("overwrite").format("noop").save()
-          })
-      ).foreach { case (label, build) =>
-        try build()
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] artifact '$label' at '$dir' failed: ${e.getMessage}")
-        }
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // Streaming scenarios stage their input (sentinel-tagged
+    // single-file copies) into a memoized scratch dir on first touch —
+    // a coalesce(1) write that is serial BY DESIGN. Warm each swept
+    // stream query once per dir so the timed run measures the
+    // streaming operator, not the one-off staging (each timed run
+    // still replays the full stream from a fresh checkpoint — only file
+    // staging and codegen are warm).
+    def buildArtifacts(dir: String): Double =
+      Bench.buildArtifacts(spark, dir, Seq("stream-stages" -> (() =>
+        swept.filter(_.startsWith("q_stream_")).foreach { q =>
+          SparkEntry.queries(q)(spark, dir)
+            .write.mode("overwrite").format("noop").save()
+        })))
     val artifact1x = buildArtifacts(sfDir)
     val artifact10x = buildArtifacts(scaled)
 
-    // Executor CPU accounting: wall-clock ratios conflate work growth
-    // with machine utilization — a sub-second 1× run UNDERFILLS 32
-    // cores, so a query whose work honestly grows 10× can land
-    // anywhere in wall ratio 1–10 depending only on scheduling slack.
-    // The superlinearity detector is the CPU-TIME ratio: total
-    // executor CPU ns at 10× over 1× ≈ 10 for linear work; >> 10
-    // means real state growth (quadratic candidates, digest blow-up).
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-stage task-duration telemetry: the wall-ratio bar can fail
-    // with LINEAR cpu_ratio when one stage stops spreading (too few
-    // partitions, or a straggler task owning a hot key) — the fix is
-    // different from an algorithmic blow-up, so the sweep must show
-    // tasks-per-stage and max-vs-median task time per query
-    val stageDur = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-    val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (e.taskMetrics != null)
-            cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-          if (e.taskInfo != null) {
-            stageDur.computeIfAbsent(e.stageId,
-                _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-              .add(e.taskInfo.duration)
-            ()
-          }
-        }
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stageName.put(e.stageInfo.stageId,
-            e.stageInfo.name.takeWhile(_ != '\n').take(60))
-          ()
-        }
-      })
-    // peak state-store rows across a streaming query's progress events
-    // (sum over state operators, max over batches) — the boundedness
-    // measurement for the q_stream_* sweep rows; 0 for batch queries
-    val peakStateRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val n = e.progress.stateOperators.map(_.numRowsTotal).sum
-          peakStateRows.updateAndGet(m => math.max(m, n))
-          ()
-        }
-      })
-    /** top-`k` stages by summed task time among stages first seen
-      * after `sinceIds`, rendered as compact JSON objects. */
-    def hotStages(sinceIds: Set[Int], k: Int = 3): String = {
-      import scala.jdk.CollectionConverters._
-      val fresh = stageDur.keySet().asScala.toSet -- sinceIds
-      val all = fresh.toSeq.map { sid =>
-        val ds = stageDur.get(sid).asScala.toSeq.sorted
-        (sid, ds.length, ds.sum, ds.last, ds(ds.length / 2))
-      }
-      val rows = all.sortBy(-_._3).take(k)
-      val top = rows.map { case (sid, n, sum, mx, med) =>
-        // keep the hand-built JSON valid for ANY stage name: printable
-        // ASCII only, with the two JSON-structural chars dropped
-        val nm = Option(stageName.get(sid)).getOrElse("?")
-          .filter(c => c >= ' ' && c <= '~' && c != '"' && c != '\\')
-        f"""{"stage":$sid,"name":"$nm","tasks":$n,"sum_ms":$sum,"max_ms":$mx,"med_ms":$med,"skew":${mx.toDouble / math.max(med, 1L)}%.1f}"""
-      }.mkString("[", ",", "]")
-      // stage-count + total-task-time context: a wall >> sum(top)/cores
-      // with MANY small stages is a sequential-barrier chain, not a
-      // straggler — a different fix
-      f"""{"n_stages":${all.size},"sum_all_ms":${all.map(_._3).sum},"top":$top}"""
-    }
-
-    // first-trial timing: dedup_neardup_groups memoizes its grouping
+    // one run per scale: dedup_neardup_groups memoizes its grouping
     // per (session, dir), so a min-of-N would time a cache read from
-    // trial 2 on — the first trial is the honest cost at each scale
-    def timeOnce(name: String, dir: String): (Double, Double, String, Long) = {
-      import scala.jdk.CollectionConverters._
-      // settle any in-flight events (warm-up, artifact builds) before
-      // snapshotting, so the delta is exactly this query's tasks
-      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
-      val stages0 = stageDur.keySet().asScala.toSet
-      peakStateRows.set(0L)
-      val t0 = System.nanoTime()
-      val c0 = cpuNs.get()
-      // name the stages after the swept query: the RDD call site is
-      // captured from the submitting thread's local properties (AQE
-      // futures inherit them via withThreadLocalCaptured), so without
-      // this every hot_stages entry reads `$anonfun$...` — telemetry
-      // that cannot name its own offender. Restored after the run so
-      // artifact builds/warmups stay distinguishable.
-      spark.sparkContext.setCallSite(name)
-      try SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      finally spark.sparkContext.clearCallSite()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // drain the listener bus COMPLETELY before reading the counter:
-      // a fixed sleep leaks short queries' tail TaskEnd events into
-      // the next query's delta, systematically inflating the cpu_ratio
-      // of every sub-second 1x run
-      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
-      (wall, (cpuNs.get() - c0) / 1e9, hotStages(stages0), peakStateRows.get())
-    }
-
-    val results = swept.map { q =>
-      val (t1, c1, _, st1) = timeOnce(q, sfDir)
-      val (t10, c10, hot10, st10) = timeOnce(q, scaled)
-      (q, t1, t10, c1, c10, hot10, st1, st10)
-    }
+    // trial 2 on — the first run is the honest cost at each scale
+    val probe = new Probe(spark)
+    val queries = SparkEntry.queries
+    val results = swept
+      .map(q => (q, probe.run(q, sfDir, queries(q)), probe.run(q, scaled, queries(q))))
+      .filter { case (q, r1, r10) =>
+        (r1.failure ++ r10.failure).foreach(f => System.err.println(s"[scale] $q failed: $f"))
+        r1.failure.isEmpty && r10.failure.isEmpty
+      }
+    probe.close()
 
     // ANN candidate telemetry (outside the timed region): mean
     // candidates examined per query vector at each scale. The
@@ -348,22 +230,35 @@ object ScaleBench {
     val (lshC10, rpC10) = cands(scaled)
 
     val evRows = spark.read.parquet(s"$sfDir/events.parquet").count()
-    val qs = results.map { case (q, t1, t10, c1, c10, hot10, st1, st10) =>
-      val state = if (st1 > 0 || st10 > 0)
-        f""","state_rows_1x":$st1,"state_rows_${reps}x":$st10""" else ""
-      f""""$q":{"t1x_sec":$t1%.3f,"t${reps}x_sec":$t10%.3f,"ratio":${t10 / t1}%.2f,""" +
-        f""""cpu1x_sec":$c1%.3f,"cpu${reps}x_sec":$c10%.3f,"cpu_ratio":${c10 / math.max(c1, 1e-9)}%.2f,""" +
-        f""""hot_stages_${reps}x":$hot10$state}"""
+    // Executor CPU accounting: wall-clock ratios conflate work growth
+    // with machine utilization — a sub-second 1× run UNDERFILLS the
+    // cores, so a query whose work honestly grows 10× can land
+    // anywhere in wall ratio 1–10 depending only on scheduling slack.
+    // The superlinearity detector is the CPU-TIME ratio: total
+    // executor CPU ns at 10× over 1× ≈ 10 for linear work; >> 10
+    // means real state growth (quadratic candidates, digest blow-up).
+    // The hot stages (tasks per stage, max vs median task time) show a
+    // wall-ratio failure with LINEAR cpu_ratio, where one stage stops
+    // spreading (too few partitions, or a straggler task owning a hot
+    // key) — a different fix from an algorithmic blow-up. Peak
+    // state-store rows ship for the q_stream_* rows (0 for batch
+    // queries) as the boundedness measurement.
+    val qs = results.map { case (q, r1, r10) =>
+      val (t1, t10, c1, c10) = (r1.wallS, r10.wallS, r1.cpuS, r10.cpuS)
+      val state = if (r1.stateRows > 0 || r10.stateRows > 0)
+        f""","state_rows_1x":${r1.stateRows},"state_rows_${Reps}x":${r10.stateRows}""" else ""
+      f""""$q":{"t1x_sec":$t1%.3f,"t${Reps}x_sec":$t10%.3f,"ratio":${t10 / t1}%.2f,""" +
+        f""""cpu1x_sec":$c1%.3f,"cpu${Reps}x_sec":$c10%.3f,"cpu_ratio":${c10 / math.max(c1, 1e-9)}%.2f,""" +
+        s""""hot_stages_${Reps}x":${r10.stagesJson}$state}"""
     }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"scale_${reps}x","sf_base":"$sfDir","events_rows_1x":$evRows,""" +
-        f""""artifact_build_1x_sec":$artifact1x%.3f,"artifact_build_${reps}x_sec":$artifact10x%.3f,""" +
-        f""""ann_candidates_per_query":{"lsh_1x":$lshC1%.1f,"lsh_${reps}x":$lshC10%.1f,""" +
-        f""""rptree_1x":$rpC1%.1f,"rptree_${reps}x":$rpC10%.1f},""" +
-        f""""note":"cpu_ratio is the superlinearity signal (executor CPU ns, ~$reps = linear work); wall ratio also reflects utilization slack at 1x; offline artifacts are prebuilt per scale and reported separately; ann_candidates_per_query measures the adaptive-parameter claim (flat = sublinear by construction)","queries":$qs}"""
+      f"""{"metric":"scale_${Reps}x","sf_base":"$sfDir","events_rows_1x":$evRows,""" +
+        f""""artifact_build_1x_sec":$artifact1x%.3f,"artifact_build_${Reps}x_sec":$artifact10x%.3f,""" +
+        f""""ann_candidates_per_query":{"lsh_1x":$lshC1%.1f,"lsh_${Reps}x":$lshC10%.1f,""" +
+        f""""rptree_1x":$rpC1%.1f,"rptree_${Reps}x":$rpC10%.1f},""" +
+        f""""note":"cpu_ratio is the superlinearity signal (executor CPU ns, ~$Reps = linear work); wall ratio also reflects utilization slack at 1x; offline artifacts are prebuilt per scale and reported separately; ann_candidates_per_query measures the adaptive-parameter claim (flat = sublinear by construction)","queries":$qs}"""
     println(json)
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_scale.json")),
+    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_scale.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }

@@ -27,6 +27,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
+  /** A main's name-list argument: comma-separated query names, each
+    * checked against the registry so a typo fails before any run. */
+  def names(list: String): Seq[String] = {
+    val ns = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = ns.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    ns
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
+    val only: Option[Set[String]] = args.lift(2).map(SparkEntry.names(_).toSet)
     val spark = Graft.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -16,7 +16,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        if (sys.env.contains("SPARK_GRAFT_DEBUG")) e.printStackTrace()
+        e.printStackTrace()
       }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), SparkEntry.oracleJson(only))

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
   * folds them; they push down to the scan). The report counts are one
   * aggregate pass of conditional sums — not N sequential jobs. The
   * quantiles are one exact-`percentile` aggregate over the smoothed
-  * columns; at 100 TB swap `percentile` → `approx_percentile` (flagged
-  * below) since exact percentile materializes per-group value buffers.
+  * columns; at 100 TB swap `percentile` → `approx_percentile`, since
+  * exact percentile materializes per-group value buffers.
   */
 object Clean {
 
@@ -61,59 +61,6 @@ object Clean {
   /** F3 — remove rows failing the range check on any numeric column. */
   def rangeFilter(df: DataFrame, cols: Seq[String]): DataFrame =
     if (cols.isEmpty) df else df.filter(!cols.map(outOfRange).reduce(_ || _))
-
-  /** Sequential per-column removal counts for the cleaning report:
-    * count(i) = rows that survive columns 0..i-1 but fail column i —
-    * exactly what the reference's loop reports (`app.py:115-120`).
-    * One aggregate pass. Returns (colName -> removedRows). */
-  def rangeFilterReport(df: DataFrame, cols: Seq[String]): Seq[(String, Long)] = {
-    if (cols.isEmpty) return Seq.empty
-    val aggs = cols.zipWithIndex.map { case (c, i) =>
-      val failsHere = outOfRange(c)
-      val survivedPrior =
-        if (i == 0) lit(true) else cols.take(i).map(p => !outOfRange(p)).reduce(_ && _)
-      sum(when(survivedPrior && failsHere, 1L).otherwise(0L)).as(c)
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }
-  }
-
-  /** F4 — quantile spike smoothing (`app.py:122-131`): values outside
-    * (q0.01, q0.99) become the column median. Exact linear-interpolation
-    * percentiles (pandas type-7 ≙ Spark `percentile`); the quantile
-    * aggregate is one pass over all columns, collected as scalars
-    * (3 doubles per column — same driver-side footprint as the
-    * reference's q01/q99/median scalars). */
-  def spikeSmooth(df: DataFrame, cols: Seq[String],
-                  lo: Double = 0.01, hi: Double = 0.99,
-                  approxAtScale: Boolean = false): (DataFrame, Seq[(String, Long)]) = {
-    val present = cols.filter(df.columns.contains)
-    if (present.isEmpty) return (df, Seq.empty)
-    val qAggs = present.flatMap { c =>
-      val base =
-        if (approxAtScale) // 100 TB switch: bounded-memory sketch
-          expr(s"approx_percentile($c, array($lo, 0.5, $hi), 10000)")
-        else graft.functions.ExactPercentile.percentiles(col(c), Seq(lo, 0.5, hi))
-      Seq(base.getItem(0).as(s"${c}_lo"), base.getItem(1).as(s"${c}_med"),
-          base.getItem(2).as(s"${c}_hi"))
-    }
-    val qRow = df.agg(qAggs.head, qAggs.tail: _*).head()
-    val bounds = present.zipWithIndex.map { case (c, i) =>
-      c -> ((qRow.getDouble(3 * i), qRow.getDouble(3 * i + 1), qRow.getDouble(3 * i + 2)))
-    }.toMap
-    // count replaced values per column (for the report) in one agg pass
-    val repAggs = present.map { c =>
-      val (l, _, h) = bounds(c)
-      sum(when(col(c) < l || col(c) > h, 1L).otherwise(0L)).as(c)
-    }
-    val repRow = df.agg(repAggs.head, repAggs.tail: _*).head()
-    val report = present.zipWithIndex.map { case (c, i) => c -> repRow.getLong(i) }
-    val smoothed = present.foldLeft(df) { (d, c) =>
-      val (l, m, h) = bounds(c)
-      d.withColumn(c, when(col(c) < l || col(c) > h, lit(m)).otherwise(col(c)))
-    }
-    (smoothed, report)
-  }
 
   /** F5 — sort by timestamp (`app.py:133-135`). Range-partitioned sort;
     * no global single partition. */

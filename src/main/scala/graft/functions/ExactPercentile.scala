@@ -34,8 +34,8 @@ final class DoubleBuf(var arr: Array[Double], var n: Int) {
   *
   * Scale note: like the built-in exact percentile, state is O(rows)
   * per group — that is inherent to EXACT quantiles. At 100 TB use
-  * `approx_percentile` (see Clean.spikeSmooth's approxAtScale flag);
-  * this aggregate exists because the oracle contract demands exact. */
+  * `approx_percentile`, a bounded-memory sketch; this aggregate exists
+  * because the oracle contract demands exact. */
 case class ExactPercentile(
     child: Expression,
     percentages: Seq[Double],

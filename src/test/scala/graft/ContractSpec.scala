@@ -65,17 +65,39 @@ class ContractSpec extends GraftSpec {
   test("bench headline subset names resolve to registered queries") {
     // Bench prints a fixed headline map sized for the capture window; a
     // renamed query would silently vanish from the cross-round series
-    val headline = Seq(
-      "q1_pricing_summary", "q5_region_revenue", "q3_top_orders",
-      "y_sync_flagship", "y5_asof_nearest", "y5_asof_pad", "y7_event_pivot",
-      "f4_spike_smooth", "a4_corr_matrix", "a2_quantiles",
-      "dedup_exact", "dedup_neardup_minhash", "dedup_neardup_groups",
-      "sim_topk_bruteforce", "sim_topk_lsh", "sim_topk_ivf",
-      "text_tfidf", "text_pii_scrub", "text_langid",
-      "pipe_seq_pack", "pipe_shard_shuffle", "pipe_corpus_mix",
-      "q_stream_tumbling", "q_stream_sessionize",
-      "io_minmax_skip", "io_compact_small_files", "io_csv_roundtrip")
-    val missing = headline.filterNot(SparkEntry.queries.contains)
+    val missing = Bench.Headline.filterNot(SparkEntry.queries.contains)
+    assert(Bench.Headline.size === 27)
     assert(missing.isEmpty, s"headline names not registered: ${missing.mkString(", ")}")
+  }
+
+  test("ScaleBench's swept names resolve to registered queries") {
+    // an unknown name would throw out of the timed sweep
+    val missing = ScaleBench.Queries.filterNot(SparkEntry.queries.contains)
+    assert(ScaleBench.Queries.size === 48)
+    assert(missing.isEmpty, s"scale names not registered: ${missing.mkString(", ")}")
+    // and a main's name argument rejects it before any run
+    assert(intercept[IllegalArgumentException](SparkEntry.names("q1_pricing_summary, nope"))
+      .getMessage.contains("nope"))
+  }
+
+  test("sys.env is read only for the cores, the bench data dir and the warm-up dir") {
+    // every other run knob is a constant or a main's argument; an env
+    // var nothing in the repo sets is an untested configuration
+    val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_WARM_DIR")
+    val read = """(?:sys\.env|System\.getenv)(?:\.(?:get|getOrElse|contains|apply))?\(\s*"([^"]*)"""".r
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val srcs = files(new java.io.File("src/main"))
+    assert(srcs.exists(_.getName == "Graft.scala"))
+    val names = srcs.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      // a read that is not a literal-name lookup cannot be checked
+      val all = "sys\\.env|System\\.getenv".r.findAllMatchIn(src).size
+      val lits = read.findAllMatchIn(src).map(m => s"${f.getName}: ${m.group(1)}").toSeq
+      if (lits.size == all) lits else lits :+ s"${f.getName}: <non-literal read>"
+    }
+    val bad = names.filterNot(n => allowed.exists(a => n.endsWith(s": $a")))
+    assert(bad.isEmpty, s"env knobs read outside the allowed set:\n${bad.mkString("\n")}")
   }
 }

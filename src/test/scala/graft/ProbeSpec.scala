@@ -4,15 +4,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The audits `graft.Probe` runs per query: cache leaks, every executed
-  * plan, and records through single-partition exchanges. */
+/** The `graft.Probe` collector and the audits `Probe.main` runs per
+  * query: cache leaks, every executed plan, records through
+  * single-partition exchanges, shuffle bytes and stage names; and
+  * `Bench`'s runner over it. */
 class ProbeSpec extends GraftSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** One collector run, then the leak audit `Probe.main` runs. */
   private def probe(name: String)(fn: (SparkSession, String) => DataFrame) = {
     val p = new Probe(spark)
-    try p.run(name, sfDir, fn) finally p.close()
+    try {
+      val r = p.run(name, sfDir, fn)
+      r.copy(leak = p.reclaimCaches())
+    } finally p.close()
   }
 
   test("a persisted frame left unreleased is reported as a leak and released") {
@@ -65,5 +71,43 @@ class ProbeSpec extends GraftSpec {
     plans.values.foreach(ps =>
       assert(ps.exists(_.exists(_.isInstanceOf[FileSourceScanExec]))))
     assert(plans("q_ripley_k_grid").exists(_.exists(_.isInstanceOf[WindowExec])))
+  }
+
+  test("a repartitioned frame reports shuffle bytes; a narrow range reports none") {
+    val wide = probe("wide")((s, _) => s.range(0, 10000, 1, 4).toDF("id").repartition(3))
+    assert(wide.failure.isEmpty)
+    assert(wide.shuffleWriteBytes > 0L)
+    assert(wide.shuffleReadBytes > 0L)
+    val narrow = probe("narrow")((s, _) => s.range(0, 10000, 1, 4).toDF("id"))
+    assert(narrow.shuffleWriteBytes === 0L)
+    assert(narrow.shuffleReadBytes === 0L)
+  }
+
+  test("the report's stages are named after the query") {
+    val r = probe("named_query")((s, _) =>
+      s.range(0, 1000, 1, 4).toDF("id").groupBy(col("id") % 7).count())
+    assert(r.stages.nonEmpty)
+    assert(r.stages.forall(_.name == "named_query"), r.stages.map(_.name).mkString(", "))
+  }
+
+  test("Bench's runner writes every query under queries, jobs and layers") {
+    val names = Seq("a1_minmax", "q1_pricing_summary")
+    val (full, line) = Bench.run(spark, sfDir, names, 0.0, "bench_full_test.json")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(full)
+    assert(json.get("n_queries").asInt === 2)
+    assert(json.get("failed").size === 0)
+    for (key <- Seq("queries", "jobs", "layers"); n <- names)
+      assert(json.get(key).has(n), s"$n missing under $key")
+    names.foreach { n =>
+      val layer = json.get("layers").get(n)
+      assert(layer.get("jobs").asInt === json.get("jobs").get(n).asInt)
+      assert(layer.get("jobs").asInt > 0)
+      assert(layer.get("stages").get("n_stages").asInt > 0)
+      assert(layer.get("plans").asInt > 0)
+      assert(layer.get("failure").isNull)
+    }
+    val compact = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(compact.get("full").asText === "bench_full_test.json")
+    assert(compact.get("queries").has("q1_pricing_summary"))
   }
 }

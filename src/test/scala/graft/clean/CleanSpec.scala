@@ -35,12 +35,13 @@ class CleanSpec extends GraftSpec {
     // row1 fails both a and b -> counted only under a (first failing col)
     // row2 fails only b; row3 clean
     val df = Seq((20000.0, 20000.0), (1.0, -950.0), (2.0, 3.0)).toDF("a", "b")
-    val report = Clean.rangeFilterReport(df, Seq("a", "b")).toMap
-    assert(report("a") === 1L)
-    assert(report("b") === 1L)
-    val reversed = Clean.rangeFilterReport(df, Seq("b", "a")).toMap
-    assert(reversed("b") === 2L) // both failing rows now hit b first
-    assert(reversed("a") === 0L)
+    val (_, report) = Clean.clean(df, "camera")
+    assert(report.contains("Removed 1 outliers from a"))
+    assert(report.contains("Removed 1 outliers from b"))
+    val (_, reversed) = Clean.clean(df.select("b", "a"), "camera")
+    // both failing rows now hit b first
+    assert(reversed.contains("Removed 2 outliers from b"))
+    assert(!reversed.exists(_.endsWith(" from a")))
   }
 
   test("spike smoothing replaces out-of-quantile values with the median and is non-idempotent") {
@@ -48,11 +49,14 @@ class CleanSpec extends GraftSpec {
     val rng = new scala.util.Random(5)
     val vals = Seq.fill(600)(rng.nextGaussian())
     val df = vals.toDF("accel_x")
-    val (s1, rep1) = Clean.spikeSmooth(df, Seq("accel_x"))
-    assert(rep1.head._2 > 0, "first pass must replace some spikes")
-    assert(rep1.head._2 <= 12, "at most ~1% on each side of 600 rows")
-    val (_, rep2) = Clean.spikeSmooth(s1, Seq("accel_x"))
-    assert(rep2.head._2 > 0, "smoothing is deliberately non-idempotent (app.py:125-130)")
+    val Smoothed = "Smoothed (\\d+) spikes in accel_x".r
+    def spikes(report: Seq[String]): Long =
+      report.collectFirst { case Smoothed(n) => n.toLong }.getOrElse(0L)
+    val (s1, rep1) = Clean.clean(df, "motion")
+    assert(spikes(rep1) > 0, "first pass must replace some spikes")
+    assert(spikes(rep1) <= 12, "at most ~1% on each side of 600 rows")
+    val (_, rep2) = Clean.clean(s1, "motion")
+    assert(spikes(rep2) > 0, "smoothing is deliberately non-idempotent (app.py:125-130)")
   }
 
   test("clean(camera) drops exactly the NaN rows; -999 rows are a subset") {
