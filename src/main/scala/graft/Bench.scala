@@ -64,18 +64,7 @@ object Bench {
     val spark = Graft.session()
     warmUp(spark, sfDir)
     val indexBuildSec = buildArtifacts(spark, sfDir)
-    // a SUBSET run must never clobber the full-suite artifact (subset
-    // re-trials have overwritten an uncommitted bench_full.json more
-    // than once). Subsets get their own file keyed by the subset's
-    // hash; only an unrestricted run owns bench_full.json.
-    val fullPath = only match {
-      case Some(names) =>
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(names.distinct.sorted.mkString(",").getBytes("UTF-8"))
-          .take(4).map("%02x".format(_)).mkString
-        s"bench_full_only_$key.json"
-      case None => "bench_full.json"
-    }
+    val fullPath = outPath("bench_full", only)
     val names = only.getOrElse(SparkEntry.queries.keys.toSeq).distinct.sorted
     val (fullJson, line) = run(spark, sfDir, names, indexBuildSec, fullPath)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), fullJson + "\n")
@@ -84,6 +73,20 @@ object Bench {
     }
     println(line)
     spark.stop()
+  }
+
+  /** The artifact a run writes: `<stem>.json` for an unrestricted run,
+    * `<stem>_only_<key>.json` for a name subset, keyed by a hash of its
+    * distinct sorted names. A SUBSET run must never clobber the
+    * full-suite artifact (subset re-trials have overwritten an
+    * uncommitted bench_full.json more than once). */
+  def outPath(stem: String, only: Option[Seq[String]]): String = only match {
+    case Some(names) =>
+      val key = java.security.MessageDigest.getInstance("MD5")
+        .digest(names.distinct.sorted.mkString(",").getBytes("UTF-8"))
+        .take(4).map("%02x".format(_)).mkString
+      s"${stem}_only_$key.json"
+    case None => s"$stem.json"
   }
 
   /** Times `names` through the collector with adaptive trials; returns

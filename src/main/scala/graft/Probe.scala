@@ -43,6 +43,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * exits 1. */
 object Probe {
 
+  /** Local property naming the query a job runs for. */
+  private val QueryKey = "graft.probe.query"
+
   final case class Stage(id: Int, name: String, tasks: Int, sumMs: Long,
       maxMs: Long, medMs: Long)
 
@@ -143,6 +146,8 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
   private val plans = mutable.ArrayBuffer.empty[QueryExecution]
   private val taskMs = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
   private val stageNames = mutable.Map.empty[Int, String]
+  /** Stage id → the query whose job ran it (see `run`). */
+  private val stageQuery = mutable.Map.empty[Int, String]
   private var jobs = 0
   private var cpuNs = 0L
   private var shuffleRead = 0L
@@ -159,7 +164,11 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
   }
   private val jobListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      Probe.this.synchronized { jobs += 1 }
+      Probe.this.synchronized {
+        jobs += 1
+        Option(e.properties).flatMap(p => Option(p.getProperty(QueryKey)))
+          .foreach(q => e.stageIds.foreach(stageQuery(_) = q))
+      }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       Probe.this.synchronized {
         val m = e.taskMetrics
@@ -175,8 +184,9 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
       }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       Probe.this.synchronized {
-        stageNames(e.stageInfo.stageId) =
-          e.stageInfo.name.takeWhile(_ != '\n').take(60)
+        val id = e.stageInfo.stageId
+        stageNames(id) = stageQuery.getOrElse(id,
+          e.stageInfo.name.takeWhile(_ != '\n').take(60))
       }
   }
   private val streamListener = new StreamingQueryListener {
@@ -203,7 +213,7 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
   private def reset(): Unit = {
     drain()
     synchronized {
-      plans.clear(); taskMs.clear(); stageNames.clear()
+      plans.clear(); taskMs.clear(); stageNames.clear(); stageQuery.clear()
       jobs = 0; cpuNs = 0L; shuffleRead = 0L; shuffleWrite = 0L; spill = 0L
       batches = 0; commitMs = 0L; stateRows = 0L
     }
@@ -242,17 +252,19 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def compileMs = CodeGenerator.compileTime / 1000000L
     val (n0, ms0) = (compiles, compileMs)
-    // name the stages after the query: the RDD call site is captured
-    // from the submitting thread's local properties (AQE futures
-    // inherit them via withThreadLocalCaptured), so without this every
-    // stage reads `$anonfun$...` — telemetry that cannot name its own
-    // offender
-    spark.sparkContext.setCallSite(name)
+    // name the stages after the query, or every stage reads
+    // `$anonfun$...` — telemetry that cannot name its own offender.
+    // Every job the run submits carries this local property: AQE
+    // futures capture it (withThreadLocalCaptured) and a stream's
+    // micro-batch thread inherits it from the thread that starts the
+    // stream. The RDD call site cannot serve: StreamExecution sets its
+    // own on the micro-batch thread (`start at <caller>:<line>`).
+    spark.sparkContext.setLocalProperty(QueryKey, name)
     val t0 = System.nanoTime()
     val failure =
       try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
       catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
-      finally spark.sparkContext.clearCallSite()
+      finally spark.sparkContext.setLocalProperty(QueryKey, null)
     val wallS = (System.nanoTime() - t0) / 1e9
     val (n1, ms1) = (compiles, compileMs)
     drain()

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Each query runs once per scale through the `Probe` collector.
-  * Output: one JSON line on stdout, and BENCH_scale.json in cwd.
+  * Output: one JSON line on stdout, and BENCH_scale.json in cwd — or,
+  * for a name subset, BENCH_scale_only_<key>.json (`Bench.outPath`).
   */
 object ScaleBench {
 
@@ -166,8 +167,8 @@ object ScaleBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional first argument: sweep just the named queries (local
     // iteration aid)
-    val swept = args.headOption.map(SparkEntry.names)
-      .fold(Queries)(only => Queries.filter(only.contains))
+    val only = args.headOption.map(SparkEntry.names)
+    val swept = only.fold(Queries)(names => Queries.filter(names.contains))
     val spark = Graft.session()
 
     val scaled = ensureScaledDir(spark, sfDir, Reps)
@@ -258,7 +259,7 @@ object ScaleBench {
         f""""rptree_1x":$rpC1%.1f,"rptree_${Reps}x":$rpC10%.1f},""" +
         f""""note":"cpu_ratio is the superlinearity signal (executor CPU ns, ~$Reps = linear work); wall ratio also reflects utilization slack at 1x; offline artifacts are prebuilt per scale and reported separately; ann_candidates_per_query measures the adaptive-parameter claim (flat = sublinear by construction)","queries":$qs}"""
     println(json)
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_scale.json"),
+    java.nio.file.Files.write(java.nio.file.Paths.get(Bench.outPath("BENCH_scale", only)),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{ExtQueries, QueryDef, R11Queries, R12Queries, R13Queries, R14Queries, R15Queries, R16Queries, RefQueries, SqlQueries}
+import graft.queries.{ExtQueries, QueryDef, R11Queries, R12Queries, R13Queries, R14Queries, R15Queries, R16Queries, RefQueries, SqlQueries, StreamQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -15,7 +15,7 @@ object SparkEntry {
   val all: Seq[QueryDef] =
     RefQueries.defs ++ SqlQueries.defs ++ ExtQueries.defs ++ R11Queries.defs ++
       R12Queries.defs ++ R13Queries.defs ++ R14Queries.defs ++ R15Queries.defs ++
-      R16Queries.defs
+      R16Queries.defs ++ StreamQueries.defs
 
   /** Flagship: the composed multi-sensor synchronization (SURVEY §7.3 —
     * overlap window + uniform grid + as-of nearest + event one-hot),

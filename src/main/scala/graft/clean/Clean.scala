@@ -107,7 +107,6 @@ object Clean {
     val aggs = baseAggs ++ rangeAggs ++ qAggs
     val row = df.agg(aggs.head, aggs.tail: _*).head()
 
-    val before = row.getLong(0)
     val nMiss = row.getLong(1)
     if (nMiss > 0) report :+= s"Removed $nMiss rows with missing values"
     numeric.zipWithIndex.foreach { case (c, i) =>

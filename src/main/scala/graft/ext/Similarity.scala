@@ -534,7 +534,6 @@ object Similarity extends Serializable {
               idCol: String = "vec_id", vecCol: String = "embedding",
               centroids: Option[Array[Array[Long]]] = None): DataFrame = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val centers = centroids.getOrElse(
       fitCentroids(corpus, nCentroids, iters, scale, idCol, vecCol))
     // cell assignment / probing carries ONLY (id, cell) — the wide

@@ -378,7 +378,7 @@ object ExtQueries {
     * bit-for-bit (exact integer arithmetic + one IEEE division), then
     * the per-(vector, table) sign-signature. The embedding dim is a
     * fixed 64 at every SF (same assumption as the centroids oracle). */
-  private def lshSigCte(nTables: Int, nPlanes: Int, sfx: String = ""): String =
+  private def lshSigCte(nTables: Int, nPlanes: Int, sfx: String): String =
     s"""t$sfx AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |pl$sfx AS (SELECT tt.i AS tbl, pp.i AS p,
        |         list_transform(range(0, 64), j ->
@@ -1418,23 +1418,6 @@ object ExtQueries {
         .select(col("e.term").as("term"), col("e.count_lb").as("count_lb"))
         .limit(15),
       None),
-
-    // The STREAMING twin, upgraded to the deterministic TWO-PASS
-    // shape (r12): the Misra-Gries sketch maintained across 4 real
-    // micro-batches generates the candidate set (whose contents are
-    // batch-split-dependent — the raw-sketch law stays pinned in
-    // StreamingEtlSpec), then one exact count pass over the ≤64
-    // broadcast candidates emits exactly the terms above N/65 with
-    // exact counts — batch-split-invariant, so the oracle is plain
-    // exact-heavy-hitter SQL and the gate hash-grades the stream.
-    QueryDef("q_stream_heavy_hitters",
-      (s, d) => graft.streaming.StreamingEtl.heavyHittersStreamVerified(s, d),
-      Some("""WITH t AS (SELECT unnest(string_split(lower(text), ' '))
-             |    AS term FROM documents),
-             |n AS (SELECT count(*)::BIGINT AS c FROM t)
-             |SELECT term, count(*)::BIGINT AS cnt FROM t, n
-             |GROUP BY term, n.c HAVING count(*) * 65 > n.c
-             |ORDER BY cnt DESC, term""".stripMargin)),
 
     // Deterministic hash sampling: md5-derived bucket per doc, keep
     // bucket < 20 (a reproducible 20% sample any engine re-derives —

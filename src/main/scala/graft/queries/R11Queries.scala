@@ -1050,36 +1050,6 @@ object R11Queries {
              |    AS transitivity
              |FROM tri, wed""".stripMargin)),
 
-    // Streaming SCD2 (Kimball type-2 dimension) — the continuously-
-    // maintained version history a warehouse derives from a CDC
-    // stream, here as a REAL `AvailableNow` run: per-user
-    // `flatMapGroupsWithState` opens a version row on every
-    // event_type change, closes it on the next change, and emits the
-    // still-open `is_current=1` rows via event-time-timeout eviction
-    // fired by a far-future sentinel micro-batch (Append mode would
-    // otherwise hold them forever). State is ONE row per active user.
-    // Graded against the identical batch SCD2 oracle (q_scd2_dim's
-    // lag-based change detection) — stream == batch on the same data.
-    QueryDef("q_stream_scd2",
-      (s, d) => graft.streaming.StreamingEtl.scd2ViaStream(s, d)
-        .toDF().orderBy(col("user_id"), col("version")),
-      Some("""WITH l AS (SELECT user_id, event_id, ts, event_type,
-             |    lag(event_type) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS prev
-             |  FROM events WHERE user_id < 100),
-             |c AS (SELECT user_id, event_id, ts, event_type FROM l
-             |  WHERE prev IS NULL OR event_type <> prev)
-             |SELECT user_id,
-             |  row_number() OVER (PARTITION BY user_id
-             |    ORDER BY ts, event_id) AS version,
-             |  event_type, ts AS valid_from,
-             |  lead(ts) OVER (PARTITION BY user_id
-             |    ORDER BY ts, event_id) AS valid_to,
-             |  CASE WHEN lead(ts) OVER (PARTITION BY user_id
-             |    ORDER BY ts, event_id) IS NULL THEN 1 ELSE 0 END
-             |    AS is_current
-             |FROM c ORDER BY user_id, version""".stripMargin)),
-
     // Wilcoxon signed-rank test (Wilcoxon 1945) on the paired daily
     // view-vs-click revenue difference — the nonparametric paired
     // t-test. Differences are exact milli integers, |d| ranks use
@@ -1694,8 +1664,6 @@ object R11Queries {
       val wSpark = W.map(_.mkString("array(", ", ", ")"))
         .mkString("array(", ", ", ")")
       val bSpark = B.mkString("array(", ", ", ")")
-      val wDuck = W.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-      val bDuck = B.mkString("[", ", ", "]")
       (s, d) => {
         val xq = transform(slice(col("embedding"), 1, 16),
           x => round(x.cast("double") * 1000, 0).cast("long"))
@@ -3648,7 +3616,6 @@ object R11Queries {
           .withColumn("t",
             (row_number().over(Window.orderBy(col("day"))) - 1)
               .cast("long"))
-        val n0 = broadcast(daily.agg(count(lit(1)).as("nd")))
         // per-window exact moments via 7-offset self-explosion
         val offs = broadcast(s.range(0, 7).toDF("k"))
         val win = daily.crossJoin(offs)

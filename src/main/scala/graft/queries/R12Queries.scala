@@ -1364,7 +1364,7 @@ object R12Queries {
             scala.collection.mutable.ArrayBuffer.empty[
               org.apache.spark.sql.DataFrame]
           var e = seed
-          for (r <- 1 to 5) {
+          for (_ <- 1 to 5) {
             val deg = e.select(explode(array(col("p1"), col("p2")))
               .as("node"))
               .groupBy(col("node")).agg(count(lit(1)).as("deg"))

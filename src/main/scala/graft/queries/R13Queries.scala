@@ -26,9 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object R13Queries {
 
-  /** DuckDB mirror of [[graft.ext.Dedup.strHash60]]. */
-  private def dkHash60(s: String) = s"('0x'||substring(md5($s),1,15))::BIGINT"
-
   /** Γ(z) as a Lanczos(g=7) SQL expression — the SAME string feeds
     * Spark's `expr` and the DuckDB oracle, so the transcendental is
     * bit-identical on both engines (neither engine's builtin is used:

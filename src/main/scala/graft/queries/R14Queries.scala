@@ -1405,28 +1405,6 @@ object R14Queries {
              |    ELSE margin_sum // n_anchors END)::BIGINT AS mean_margin
              |FROM g ORDER BY label""".stripMargin)),
 
-    // Streaming windowed top-k — the "trending now" board: hourly
-    // per-type counts from the REAL streaming aggregation (the
-    // q_stream_tumbling run), then a k-row-per-window rank on the
-    // already-window-sized result. The oracle ranks the batch
-    // aggregate, so a stream that miscounts any window loses the
-    // board ordering and hash-fails.
-    QueryDef("q_stream_windowed_topk",
-      (s, d) => graft.streaming.StreamingEtl.windowedTopKViaStream(s, d)
-        .orderBy(col("window_start"), col("rank")),
-      Some("""WITH c AS (SELECT
-             |    make_timestamp((epoch_us(ts) // 3600000000)
-             |      * 3600000000) AS window_start,
-             |    event_type, count(*)::BIGINT AS n
-             |  FROM events GROUP BY 1, 2),
-             |r AS (SELECT window_start, event_type, n,
-             |    row_number() OVER (PARTITION BY window_start
-             |      ORDER BY n DESC, event_type) AS rank
-             |  FROM c)
-             |SELECT window_start, rank, event_type, n FROM r
-             |WHERE rank <= 3
-             |ORDER BY window_start, rank""".stripMargin)),
-
     // Adstock regression (Broadbent 1979; the marketing-mix carryover
     // model): clicks decay geometrically (λ = 0.5, 20-day memory) into
     // an adstock series, then daily revenue is OLS-regressed on it.

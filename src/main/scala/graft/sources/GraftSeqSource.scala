@@ -3,8 +3,6 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, FileInputStream, FileOutputStream}
 import java.util.{Map => JMap}
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -196,7 +194,7 @@ private class GraftSeqScanBuilder(path: String)
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = false
   override def build(): Scan = countFromManifest match {
-    case Some(total) => new GraftSeqCountScan(path, total)
+    case Some(total) => new GraftSeqCountScan(total)
     case None => new GraftSeqScan(path, required, idEquality)
   }
 }
@@ -204,7 +202,7 @@ private class GraftSeqScanBuilder(path: String)
 /** Metadata-only scan for a pushed COUNT(*): one partition, one row,
   * no shard file opened. The class name appears in the physical plan's
   * BatchScan description, which is what `GraftSeqSpec` asserts. */
-private class GraftSeqCountScan(path: String, total: Long)
+private class GraftSeqCountScan(total: Long)
     extends Scan with Batch {
   override def readSchema(): StructType =
     StructType(Seq(StructField("count(*)", LongType, nullable = false)))

@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Y7 — event → grid mapping with tolerance + one-hot pivot

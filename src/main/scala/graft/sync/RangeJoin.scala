@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Banded range (epsilon) join — pair up rows whose timestamps are

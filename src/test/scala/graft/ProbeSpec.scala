@@ -90,6 +90,28 @@ class ProbeSpec extends GraftSpec {
     assert(r.stages.forall(_.name == "named_query"), r.stages.map(_.name).mkString(", "))
   }
 
+  test("a stream's stages are named after the query, not the stream's start call site") {
+    val r = probe("q_stream_sessionize")(SparkEntry.queries("q_stream_sessionize"))
+    assert(r.failure.isEmpty)
+    assert(r.batches > 0)
+    assert(r.stages.nonEmpty)
+    assert(r.stages.forall(_.name == "q_stream_sessionize"),
+      r.stages.map(_.name).distinct.mkString(", "))
+  }
+
+  test("a name-filtered Bench or ScaleBench run writes its own artifact, never the full-suite file") {
+    assert(Bench.outPath("bench_full", None) === "bench_full.json")
+    assert(Bench.outPath("BENCH_scale", None) === "BENCH_scale.json")
+    val subset = Bench.outPath("BENCH_scale", Some(Seq("q_stream_join", "q_sessionize")))
+    assert(subset.matches("BENCH_scale_only_[0-9a-f]{8}\\.json"), subset)
+    // keyed by the distinct sorted names: order and repeats do not matter
+    assert(Bench.outPath("BENCH_scale",
+      Some(Seq("q_sessionize", "q_stream_join", "q_sessionize"))) === subset)
+    assert(Bench.outPath("BENCH_scale", Some(Seq("q_sessionize"))) !== subset)
+    assert(Bench.outPath("bench_full", Some(Seq("q_sessionize", "q_stream_join"))) ===
+      subset.replace("BENCH_scale", "bench_full"))
+  }
+
   test("Bench's runner writes every query under queries, jobs and layers") {
     val names = Seq("a1_minmax", "q1_pricing_summary")
     val (full, line) = Bench.run(spark, sfDir, names, 0.0, "bench_full_test.json")

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class R14QueriesSpec extends GraftSpec {
 
-  private def byName(name: String) =
-    (R14Queries.defs ++ ExtQueries.defs).find(_.name == name).get.fn
+  private def byName(name: String) = graft.SparkEntry.queries(name)
 
   private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
     import spark.implicits._

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.GraftSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -348,9 +349,78 @@ class StreamingEtlSpec extends GraftSpec {
     assert(streamed === batch)
     // the Update-mode point: windows spanning micro-batch boundaries are
     // emitted MORE THAN ONCE along the way (superseded in the log)
-    val (logRows, finalRows) = StreamingEtl.updateModeLogStats(spark, dir)
+    val (log, _) = StreamingEtl.updateModeChangeLog(spark, dir)
+    val logRows = log.size
+    val finalRows = log.map(r => (r.get(0), r.getString(1))).distinct.size
     assert(finalRows > 0)
     assert(logRows > finalRows,
       s"change log ($logRows) must exceed the final table ($finalRows) — no intermediate updates means Update mode was not exercised")
+  }
+
+  test("outer joins, late data, dedup, session window, OHLC, cohort and KMV streams equal their batch twins") {
+    import spark.implicits._
+    val dir = "/root/testdata/sf0.001"
+    val ev = graft.sources.Tables.events(spark, dir)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+        unix_micros(col("ts")).as("c_us"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"),
+        col("user_id").as("p_user_id"), unix_micros(col("ts")).as("p_us"))
+    def interval(joinType: String) = clicks.join(purchases,
+        col("user_id") === col("p_user_id") &&
+          (col("p_us") - col("c_us")).between(0L, 600000000L), joinType)
+      .withColumn("delta_us", col("p_us") - col("c_us"))
+    val DayUs = 86400000000L
+    val cutoffUs = (Math.floorDiv(
+      ev.agg(min(unix_micros(col("ts")))).head().getLong(0), DayUs) + 2) * DayUs
+    val firstDay = ev.groupBy(col("user_id"))
+      .agg(min(to_date(col("ts"))).as("first_day"))
+    def kmv = {
+      val h40 = pmod(conv(substring(md5(concat(lit("kmv:"),
+        col("user_id").cast("string"))), 1, 15), 16, 10).cast("long"),
+        lit(1L << 40))
+      val hs = ev.select(h40.as("h")).distinct().orderBy(col("h")).limit(64)
+        .collect().map(_.getLong(0))
+      val n = ev.select(col("user_id")).distinct().count()
+      val est = if (hs.length < 64) hs.length.toLong else 63L * (1L << 40) / hs.max
+      Seq((hs.length.toLong, est, n, (est - n) * 1000000L / n))
+        .toDF("sketch_n", "est_users", "n_exact", "err_ppm")
+    }
+    // (scenario, stream run, batch twin): the registered batch query
+    // where one exists, else the batch spelling of the same operator
+    val cases: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+      ("leftOuterJoin", () => StreamingEtl.leftOuterJoinViaStream(spark, dir),
+        () => interval("left_outer")),
+      ("fullOuterJoin", () => StreamingEtl.fullOuterJoinViaStream(spark, dir),
+        () => interval("full_outer")
+          .withColumn("user_id", coalesce(col("user_id"), col("p_user_id")))),
+      ("lateData", () => StreamingEtl.lateDataViaStream(spark, dir),
+        () => StreamingEtl.tumblingCounts(
+          ev.filter(unix_micros(col("ts")) >= cutoffUs))),
+      ("dedup", () => StreamingEtl.dedupViaStream(spark, dir), () => ev),
+      ("sessionWindow", () => StreamingEtl.sessionWindowViaStream(spark, dir),
+        () => ev.groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("user_id"), col("session_window.start").as("session_start"),
+            col("session_window.end").as("session_end"), col("n_events"))),
+      ("ohlc", () => StreamingEtl.ohlcViaStream(spark, dir)
+          .orderBy(col("n_ticks").desc, col("event_type"), col("bar")).limit(200),
+        () => graft.SparkEntry.queries("q_ohlc_bars")(spark, dir)),
+      ("enrichedCohort", () => StreamingEtl.enrichedCohortViaStream(spark, dir),
+        () => ev.join(firstDay, "user_id")
+          .groupBy(col("first_day").cast("string").as("cohort_day"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))),
+      ("kmvDistinct", () => StreamingEtl.kmvDistinctViaStream(spark, dir), () => kmv))
+    for ((name, stream, batch) <- cases) {
+      val streamed = stream()
+      def rows(df: DataFrame) = df.select(streamed.columns.map(col): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val got = rows(streamed)
+      assert(got.nonEmpty, s"$name: the stream emitted no rows")
+      assert(got === rows(batch()), name)
+    }
   }
 }
