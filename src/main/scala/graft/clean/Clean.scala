@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
   *
   * Scale notes: the filters are single conjunctive predicates (Catalyst
   * folds them; they push down to the scan). The report counts are one
-  * aggregate pass of conditional sums — not N sequential jobs. The
+  * aggregate pass of conditional counts — not N sequential jobs. The
   * quantiles are one exact-`percentile` aggregate over the smoothed
   * columns; at 100 TB swap `percentile` → `approx_percentile`, since
   * exact percentile materializes per-group value buffers.
@@ -78,7 +78,24 @@ object Clean {
     * take `when(cleanCond, col)` inputs, so "quantiles of the cleaned
     * data" needs no separate job on the cleaned subset. A second tiny
     * aggregate counts replaced values (it needs the quantile bounds).
-    * Total: 1 job for camera/log, 2 for motion — vs 5 before. */
+    * Under AQE each scalar aggregate runs as 2 jobs (the partial stage,
+    * then the final one): 2 report jobs for camera and log, 4 for
+    * motion. The counts are `count(when(…))`, so an empty input reports
+    * 0 rather than reading a NULL sum.
+    *
+    * Materialization: the cleaned, F5-sorted table is returned behind a
+    * lazy `localCheckpoint(eager = false)`, the `Dedup.verifiedCandidates`
+    * pattern. Every consumer of one pass (the overlap window, the event
+    * pivot's type discovery, the sync and its export) then reads these
+    * blocks instead of regenerating, re-filtering, re-smoothing and
+    * re-sorting the input. The checkpoint plans the sort here, so the
+    * range sort's sampling and shuffle stages run inside `clean`; the
+    * final sorted partitions are computed on first read. Blocks are
+    * stored MEMORY_AND_DISK and are GC-owned: no CacheManager entry is
+    * created, and they are reclaimed once the frame is unreferenced.
+    * The lineage is cut at the checkpoint, so the returned plan is a
+    * leaf that still carries the sort's range partitioning and
+    * ordering, and no later plan re-sorts it. */
   def clean(df: DataFrame, sensorType: String): (DataFrame, Seq[String]) = {
     var report = Vector.empty[String]
     val numeric = numericCols(df)
@@ -92,20 +109,29 @@ object Clean {
     val cleanCond = !miss && survivesRange
 
     // ---- pass 1: every count + the smoothing quantiles ----
-    val baseAggs = Seq(
-      count(lit(1)).as("__n"),
-      sum(when(miss, 1L).otherwise(0L)).as("__miss"))
-    val rangeAggs = numeric.zipWithIndex.map { case (c, i) =>
+    // The predicates are projected once per row, as flags, under the
+    // aggregate. Motion's percentile aggregate is imperative: it runs
+    // outside whole-stage codegen, evaluates its inputs row by row and
+    // generates its update projection in every task, so it must read
+    // flags, not the whole predicate. `__clean` feeds each percentile,
+    // so the optimizer does not inline the projection back.
+    val rangeHits = numeric.zipWithIndex.map { case (c, i) =>
       val survivedPrior =
         if (i == 0) lit(true) else numeric.take(i).map(p => !outOfRange(p)).reduce(_ && _)
-      sum(when(!miss && survivedPrior && outOfRange(c), 1L).otherwise(0L)).as(s"__r_$c")
+      (!miss && survivedPrior && outOfRange(c)).as(s"__r_$i")
     }
+    val flagged = df.select(
+      Seq(miss.as("__miss"), cleanCond.as("__clean")) ++ rangeHits ++ smoothCols.map(col): _*)
+    val baseAggs = Seq(
+      count(lit(1)).as("__n"),
+      count(when(col("__miss"), 1)).as("__miss"))
+    val rangeAggs = numeric.indices.map(i => count(when(col(s"__r_$i"), 1)).as(s"__r_$i"))
     val qAggs = smoothCols.map { c =>
       graft.functions.ExactPercentile.percentiles(
-        when(cleanCond, col(c)), Seq(0.01, 0.5, 0.99)).as(s"__q_$c")
+        when(col("__clean"), col(c)), Seq(0.01, 0.5, 0.99)).as(s"__q_$c")
     }
     val aggs = baseAggs ++ rangeAggs ++ qAggs
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val row = flagged.agg(aggs.head, aggs.tail: _*).head()
 
     val nMiss = row.getLong(1)
     if (nMiss > 0) report :+= s"Removed $nMiss rows with missing values"
@@ -125,7 +151,7 @@ object Clean {
     if (smoothable.nonEmpty) {
       val repAggs = smoothable.map { c =>
         val (l, _, h) = bounds(c)
-        sum(when(cleanCond && (col(c) < l || col(c) > h), 1L).otherwise(0L)).as(c)
+        count(when(cleanCond && (col(c) < l || col(c) > h), 1)).as(c)
       }
       val repRow = df.agg(repAggs.head, repAggs.tail: _*).head()
       smoothable.zipWithIndex.foreach { case (c, i) =>
@@ -134,13 +160,13 @@ object Clean {
       }
     }
 
-    // ---- the (lazy) transform itself ----
+    // ---- the transform, materialized once (see above) ----
     val ranged = rangeFilter(dropMissing(df), numeric)
     val smoothed = smoothable.foldLeft(ranged) { (d, c) =>
       val (l, m, h) = bounds(c)
       d.withColumn(c, when(col(c) < l || col(c) > h, lit(m)).otherwise(col(c)))
     }
-    val sorted = sortByTimestamp(smoothed)
+    val sorted = sortByTimestamp(smoothed).localCheckpoint(eager = false)
     if (df.columns.contains("timestamp")) report :+= "Sorted by timestamp"
     (sorted, report)
   }

@@ -228,7 +228,12 @@ object StreamingEtl {
       }).start().awaitTermination()
     }
     sink match {
-      case Memory => spark.table(view)
+      case Memory =>
+        // the resolved frame keeps the sink's MemoryPlan: drop the view,
+        // or every run's rows stay reachable from the session catalog
+        val rows = spark.table(view)
+        spark.catalog.dropTempView(view)
+        rows
       case Parquet(out) => spark.read.parquet(out.toString)
       case EachBatch(_) => spark.emptyDataFrame
     }

@@ -35,6 +35,25 @@ class ProbeSpec extends GraftSpec {
     assert(probe("clean")((s, _) => s.range(0, 100).toDF("id")).leak.isEmpty)
   }
 
+  test("a cleaned sync pass exported to parquet leaves no cache behind: Clean's checkpoints are GC-owned") {
+    import graft.clean.Clean
+    import graft.sources.SampleData
+    import graft.sync.Synchronize
+    val out = java.nio.file.Files.createTempDirectory("graft-probe-export").resolve("sync")
+    try {
+      val r = probe("clean_sync_export") { (s, _) =>
+        val cam = Clean.clean(SampleData.camera(s, n = 500), "camera")._1
+        val mot = Clean.clean(SampleData.motion(s, n = 600), "motion")._1
+        val log = Clean.clean(SampleData.log(s, n = 100), "log")._1
+        val (synced, _) = Synchronize.synchronize(s, cam, mot, Some(log))
+        graft.io.Export.parquet(synced, out.toString)
+        s.read.parquet(out.toString)
+      }
+      assert(r.failure.isEmpty, r.failure)
+      assert(r.leak === None)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.getParent.toFile)
+  }
+
   test("a body with two actions yields two executed plans") {
     val r = probe("two_actions") { (s, _) =>
       val n = s.range(0, 50).count()

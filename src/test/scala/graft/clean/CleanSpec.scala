@@ -89,4 +89,28 @@ class CleanSpec extends GraftSpec {
     assert(cleaned.count() === 0)
     assert(!report.exists(_.startsWith("Smoothed")))
   }
+
+  private val sensors = Seq(
+    "camera" -> (() => SampleData.camera(spark)),
+    "motion" -> (() => SampleData.motion(spark)),
+    "log" -> (() => SampleData.log(spark)))
+
+  for ((sensor, gen) <- sensors)
+    test(s"clean($sensor) of an empty table is an empty, sorted frame with zero counts") {
+      val empty = gen().limit(0)
+      val (cleaned, report) = Clean.clean(empty, sensor)
+      assert(cleaned.columns.toSeq === empty.columns.toSeq)
+      assert(cleaned.count() === 0)
+      assert(report === Seq("Sorted by timestamp"))
+    }
+
+  test("an all-null column removes every row as missing, through the materialized output") {
+    for ((sensor, c) <- Seq("camera" -> "object_x", "motion" -> "accel_x")) {
+      val in = sensors.toMap.apply(sensor)()
+      val n = in.count()
+      val (cleaned, report) = Clean.clean(in.withColumn(c, lit(null).cast("double")), sensor)
+      assert(cleaned.count() === 0, sensor)
+      assert(report === Seq(s"Removed $n rows with missing values", "Sorted by timestamp"), sensor)
+    }
+  }
 }

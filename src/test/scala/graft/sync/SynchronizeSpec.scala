@@ -35,6 +35,20 @@ class SynchronizeSpec extends GraftSpec {
     assert(report.exists(_.startsWith("Overlap window: 2024-01-01 00:00:00.050000 to ")))
   }
 
+  test("a cleaned sync reads each cleaned table once: no generator Range leaf, no global Sort") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Range, Sort}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (cam, mot, log) = defaultSensors
+    val (out, _) = Synchronize.synchronize(spark, cam, mot, Some(log))
+    val plan = out.queryExecution.optimizedPlan
+    // the only Range leaves left are the 364-tick grid; the 500/600/100
+    // row generators sit behind Clean's checkpoints
+    val ranges = plan.collect { case r: Range => r.numElements }
+    assert(ranges.forall(_ == 364), s"Range leaves: $ranges")
+    assert(plan.collect { case s: Sort if s.global => s }.isEmpty)
+    assert(plan.collect { case r: LogicalRDD => r }.nonEmpty)
+  }
+
   test("all three methods fill every tick (nearest/pad/backfill over cleaned data)") {
     val (cam, mot, _) = defaultSensors
     for (m <- Seq("nearest", "pad", "backfill")) {
