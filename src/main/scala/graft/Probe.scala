@@ -10,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
@@ -33,7 +34,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (an unpartitioned `Window.orderBy` compiles to one, so a count that
   * grows with the input is a scale bug); `CartesianProduct` and
   * `BroadcastNestedLoopJoin` nodes; streaming batches, state-commit ms
-  * and state rows; then the caches the query left behind. With
+  * and state rows; the largest generated method of any whole-stage
+  * codegen stage (`max_method_bytes`: above HotSpot's 8,000-byte
+  * `HugeMethodLimit` the JIT never compiles it, so that stage runs in
+  * the bytecode interpreter); then the caches the query left behind. With
   * `planDir` set each warm-run plan is written to `<name>_<i>.txt`.
   *
   * A query that leaves a persisted RDD or a CacheManager entry behind
@@ -57,7 +61,7 @@ object Probe {
       jobs: Int, stages: Seq[Stage], cpuS: Double,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
       singlePartitionMax: Long, cartesian: Int, bnlj: Int,
-      batches: Int, commitMs: Long, stateRows: Long,
+      batches: Int, commitMs: Long, stateRows: Long, maxMethodBytes: Int,
       plans: Seq[QueryExecution], failure: Option[String],
       leak: Option[String] = None) {
 
@@ -80,7 +84,8 @@ object Probe {
         f""""jobs":$jobs,"cpu_s":$cpuS%.3f,"shuffle_read_bytes":$shuffleReadBytes,""" +
         s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,""" +
         s""""single_partition_max":$singlePartitionMax,"cartesian":$cartesian,"bnlj":$bnlj,""" +
-        s""""batches":$batches,"commit_ms":$commitMs,"state_rows":$stateRows,"plans":${plans.size},""" +
+        s""""batches":$batches,"commit_ms":$commitMs,"state_rows":$stateRows,""" +
+        s""""max_method_bytes":$maxMethodBytes,"plans":${plans.size},""" +
         s""""failure":${failure.fold("null")(f => "\"" + jsonSafe(f.take(200)) + "\"")},""" +
         s""""stages":$stagesJson}"""
     }
@@ -131,6 +136,16 @@ object Probe {
     case s: QueryStageExec => nodes(s.plan)
     case _ => (p.children ++ p.subqueries).flatMap(nodes)
   })
+
+  /** The largest method, in bytecode bytes, of the whole-stage codegen
+    * stages among `planNodes` (0 without one). Each stage's source is
+    * generated again and looked up in `CodeGenerator`'s compile cache,
+    * which holds the stats of the class the run compiled. */
+  private def maxMethodBytes(planNodes: Seq[SparkPlan]): Int =
+    planNodes.collect { case w: WholeStageCodegenExec =>
+      scala.util.Try(CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize)
+        .getOrElse(0)
+    }.maxOption.getOrElse(0)
 }
 
 /** The one measurement collector, for one session: `Probe.main`,
@@ -287,7 +302,7 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
         cpuNs / 1e9, shuffleRead, shuffleWrite, spill, singlePartitionMax,
         all.count(_.isInstanceOf[CartesianProductExec]),
         all.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
-        batches, commitMs, stateRows, executed, failure)
+        batches, commitMs, stateRows, maxMethodBytes(all), executed, failure)
     }
   }
 

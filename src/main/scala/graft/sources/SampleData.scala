@@ -13,13 +13,27 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: `spark.range(n, numPartitions)` generates
   * partition-parallel with zero shuffle; `rand/randn(seed)` are
-  * deterministic for a fixed partition layout, so we pin the partition
-  * count. Everything below is pure column expressions → whole-stage
+  * deterministic for a fixed partition layout (each partition's
+  * generator is seeded with `seed + partitionIndex`), so we pin the
+  * *generation* layout: `partitions` (32 by default) fixes the rows a
+  * seed gives. Everything below is pure column expressions → whole-stage
   * codegen, no driver-side loops; generating 10^12 rows only changes `n`.
+  *
+  * Execution runs on at most one partition per core: a narrow
+  * `coalesce(min(partitions, defaultParallelism))` over the generated
+  * rows (before the log's sort) merges runs of consecutive generation
+  * partitions into one task. The draws still happen in the original
+  * partitions, each seeded by its own index, so rows and their order
+  * are unchanged, while every stage over the generators schedules
+  * `defaultParallelism` tasks instead of 32.
   */
 object SampleData {
 
   private val DefaultStartUs: Long = 1704067200000000L // 2024-01-01 00:00:00 UTC
+
+  /** At most one execution partition per core; see the scaladoc above. */
+  private def onCores(df: DataFrame, partitions: Int): DataFrame =
+    df.coalesce(math.min(partitions, df.sparkSession.sparkContext.defaultParallelism))
 
   private def tsFromId(startUs: Long, stepUs: Double) =
     timestamp_micros((lit(startUs) + col("id") * lit(stepUs)).cast("long"))
@@ -33,7 +47,7 @@ object SampleData {
     val phase = col("id") * lit(4 * math.Pi / math.max(n - 1, 1).toDouble)
     val u = rand(seed) // one uniform draw drives both injections, as one
                        // noise-index set drives both in app.py:48-50
-    spark.range(0, n, 1, partitions).select(
+    onCores(spark.range(0, n, 1, partitions).select(
       tsFromId(startUs, 1e6 / hz).as("timestamp"),
       col("id").as("frame_id"),
       when(u < 0.05, lit(Double.NaN))
@@ -44,7 +58,7 @@ object SampleData {
         .as("object_size"),
       least(greatest(randn(seed + 1) * 0.1 + 0.9, lit(0.0)), lit(1.0))
         .as("confidence") // clip to [0,1], app.py:45
-    )
+    ), partitions)
   }
 
   /** S2 — IMU motion @50 Hz (`app.py:55-79`).
@@ -58,7 +72,7 @@ object SampleData {
     def ph(k: Double) = col("id") * lit(k * math.Pi / math.max(n - 1, 1).toDouble)
     val spikeP = 10.0 / n
     val accelX = sin(ph(8)) * 2 + randn(seed + 1) * 0.5
-    spark.range(0, n, 1, partitions).select(
+    onCores(spark.range(0, n, 1, partitions).select(
       tsFromId(startUs, 1e6 / hz).as("timestamp"),
       when(rand(seed) < spikeP, accelX * 10).otherwise(accelX).as("accel_x"),
       (cos(ph(8)) * 2 + randn(seed + 2) * 0.5).as("accel_y"),
@@ -66,7 +80,7 @@ object SampleData {
       (sin(ph(6)) * 30 + randn(seed + 4) * 5).as("gyro_x"),
       (cos(ph(6)) * 30 + randn(seed + 5) * 5).as("gyro_y"),
       (sin(ph(2)) * 20 + randn(seed + 6) * 5).as("gyro_z")
-    )
+    ), partitions)
   }
 
   /** S3 — robot event log (`app.py:82-101`).
@@ -87,7 +101,7 @@ object SampleData {
       .foldRight(lit(logEventTypes.last): org.apache.spark.sql.Column) {
         case ((label, p), acc) => when(u < p, label).otherwise(acc)
       }
-    spark.range(0, n, 1, partitions).withColumn("__u", rand(seed + 1)).select(
+    onCores(spark.range(0, n, 1, partitions).withColumn("__u", rand(seed + 1)).select(
       timestamp_micros((lit(startUs) + rand(seed) * spanUs).cast("long"))
         .as("timestamp"),
       eventType.as("event_type"),
@@ -95,6 +109,6 @@ object SampleData {
       (rand(seed + 3) * 180 - 90).as("joint_2"),
       (rand(seed + 4) * 360 - 180).as("joint_3"),
       (rand(seed + 5) * 100).as("gripper_force")
-    ).orderBy("timestamp") // sorted(...) at app.py:87
+    ), partitions).orderBy("timestamp") // sorted(...) at app.py:87
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+import graft.clean.Clean
 
 /** Y5 — as-of resample: align a (possibly irregular) series onto a set
   * of grid ticks, per `df.reindex(grid, method)` in the reference
@@ -242,17 +243,32 @@ object AsofJoin {
     * The event one-hot (Y7) deliberately does NOT fuse here: the
     * struct-payload max_by buffers force this aggregate off
     * whole-stage codegen, and routing every event row through it was
-    * measured slower than `EventPivot`'s separate int-buffer pivot. */
+    * measured slower than `EventPivot`'s separate int-buffer pivot.
+    *
+    * `dropMissing` keeps only the ticks whose output has no NULL or
+    * NaN value (`Clean.dropMissing` of the result, the reference's
+    * Y8). For pad, backfill and nearest each payload carries a
+    * per-source-row flag `__ok` (`!Clean.anyMissing` over its value
+    * columns, evaluated once per row in the explode stage), and a tick
+    * is dropped when a sensor's pick is null or not ok. The generic
+    * drop over the output columns would be pushed under the pick
+    * projection and inline the pick `CASE` once per value column: the
+    * final stage's generated method then exceeds HotSpot's 8,000-byte
+    * `HugeMethodLimit` and is never JIT-compiled. `interp` blends two
+    * rows (a blend of finite values can still be NaN), so it keeps the
+    * generic drop. */
   def uniformGrid(spark: org.apache.spark.sql.SparkSession,
                   sensors: Seq[GridSeries],
                   loUs: Long, stepUs: Long, nTicks: Long, method: String,
                   tickCol: String = "tick",
                   tieCol: Option[String] = None,
-                  bucketTicks: Long = Adaptive): DataFrame = {
+                  bucketTicks: Long = Adaptive,
+                  dropMissing: Boolean = false): DataFrame = {
     require(sensors.nonEmpty, "uniform grid needs at least one series")
     require(sensors.forall(_.valueCols.nonEmpty), "asof join needs value columns")
     require(stepUs > 0 && nTicks > 0, "grid must be non-empty")
     val (needPad, needBack) = sides(method)
+    val okFlag = dropMissing && method != "interp"
     // closed-form (unlike the generic kernels, no data scan needed)
     val effBucketTicks =
       if (bucketTicks > 0) bucketTicks
@@ -261,8 +277,12 @@ object AsofJoin {
     // exact integer floor-division (d may be negative; `div` truncates
     // toward zero, so go through pmod)
     def floorDiv(x: Column): Column = (x - pmod(x, lit(stepUs))) / lit(stepUs)
-    def payload(gs: GridSeries) =
-      struct(unix_micros(col(gs.tsCol)).as("__src") +: gs.valueCols.map(col): _*)
+    def payload(gs: GridSeries) = {
+      val ok =
+        if (okFlag) Seq((!Clean.anyMissing(gs.df.select(gs.valueCols.map(col): _*))).as("__ok"))
+        else Nil
+      struct(unix_micros(col(gs.tsCol)).as("__src") +: gs.valueCols.map(col) ++: ok: _*)
+    }
     // both sides MAXIMIZE their ordering key: pad the latest ts,
     // backfill the earliest (its key negates ts); at an equal ts either
     // keeps the largest tie, whatever the tie column's type
@@ -324,20 +344,21 @@ object AsofJoin {
     })
 
     val tickUs = lit(loUs) + col("__k") * stepUs
+    def fwd(i: Int) = if (needPad) col(s"__ap$i") else nullP(i)
+    def back(i: Int) = if (needBack) col(s"__ab$i") else nullP(i)
+    def pick(i: Int) = choose(method, fwd(i), back(i), tickUs)
     val sensorCols = sensors.zipWithIndex.flatMap { case (gs, i) =>
-      val fwd = if (needPad) col(s"__ap$i") else nullP(i)
-      val back = if (needBack) col(s"__ab$i") else nullP(i)
       def out(c: String) = if (gs.prefix.isEmpty) c else s"${gs.prefix}_$c"
       if (method == "interp") {
         // v(tick) = v0 + (v1 - v0) * (tick - t0) / (t1 - t0) between the
         // pad neighbour (t0, v0) and the backfill neighbour (t1, v1); a
         // tick landing exactly on a sample returns that sample
-        val t0 = fwd.getField("__src")
-        val t1 = back.getField("__src")
+        val t0 = fwd(i).getField("__src")
+        val t1 = back(i).getField("__src")
         val frac = (tickUs - t0).cast("double") / (t1 - t0).cast("double")
         gs.valueCols.map { c =>
-          val v0 = fwd.getField(c).cast("double")
-          val v1 = back.getField(c).cast("double")
+          val v0 = fwd(i).getField(c).cast("double")
+          val v1 = back(i).getField(c).cast("double")
           // interpBarrier: identity, but it stops predicate pushdown
           // from substituting this whole blend into a downstream
           // dropna filter. Without it the generated filter stage
@@ -347,17 +368,20 @@ object AsofJoin {
           // warm; with codegen disabled the two methods tie, so the
           // cost is code SIZE, not arithmetic).
           interpBarrier(
-            when(fwd.isNull || back.isNull, lit(null).cast("double"))
+            when(fwd(i).isNull || back(i).isNull, lit(null).cast("double"))
               .when(t1 === t0, v0)
               .otherwise(v0 + (v1 - v0) * frac))
             .as(out(c))
         }
-      } else {
-        val pick = choose(method, fwd, back, tickUs)
-        gs.valueCols.map(c => pick.getField(c).as(out(c)))
-      }
+      } else gs.valueCols.map(c => pick(i).getField(c).as(out(c)))
     }
-    filled.select(timestamp_micros(tickUs).as(tickCol) +: sensorCols: _*)
+    // the flag drop: one `__ok` read per sensor pick (null when the
+    // pick is null, so the tick is dropped)
+    val kept =
+      if (!okFlag) filled
+      else filled.filter(sensors.indices.map(pick(_).getField("__ok")).reduce(_ && _))
+    val out = kept.select(timestamp_micros(tickUs).as(tickCol) +: sensorCols: _*)
+    if (dropMissing && !okFlag) Clean.dropMissing(out) else out
   }
 
   /** KEYED as-of join — the trade/quote shape: for each left row, the

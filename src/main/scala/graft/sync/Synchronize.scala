@@ -2,7 +2,6 @@ package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.clean.Clean
 
 /** Y1-Y9 — full multi-sensor synchronization
   * (`/root/reference/app.py:140-198`): coerce timestamps, compute the
@@ -83,25 +82,31 @@ object Synchronize {
         s"Mapped ${lg.count()} log events to synchronized timeline" // app.py:191
       else "Mapped log events to synchronized timeline")
     }
+    // Y8 — drop-missing (no-op unless NaNs survived cleaning, SURVEY
+    // §2.4 Y8) runs inside the kernel: each sensor row carries one
+    // "complete" flag and a tick is dropped when a sensor's pick is
+    // null or incomplete. The event columns are `na.fill(0)`'d and the
+    // tick is never null, so dropping before the event join drops the
+    // same rows as `Clean.dropMissing` of the wide table, whose
+    // per-column null/NaN tests would each inline the pick `CASE` into
+    // the final stage (see `uniformGrid`). Y9 index reset is a no-op in
+    // Spark.
     val aligned = AsofJoin.uniformGrid(spark,
       Seq(AsofJoin.GridSeries(cam, "timestamp", camCols, "camera"),
         AsofJoin.GridSeries(mot, "timestamp", motCols, "motion")),
-      startUs, stepUs, nTicks, method, tickCol = "timestamp", tieCol = tieCol)
+      startUs, stepUs, nTicks, method, tickCol = "timestamp", tieCol = tieCol,
+      dropMissing = true)
     // Y7 stays a SEPARATE codegen'd pivot aggregate: folding the event
     // rows into the fused kernel's aggregate was measured SLOWER (the
     // struct-payload max_by buffers force a non-codegen aggregate, and
     // every event row would pay that path; EventPivot's int-buffer
     // pivot is whole-stage-codegen) — the sensor fusion is the win.
-    val withEvents = lgOpt match {
+    val result = lgOpt match {
       case Some(lg) =>
         EventPivot.oneHot(aligned, "timestamp", lg, "timestamp", "event_type",
           startUs, stepUs, nTicks, tolUs, eventTypes)
       case None => aligned
     }
-
-    // Y8 — final drop-missing (no-op unless NaNs survived cleaning,
-    // SURVEY §2.4 Y8); Y9 index reset is a no-op in Spark.
-    val result = Clean.dropMissing(withEvents)
     if (withCounts)
       report :+= s"Final synchronized dataset: ${result.count()} samples" // app.py:194
     (result, report)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,6 +52,23 @@ class ProbeSpec extends GraftSpec {
       assert(r.failure.isEmpty, r.failure)
       assert(r.leak === None)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(out.getParent.toFile)
+  }
+
+  test("max_method_bytes: a wide CASE projection exceeds the 8,000-byte JIT limit, a range sum does not") {
+    val wide = probe("wide_case") { (s, _) =>
+      val id = col("id")
+      // 16 CASEs of 20 branches, inlined into one generated method
+      s.range(0, 100).select((0 until 16).map { j =>
+        (1 until 20).foldLeft(when(id % 97 === j, id)) { (c, k) =>
+          c.when(id % 97 === (j * 20 + k) % 97, id * k + j)
+        }.as(s"c$j")
+      }: _*)
+    }
+    assert(wide.failure.isEmpty, wide.failure)
+    assert(wide.maxMethodBytes > 8000, wide.maxMethodBytes)
+    val sum = probe("range_sum")((s, _) => s.range(0, 1000).agg(functions.sum("id")))
+    assert(sum.maxMethodBytes > 0 && sum.maxMethodBytes < 8000, sum.maxMethodBytes)
+    assert(sum.json.contains(s""""max_method_bytes":${sum.maxMethodBytes},"""))
   }
 
   test("a body with two actions yields two executed plans") {

@@ -49,6 +49,53 @@ class SynchronizeSpec extends GraftSpec {
     assert(plan.collect { case r: LogicalRDD => r }.nonEmpty)
   }
 
+  test("every generated stage of a synchronized frame stays under HotSpot's 8,000-byte JIT limit") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val (cam, mot, log) = defaultSensors
+    for (m <- Seq("nearest", "pad", "backfill")) {
+      val (out, _) = Synchronize.synchronize(spark, cam, mot, Some(log), method = m)
+      out.collect() // runs the frame's own plan, so its AQE stages are final
+      val sizes = codegenStringSeq(out.queryExecution.executedPlan)
+        .map(_._3.maxMethodCodeSize)
+      assert(sizes.nonEmpty, s"method=$m: no codegen stage")
+      // a method above HugeMethodLimit (8,000 bytes) is never compiled
+      // by the JIT: its stage runs in the bytecode interpreter
+      assert(sizes.forall(_ < 8000), s"method=$m: max method bytes per stage $sizes")
+    }
+  }
+
+  test("Y8 on dirty input: the in-kernel drop equals Clean.dropMissing of the undropped frame") {
+    // uncleaned generators: 5% NaN object_x, -999 sentinels, accel spikes
+    val cam = SampleData.camera(spark, n = 500, startUs = T0)
+    val mot = SampleData.motion(spark, n = 600, startUs = T0 + 50000L)
+    val log = SampleData.log(spark, n = 100, startUs = T0)
+    val step = Synchronize.DefaultStepUs
+    val sensors = Seq(
+      AsofJoin.GridSeries(cam, "timestamp", cam.columns.filterNot(_ == "timestamp").toSeq, "camera"),
+      AsofJoin.GridSeries(mot, "timestamp", mot.columns.filterNot(_ == "timestamp").toSeq, "motion"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("timestamp").collect().toSeq
+    val (lo, hi) = TimeGrid.overlapWindowUs(cam, "timestamp", mot, "timestamp").get
+    val nTicks = TimeGrid.tickCount(lo, hi, step)
+    for (m <- Seq("nearest", "pad", "backfill", "interp")) {
+      // Synchronize's own overlap grid, event pivot included
+      val (out, _) = Synchronize.synchronize(spark, cam, mot, Some(log), method = m)
+      val undropped = EventPivot.oneHot(
+        AsofJoin.uniformGrid(spark, sensors, lo, step, nTicks, m, tickCol = "timestamp"),
+        "timestamp", log, "timestamp", "event_type", lo, step, nTicks, Synchronize.DefaultTolUs)
+      val expected = rows(Clean.dropMissing(undropped))
+      assert(expected.size < nTicks, s"method=$m: no tick carries a missing value")
+      assert(rows(out) === expected, s"method=$m")
+      // a grid that starts at camera's first row, two ticks before
+      // motion's first row (pad and interp have null picks there) and
+      // ends past motion's last row (backfill and interp null there)
+      def early(drop: Boolean) = AsofJoin.uniformGrid(spark, sensors, T0, step, 510, m,
+        tickCol = "timestamp", dropMissing = drop)
+      val raw = early(drop = false)
+      if (m != "nearest") assert(raw.filter(col("motion_accel_x").isNull).count() > 0, m)
+      assert(rows(early(drop = true)) === rows(Clean.dropMissing(raw)), s"early grid, method=$m")
+    }
+  }
+
   test("all three methods fill every tick (nearest/pad/backfill over cleaned data)") {
     val (cam, mot, _) = defaultSensors
     for (m <- Seq("nearest", "pad", "backfill")) {
