@@ -197,32 +197,35 @@ object Bench {
   }
 
   /** ONE-TIME index/layout/artifact construction (like CREATE INDEX
-    * before a bench): bucketed table, hive-partitioned + range-clustered
-    * layouts, min/max skip index, IVF quantizer, maintained MV state
-    * tables, plus any `extra` builds. Building them here means each
-    * query times the operation it exists to demonstrate (shuffle-free
-    * join, pruned read, ANN search, partial-merge refresh), not offline
-    * table maintenance; the returned build seconds still ship in the
-    * JSON so the cost stays machine-readable next to the query times.
+    * before a bench): every artifact of `graft.io.Artifacts` the
+    * queries read — the bucketed orders/lineitem tables, the
+    * hive-partitioned, range-clustered and z-ordered layouts, the ANN
+    * indexes and quantizers, the maintained MV state tables and the
+    * input fixtures — plus any `extra` builds. Building them here
+    * means each query times the operation it exists to demonstrate
+    * (shuffle-free join, pruned read, ANN search, partial-merge
+    * refresh), not offline table maintenance; the returned build
+    * seconds still ship in the JSON so the cost stays machine-readable
+    * next to the query times. On-disk artifacts persist, so a second
+    * JVM on the same sf dir reuses them and this phase only checks
+    * their markers and recomputes the in-memory ones.
     *
-    * Each build gets its own try: a failure in one artifact must not
-    * abort the others, or their build cost silently lands on whichever
-    * query first touches them — exactly the attribution skew this
-    * phase exists to prevent. (ScaleBench's replica dir holds only some
-    * tables, so the TPC-H-table artifacts fail there by design.) */
+    * Each artifact gets its own try: a failure in one must not abort
+    * the others, or their build cost silently lands on whichever query
+    * first touches them — exactly the attribution skew this phase
+    * exists to prevent. A failure names its artifact. */
   def buildArtifacts(spark: SparkSession, sfDir: String,
       extra: Seq[(String, () => Unit)] = Nil): Double = {
     val b0 = System.nanoTime()
-    (Seq[(String, () => Unit)](
-      "bucketed-orders" -> (() => graft.sources.Bucketing.ensureOrderBucketed(spark, sfDir)),
-      "ext-artifacts" -> (() => graft.queries.ExtQueries.prewarmArtifacts(spark, sfDir)),
-      "sql-artifacts" -> (() => graft.queries.SqlQueries.prewarmArtifacts(spark, sfDir))
-    ) ++ extra).foreach { case (label, build) =>
-      try build()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] artifact build '$label' at '$sfDir' failed: ${e.getMessage}")
+    val all = ("bucketed", graft.sources.Bucketing.ensureOrderBucketed _) +:
+      (graft.queries.ExtQueries.artifacts ++ graft.queries.SqlQueries.artifacts)
+    (all.map { case (label, build) => label -> (() => { build(spark, sfDir); () }) } ++ extra)
+      .foreach { case (label, build) =>
+        try build()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] artifact build '$label' at '$sfDir' failed: ${e.getMessage}")
+        }
       }
-    }
     (System.nanoTime() - b0) / 1e9
   }
 

@@ -28,7 +28,9 @@ object Graft {
     * suite generates thousands of codegen units, so shapes shared
     * across queries and trials would recompile through Janino on every
     * run. It is sized to hold the whole suite, as warm as a long-lived
-    * cluster session. */
+    * cluster session. `events.parquet` stores `ts` as TIMESTAMP(NANOS)
+    * in some data generations, which Spark reads only as raw longs
+    * (`graft.sources.Tables.events` converts them). */
   def session(cpus: Int = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -38,6 +40,7 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config(graft.sources.Tables.NanosAsLong, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

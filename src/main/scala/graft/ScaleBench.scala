@@ -264,13 +264,11 @@ object ScaleBench {
     spark.stop()
   }
 
-  /** Synthesize (or reuse) the `reps`× replica dir: events + documents
-    * only — the tables the scale queries read. */
-  def ensureScaledDir(spark: SparkSession, sfDir: String, reps: Int): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_scale_${graft.io.FileSkipping.pathKey(sfDir, s"scale$reps-v4")}"
-    val done = new java.io.File(s"$base/_DONE")
-    if (!done.isFile) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Synthesize (or reuse) the `reps`× replica dir, an `Artifacts`
+    * directory: events, documents, embeddings, lineitem and orders —
+    * the tables the scale queries read. */
+  def ensureScaledDir(spark: SparkSession, sfDir: String, reps: Int): String =
+    graft.io.Artifacts.dir(sfDir, "scale", "v4", reps) { base =>
       // the replica offsets below promise DISJOINT key universes —
       // the premise every cpu_ratio bar rests on. Verify it against
       // the base dir instead of assuming (TPC-H sf10 already has
@@ -342,8 +340,5 @@ object ScaleBench {
         .withColumn("o_custkey", col("o_custkey") + lit(k * 1000000L)))
         .reduce(_ unionByName _)
         .write.mode("overwrite").parquet(s"$base/orders.parquet")
-      java.nio.file.Files.write(done.toPath, Array.emptyByteArray)
     }
-    base
-  }
 }

@@ -29,15 +29,12 @@ object Dedup {
   def strHash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Lower-cased whitespace tokens. */
-  def toks(text: Column): Column = split(lower(text), " ")
-
   /** Distinct word n-gram shingles of the text (1-based element_at,
     * mirrored by DuckDB 1-based list indexing). Guarded: texts shorter
     * than n tokens yield an empty array (Spark's `sequence(1, 0)`
     * would otherwise DESCEND). */
   def shingles(text: Column, n: Int = 3): Column = {
-    val t = toks(text)
+    val t = TextAnalysis.tokens(text)
     when(size(t) >= n,
       array_distinct(
         transform(sequence(lit(1), size(t) - (n - 1)), i =>

@@ -27,134 +27,31 @@ import org.apache.spark.sql.functions._
   * exactly what lakehouse table formats store in their metadata
   * layer.)
   *
-  * Layouts PERSIST across sessions: dirs are keyed by an md5 of the
-  * source path plus a layout-version tag, and a completed build is
-  * recognized by its `_SUCCESS` markers — a new JVM reuses the
-  * on-disk layout instead of rebuilding it (the lakehouse behavior:
-  * table maintenance is durable, not session state). Bumping the
-  * version tag invalidates old layouts when the algorithm changes.
+  * Both layouts are artifacts of `Artifacts`: built once per dataset,
+  * reused across JVMs, rebuilt when the dataset is regenerated.
   */
 object FileSkipping {
 
-  /** Collision-proof, filesystem-safe dir key for a source path (the
-    * old `math.abs(path.hashCode)` idiom could collide two dirs — and
-    * abs(Int.MinValue) is negative). The version tag busts stale
-    * layouts built by older algorithm revisions, and the key also
-    * folds in a fingerprint of the source dir's parquet files
-    * (name+size+mtime), so a REGENERATED dataset at the same path
-    * invalidates every persisted artifact on the next session —
-    * serving a layout built from a previous generation of the data
-    * would be silently wrong. Deliberately conservative: the
-    * fingerprint covers ALL parquet in the dir, so regenerating an
-    * unrelated table also rebuilds events-derived artifacts (a cheap
-    * false positive; a stale-serve false negative is the one that
-    * corrupts results). */
-  private[graft] def pathKey(sfDir: String, version: String): String = {
-    def md5(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-    // two segments: <dataset>_<generation>. The first hashes the
-    // source PATH alone and is stable across regenerations; it is part
-    // of the GC prefix (gcStaleSiblings keeps everything up to the
-    // last '_'), so rebuilding sf0.1's layout can only collect stale
-    // GENERATIONS of sf0.1 — never another dataset's live artifacts.
-    val dataset = md5(sfDir).take(8)
-    val generation = md5(s"$sfDir|${dirFingerprint(sfDir)}|$version").take(16)
-    s"${dataset}_$generation"
-  }
-
-  /** name:size:mtime of each parquet entry directly under `sfDir` —
-    * the cheap content proxy (a real checksum would need a full scan).
-    * Listed through the Hadoop FileSystem API so it works on any
-    * scheme Spark can read (HDFS/S3/local), and directory-style
-    * parquet tables (a Spark write is a DIRECTORY of part files) are
-    * fingerprinted by their name + aggregate child size + max child
-    * mtime rather than skipped.
-    *
-    * Memoized per (dir) for the JVM lifetime: data regenerated UNDER a
-    * live JVM is not re-detected until restart — acceptable because a
-    * dataset swap while queries are mid-flight is undefined behavior
-    * for any engine; the guarantee here is cross-SESSION freshness. */
-  private val fpCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def dirFingerprint(sfDir: String): String =
-    fpCache.getOrElseUpdate(sfDir, {
-      val path = new org.apache.hadoop.fs.Path(sfDir)
-      val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val entries =
-        try fs.listStatus(path).toSeq
-        catch { case _: java.io.IOException => Seq.empty }
-      entries.filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-        .map { st =>
-          if (st.isDirectory) {
-            val kids = try fs.listStatus(st.getPath).toSeq
-                       catch { case _: java.io.IOException => Seq.empty }
-            val sz = kids.map(_.getLen).sum
-            val mt = (st.getModificationTime +: kids.map(_.getModificationTime)).max
-            s"${st.getPath.getName}:d$sz:$mt"
-          } else
-            s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-        }
-        .mkString(",")
-    })
-
-  /** Fingerprint-keyed dirs churn on every data regeneration; the
-    * previous generation's layout dirs would otherwise accumulate in
-    * tmpdir forever. Called right before a fresh build: removes
-    * sibling dirs with the same artifact prefix — which INCLUDES the
-    * dataset segment of pathKey, so only stale generations of the
-    * SAME dataset are collected, never another dataset's live
-    * artifacts — but a different generation key (never the one about
-    * to be (re)used). */
-  private def gcStaleSiblings(base: String): Unit = {
-    val dir = new java.io.File(base).getParentFile
-    val name = new java.io.File(base).getName
-    val prefix = name.substring(0, name.lastIndexOf('_') + 1)
-    val keep = name
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
-        f.getName != keep)
-      .foreach { f =>
-        try {
-          java.nio.file.Files.walk(f.toPath)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: java.io.IOException => () }
-      }
-  }
-
-  /** A finished Spark parquet write leaves a `_SUCCESS` marker; its
-    * presence in both dirs means a prior session already built this
-    * layout and it can be reused as-is. */
-  private def built(dirs: String*): Boolean =
-    dirs.forall(d => new java.io.File(d, "_SUCCESS").isFile)
+  /** Files of the clustered layout of `events`. */
+  private val ByUserFiles = 16
 
   /** Build (or reuse) the clustered layout + stats index for `events`
     * keyed by `user_id`. Returns (dataDir, indexPath). */
-  def ensureEventsByUser(spark: SparkSession, sfDir: String,
-                         nFiles: Int = 16): (String, String) =
-    cache.getOrElseUpdate(sfDir, {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_skip_ev_${pathKey(sfDir, "v1")}"
-      val dataDir = s"$base/data"; val idxPath = s"$base/index"
-      if (!built(dataDir, idxPath)) {
-        gcStaleSiblings(base)
-        graft.sources.Tables.events(spark, sfDir)
-          .repartitionByRange(nFiles, col("user_id"))
-          .sortWithinPartitions(col("user_id"))
-          .write.mode("overwrite").parquet(dataDir)
-        spark.read.parquet(dataDir)
-          .groupBy(col("_metadata.file_path").as("file"))
-          .agg(min(col("user_id")).as("key_lo"), max(col("user_id")).as("key_hi"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(idxPath)
-      }
-      (dataDir, idxPath)
-    })
-
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  def ensureEventsByUser(spark: SparkSession, sfDir: String): (String, String) = {
+    val base = Artifacts.dir(sfDir, "skip_ev", "v1", ByUserFiles) { base =>
+      graft.sources.Tables.events(spark, sfDir)
+        .repartitionByRange(ByUserFiles, col("user_id"))
+        .sortWithinPartitions(col("user_id"))
+        .write.mode("overwrite").parquet(s"$base/data")
+      spark.read.parquet(s"$base/data")
+        .groupBy(col("_metadata.file_path").as("file"))
+        .agg(min(col("user_id")).as("key_lo"), max(col("user_id")).as("key_hi"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/index")
+    }
+    (s"$base/data", s"$base/index")
+  }
 
   /** All files vs files whose [key_lo, key_hi] overlaps [lo, hi] — the
     * planning-time index consultation (the index is one tiny row per
@@ -231,38 +128,31 @@ object FileSkipping {
     * codes from their observed min/max (one tiny agg job) before
     * bit-interleaving. Returns (dataDir, indexPath). */
   def ensureEventsZOrder(spark: SparkSession, sfDir: String,
-                         nFiles: Int = 32): (String, String) =
-    zcache.getOrElseUpdate(sfDir, {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_ev_${pathKey(sfDir, "v2")}"
-      val dataDir = s"$base/data"; val idxPath = s"$base/index"
-      if (!built(dataDir, idxPath)) {
-        gcStaleSiblings(base)
-        val ev = graft.sources.Tables.events(spark, sfDir)
-        val b = ev.agg(
-          min(col("user_id")).as("ulo"), max(col("user_id")).as("uhi"),
-          min(floor(col("value")).cast("long")).as("vlo"),
-          max(floor(col("value")).cast("long")).as("vhi")).head()
-        ev.withColumn("__z", morton16(
-            quantize16(col("user_id"), b.getLong(0), b.getLong(1)),
-            quantize16(floor(col("value")).cast("long"), b.getLong(2), b.getLong(3))))
-          .repartitionByRange(nFiles, col("__z"))
-          .sortWithinPartitions(col("__z"))
-          .drop("__z")
-          .write.mode("overwrite").parquet(dataDir)
-        spark.read.parquet(dataDir)
-          .groupBy(col("_metadata.file_path").as("file"))
-          .agg(min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"),
-            min(floor(col("value")).cast("long")).as("v_lo"),
-            max(floor(col("value")).cast("long")).as("v_hi"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(idxPath)
-      }
-      (dataDir, idxPath)
-    })
-
-  private val zcache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+                         nFiles: Int = 32): (String, String) = {
+    val base = Artifacts.dir(sfDir, "zorder_ev", "v2", nFiles) { base =>
+      val ev = graft.sources.Tables.events(spark, sfDir)
+      val b = ev.agg(
+        min(col("user_id")).as("ulo"), max(col("user_id")).as("uhi"),
+        min(floor(col("value")).cast("long")).as("vlo"),
+        max(floor(col("value")).cast("long")).as("vhi")).head()
+      ev.withColumn("__z", morton16(
+          quantize16(col("user_id"), b.getLong(0), b.getLong(1)),
+          quantize16(floor(col("value")).cast("long"), b.getLong(2), b.getLong(3))))
+        .repartitionByRange(nFiles, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z")
+        .write.mode("overwrite").parquet(s"$base/data")
+      spark.read.parquet(s"$base/data")
+        .groupBy(col("_metadata.file_path").as("file"))
+        .agg(min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"),
+          min(floor(col("value")).cast("long")).as("v_lo"),
+          max(floor(col("value")).cast("long")).as("v_hi"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/index")
+    }
+    (s"$base/data", s"$base/index")
+  }
 
   /** Files whose (user, value) bounding rectangle intersects the query
     * box — 2-D index consultation, one read of the 1-file index. */

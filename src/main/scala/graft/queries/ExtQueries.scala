@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity, TextAnalysis}
+import graft.io.Artifacts
 
 /** LLM-training-data-pipeline operators (BASELINE.json north star) over
   * `documents` and `embeddings`, each with a DuckDB oracle that runs
@@ -16,51 +17,45 @@ object ExtQueries {
 
   /** Embedding width per sf dir — static table metadata, memoized so
     * the similarity queries don't each pay the one-row probe job. */
-  private val dimCache = scala.collection.concurrent.TrieMap.empty[String, Int]
   private def dimOf(s: org.apache.spark.sql.SparkSession, d: String): Int =
-    dimCache.getOrElseUpdate(d,
+    Artifacts.memo("emb-dim", d)(
       Similarity.dimOf(graft.sources.Tables.load(s, d, "embeddings"), "embedding"))
+
+  /** Embedding row count per sf dir: the corpus size the adaptive ANN
+    * index parameters (RP-tree depth, LSH planes) derive from. */
+  private def embRowsOf(s: org.apache.spark.sql.SparkSession, d: String): Long =
+    Artifacts.memo("emb-rows", d)(graft.sources.Tables.load(s, d, "embeddings").count())
 
   /** Hive-partitioned (by day) relayout of the events table per sf
     * dir — a one-time table-maintenance artifact (like the bucketed
     * index): `io_partitioned_prune` grades the pruned READ against it. */
-  private val partLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def partitionedEventsOf(s: org.apache.spark.sql.SparkSession,
                                   d: String): String =
-    partLayoutCache.getOrElseUpdate(d, {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_part_ev_${graft.io.FileSkipping.pathKey(d, "v1")}"
-      // a prior session's completed layout is reusable as-is
-      if (!new java.io.File(out, "_SUCCESS").isFile)
-        graft.sources.Tables.events(s, d)
-          .withColumn("event_date", to_date(col("ts")))
-          .write.mode("overwrite").partitionBy("event_date").parquet(out)
-      out
-    })
+    Artifacts.dir(d, "part_ev", "v1") { out =>
+      graft.sources.Tables.events(s, d)
+        .withColumn("event_date", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("event_date").parquet(out)
+    }
 
   /** IVF coarse quantizer per sf dir — at scale the quantizer is
     * trained OFFLINE once and reused by every query; memoizing per dir
     * models that: the k-means fit never rides the query path. */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Long]]]
   private def centroidsOf(s: org.apache.spark.sql.SparkSession,
                           d: String): Array[Array[Long]] =
-    centroidCache.getOrElseUpdate(d,
+    Artifacts.memo("ivf-centroids", d)(
       Similarity.fitCentroids(graft.sources.Tables.load(s, d, "embeddings")))
 
   /** PQ codebooks (two 32-dim subspaces, 16 cells each) per sf dir —
     * offline artifacts like the IVF quantizer, trained once with the
     * same deterministic schedule on each embedding half. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Array[Long]], Array[Array[Long]])]
   private def pqCodebooksOf(s: org.apache.spark.sql.SparkSession,
                             d: String): (Array[Array[Long]], Array[Array[Long]]) =
-    pqCache.getOrElseUpdate(d, {
+    Artifacts.memo("pq-codebooks", d) {
       val emb = graft.sources.Tables.load(s, d, "embeddings")
       def sub(start: Int) = emb.select(col("vec_id"),
         slice(col("embedding"), start, 32).as("embedding"))
       (Similarity.fitCentroids(sub(1)), Similarity.fitCentroids(sub(33)))
-    })
+    }
 
   /** PQ code table (neighbor_id, c0, c1): each vector's two subspace
     * codebook cells — the compressed representation an ADC scan reads
@@ -201,29 +196,25 @@ object ExtQueries {
       .select("query_id", "rank", "neighbor_id", "sim")
   }
 
-  /** Near-dup connected-components groups per sf dir — like real
-    * pipelines, the (expensive, offline) dedup grouping is computed
-    * once and reused by every downstream stage; the returned labels
-    * DataFrame is already persisted by `connectedComponents`. */
-  private val groupsCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String),
-      org.apache.spark.sql.DataFrame]
+  /** Near-dup connected-components groups per (session, sf dir) —
+    * like real pipelines, the (expensive, offline) dedup grouping is
+    * computed once and reused by every downstream stage; the returned
+    * labels DataFrame is already persisted by `connectedComponents`. */
+  private def neardupGroupsOf(s: org.apache.spark.sql.SparkSession,
+                              d: String): org.apache.spark.sql.DataFrame =
+    Artifacts.sessionMemo(s, "neardup-groups", d)(
+      Dedup.connectedComponents(
+        Dedup.minhashNearDups(graft.sources.Tables.load(s, d, "documents"), 0.7)
+          .select("id_a", "id_b")))
 
   /** Drop the memoized near-dup grouping (bench hook): the grouping is
     * memoized so downstream stages reuse it like a real pipeline, but
     * `dedup_neardup_groups` exists to GRADE the computation — a
     * multi-trial bench must re-run it per trial, not time trial 1's
     * cache from trial 2 on. */
-  def invalidateNearDupGroups(): Unit = {
-    groupsCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    groupsCache.clear()
-  }
-  private def neardupGroupsOf(s: org.apache.spark.sql.SparkSession,
-                              d: String): org.apache.spark.sql.DataFrame =
-    groupsCache.getOrElseUpdate((System.identityHashCode(s), d),
-      Dedup.connectedComponents(
-        Dedup.minhashNearDups(graft.sources.Tables.load(s, d, "documents"), 0.7)
-          .select("id_a", "id_b")))
+  def invalidateNearDupGroups(): Unit =
+    Artifacts.forget[org.apache.spark.sql.DataFrame]("neardup-groups")
+      .foreach(df => try df.unpersist() catch { case _: Throwable => () })
 
   /** Exact MinHash ground-truth count (pairs at Jaccard ≥ 0.7) for the
     * recall audit — enumerated without an all-pairs join (any qualifying
@@ -232,11 +223,9 @@ object ExtQueries {
     * dir and prewarmed by bench like the IVF quantizer: the graded
     * `dedup_minhash_recall` then times the banding, not this one-off
     * audit scaffold. */
-  private val minhashTruthCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
   private def minhashTruthOf(s: org.apache.spark.sql.SparkSession,
                              d: String): Long =
-    minhashTruthCache.getOrElseUpdate(d, {
+    Artifacts.memo("minhash-truth", d) {
       val sets = Dedup.shingleSets(
         graft.sources.Tables.load(s, d, "documents"), "doc_id", "text")
       val post = sets.select(col("doc_id"), explode(col("__sh")).as("h"))
@@ -249,17 +238,15 @@ object ExtQueries {
       cp.join(sa, "id_a").join(sb, "id_b")
         .filter(Dedup.jaccard(col("__sa"), col("__sb")) >= 0.7)
         .count()
-    })
+    }
 
   /** RP-tree median thresholds per sf dir — one-time offline artifact
     * like the IVF centroids (1 persisted projection pass + 3 digest
     * median jobs), memoized so the graded query times the routing and
     * rerank, not the tree fit. */
-  private val rpThresholdsCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[Map[Int, Double]]]
   private def rpThresholdsOf(s: org.apache.spark.sql.SparkSession,
                              d: String): Seq[Map[Int, Double]] =
-    rpThresholdsCache.getOrElseUpdate(d, Similarity.rpTreeThresholds(
+    Artifacts.memo("rp-thresholds", d)(Similarity.rpTreeThresholds(
       graft.sources.Tables.load(s, d, "embeddings"), dim = dimOf(s, d)))
 
   /** Corpus-side RP-tree leaf assignments per sf dir — the offline
@@ -269,47 +256,33 @@ object ExtQueries {
     * vectors and reranks ~256 candidates each — query cost no longer
     * carries the n·depth·dim corpus-routing pass (the r13 10x
     * sweep's cpu_ratio 53.8). */
-  private val rpLeavesCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def rpLeavesOf(s: org.apache.spark.sql.SparkSession,
                          d: String): org.apache.spark.sql.DataFrame = {
-    val path = rpLeavesCache.getOrElseUpdate(d, {
-      // the ADAPTIVE depth is part of the index identity: a cap or
-      // formula change must miss this cache, not silently join query
-      // routes against leaves from a different tree shape
-      val depth = Similarity.adaptiveRpDepth(
-        graft.sources.Tables.load(s, d, "embeddings").count())
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_annidx_${graft.io.FileSkipping.pathKey(d, s"rpleaves-d$depth-v1")}"
-      if (!new java.io.File(p, "_SUCCESS").isFile)
-        Similarity.rpTreeLeaves(
-          graft.sources.Tables.load(s, d, "embeddings"),
-          rpThresholdsOf(s, d), dim = dimOf(s, d))
-          .write.mode("overwrite").parquet(p)
-      p
+    // the ADAPTIVE depth is part of the index identity: a cap or
+    // formula change must miss the store, not silently join query
+    // routes against leaves from a different tree shape
+    val depth = Similarity.adaptiveRpDepth(embRowsOf(s, d))
+    s.read.parquet(Artifacts.dir(d, "rpleaves", "v1", depth) { p =>
+      Similarity.rpTreeLeaves(
+        graft.sources.Tables.load(s, d, "embeddings"),
+        rpThresholdsOf(s, d), dim = dimOf(s, d))
+        .write.mode("overwrite").parquet(p)
     })
-    s.read.parquet(path)
   }
 
   /** Corpus-side LSH signature table (8 tables, adaptive planes) —
     * the offline index twin of [[rpLeavesOf]] for sim_topk_lsh's
     * exact config. */
-  private val lshIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def lshIndexOf(s: org.apache.spark.sql.SparkSession,
                          d: String): org.apache.spark.sql.DataFrame = {
-    val path = lshIndexCache.getOrElseUpdate(d, {
-      // adaptive plane count joins the index identity (see rpLeavesOf)
-      val np = Similarity.adaptiveNPlanes(
-        graft.sources.Tables.load(s, d, "embeddings").count())
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_annidx_${graft.io.FileSkipping.pathKey(d, s"lshsigs-t8-p$np-v1")}"
-      if (!new java.io.File(p, "_SUCCESS").isFile)
-        Similarity.lshCorpusSignatures(
-          graft.sources.Tables.load(s, d, "embeddings"),
-          nTables = 8, dim = dimOf(s, d))
-          .write.mode("overwrite").parquet(p)
-      p
+    // adaptive plane count joins the index identity (see rpLeavesOf)
+    val np = Similarity.adaptiveNPlanes(embRowsOf(s, d))
+    s.read.parquet(Artifacts.dir(d, "lshsigs", "v1", 8, np) { p =>
+      Similarity.lshCorpusSignatures(
+        graft.sources.Tables.load(s, d, "embeddings"),
+        nTables = 8, dim = dimOf(s, d))
+        .write.mode("overwrite").parquet(p)
     })
-    s.read.parquet(path)
   }
 
   /** Candidates examined per ANN query config for the 10 standard
@@ -322,7 +295,7 @@ object ExtQueries {
     val emb = graft.sources.Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val nq = math.max(q.count(), 1L)
-    val np = Similarity.adaptiveNPlanes(emb.count())
+    val np = Similarity.adaptiveNPlanes(embRowsOf(s, d))
     val qSigs = q.select(col("vec_id").as("query_id"),
       posexplode(graft.functions.VectorFunctions.lsh_signatures(
         s, col("embedding"), 8, np, dimOf(s, d)))
@@ -342,36 +315,39 @@ object ExtQueries {
   /** Deliberately-fragmented documents layout (64 tiny files) — the
     * compaction query's input FIXTURE, memoized per dir so repeated
     * runs grade the compact() rewrite, not the fixture fragmentation. */
-  private val fragLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def fragmentedDocsOf(s: org.apache.spark.sql.SparkSession,
                                d: String): String =
-    fragLayoutCache.getOrElseUpdate(d, {
-      val frag = s"${System.getProperty("java.io.tmpdir")}/graft_compact_${graft.io.FileSkipping.pathKey(d, "v1")}/frag"
-      if (!new java.io.File(frag, "_SUCCESS").isFile)
-        graft.sources.Tables.load(s, d, "documents")
-          .repartition(64).write.mode("overwrite").parquet(frag)
-      frag
-    })
+    Artifacts.dir(d, "frag_docs", "v1") { frag =>
+      graft.sources.Tables.load(s, d, "documents")
+        .repartition(64).write.mode("overwrite").parquet(frag)
+    }
 
-  /** Build every one-time offline artifact this module's queries read
-    * (hive-partitioned layout, min/max skip index, IVF quantizer,
-    * compaction fixture, embedding-dim metadata) so bench charges them
-    * to index-build. Deliberately EXCLUDES the near-dup grouping:
+  /** The `graftseq` shard export of `documents` (8 shards) that the
+    * DSv2 read queries scan; `io_binary_shards_dsv2` times the write
+    * itself into its own output dir. */
+  private def docShardsOf(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Artifacts.dir(d, "gseq", "v1") { out =>
+      graft.sources.GraftSeqSource.writeShards(
+        graft.sources.Tables.load(s, d, "documents"), out, nShards = 8)
+    }
+
+  /** Every one-time offline artifact this module's queries read, by
+    * name, so bench's artifact phase builds (and charges) each one on
+    * its own. Deliberately EXCLUDES the near-dup grouping:
     * `dedup_neardup_groups` grades that computation itself. */
-  def prewarmArtifacts(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    dimOf(s, d)
-    partitionedEventsOf(s, d)
-    centroidsOf(s, d)
-    pqCodebooksOf(s, d)
-    fragmentedDocsOf(s, d)
-    minhashTruthOf(s, d)
-    rpThresholdsOf(s, d)
-    rpLeavesOf(s, d)
-    lshIndexOf(s, d)
-    graft.io.FileSkipping.ensureEventsByUser(s, d)
-    graft.io.FileSkipping.ensureEventsZOrder(s, d)
-  }
+  val artifacts: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Any)] = Seq(
+    ("emb-dim", dimOf),
+    ("part_ev", partitionedEventsOf),
+    ("ivf-centroids", centroidsOf),
+    ("pq-codebooks", pqCodebooksOf),
+    ("frag_docs", fragmentedDocsOf),
+    ("gseq", docShardsOf),
+    ("minhash-truth", minhashTruthOf),
+    ("rp-thresholds", rpThresholdsOf),
+    ("rpleaves", rpLeavesOf),
+    ("lshsigs", lshIndexOf),
+    ("skip_ev", graft.io.FileSkipping.ensureEventsByUser),
+    ("zorder_ev", graft.io.FileSkipping.ensureEventsZOrder(_, _)))
 
   /** Random-hyperplane LSH signature CTEs for the DuckDB oracle —
     * recomputes Similarity.hyperplanes' md5-derived plane components
@@ -1868,7 +1844,7 @@ object ExtQueries {
     QueryDef("text_rep_ratio",
       (s, d) => graft.sources.Tables.load(s, d, "documents")
         .select(col("doc_id"),
-          size(split(lower(col("text")), " ")).as("n_tokens"),
+          size(TextAnalysis.tokens(col("text"))).as("n_tokens"),
           size(graft.functions.TextHashFunctions.shingles60(col("text"), 3))
             .as("n_distinct"))
         .filter(col("n_tokens") >= 3)
@@ -1890,7 +1866,7 @@ object ExtQueries {
     // profile every filtering decision starts from. Integer bucket math.
     QueryDef("text_len_histogram",
       (s, d) => graft.sources.Tables.load(s, d, "documents")
-        .select((size(split(lower(col("text")), " ")).cast("long"))
+        .select((size(TextAnalysis.tokens(col("text"))).cast("long"))
           .as("n_tokens"))
         .select(expr("n_tokens div 50").as("bucket"))
         .groupBy(col("bucket")).agg(count(lit(1)).as("n_docs"))
@@ -3051,7 +3027,7 @@ object ExtQueries {
       (s, d) => {
         import org.apache.spark.sql.types._
         val docs = graft.sources.Tables.load(s, d, "documents")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_rt_${graft.io.FileSkipping.pathKey(d, "v1")}"
+        val out = Artifacts.output(d, "csv_rt")
         graft.io.Export.csv(docs, out)
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
@@ -3081,7 +3057,7 @@ object ExtQueries {
       (s, d) => {
         import org.apache.spark.sql.types._
         val docs = graft.sources.Tables.load(s, d, "documents")
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_rt_${graft.io.FileSkipping.pathKey(d, "v1")}"
+        val out = Artifacts.output(d, "jsonl_rt")
         docs.write.mode("overwrite").json(out)
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
@@ -3114,7 +3090,7 @@ object ExtQueries {
     // torn, or mis-decoded anywhere in the write→read loop hash-fails.
     QueryDef("io_binary_shards_dsv2",
       (s, d) => {
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_gseq_${graft.io.FileSkipping.pathKey(d, "v1")}"
+        val out = Artifacts.output(d, "gseq_out")
         graft.sources.GraftSeqSource.writeShards(
           graft.sources.Tables.load(s, d, "documents"), out, nShards = 8)
         graft.sources.GraftSeqSource.read(s, out)
@@ -3140,13 +3116,7 @@ object ExtQueries {
     // table, so a stale or wrong ledger hash-fails here.
     QueryDef("io_count_pushdown",
       (s, d) => {
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_gseq_${graft.io.FileSkipping.pathKey(d, "v1")}"
-        if (!new java.io.File(out).isDirectory ||
-            new java.io.File(out).listFiles().count(_.getName.endsWith(".gseq")) == 0 ||
-            !graft.sources.GraftSeqSource.hasManifestCounts(out))
-          graft.sources.GraftSeqSource.writeShards(
-            graft.sources.Tables.load(s, d, "documents"), out, nShards = 8)
-        graft.sources.GraftSeqSource.read(s, out)
+        graft.sources.GraftSeqSource.read(s, docShardsOf(s, d))
           .agg(count(lit(1)).as("n_docs"))
       },
       Some("SELECT count(*) AS n_docs FROM documents")),
@@ -3159,12 +3129,7 @@ object ExtQueries {
     // duplicates records under join pressure hash-fails.
     QueryDef("io_dsv2_join",
       (s, d) => {
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_gseq_${graft.io.FileSkipping.pathKey(d, "v1")}"
-        if (!new java.io.File(out).isDirectory ||
-            new java.io.File(out).listFiles().count(_.getName.endsWith(".gseq")) == 0)
-          graft.sources.GraftSeqSource.writeShards(
-            graft.sources.Tables.load(s, d, "documents"), out, nShards = 8)
-        val docs = graft.sources.GraftSeqSource.read(s, out)
+        val docs = graft.sources.GraftSeqSource.read(s, docShardsOf(s, d))
           .select(col("doc_id"))
         val emb = graft.sources.Tables.load(s, d, "embeddings")
           .select(col("vec_id"))
@@ -3183,12 +3148,7 @@ object ExtQueries {
     // of re-verifying the whole export.
     QueryDef("pipe_shard_manifest",
       (s, d) => {
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_gseq_${graft.io.FileSkipping.pathKey(d, "v1")}"
-        if (!new java.io.File(out).isDirectory ||
-            new java.io.File(out).listFiles().count(_.getName.endsWith(".gseq")) == 0)
-          graft.sources.GraftSeqSource.writeShards(
-            graft.sources.Tables.load(s, d, "documents"), out, nShards = 8)
-        graft.sources.GraftSeqSource.read(s, out)
+        graft.sources.GraftSeqSource.read(s, docShardsOf(s, d))
           .groupBy(pmod(col("doc_id"), lit(8)).as("shard"))
           .agg(count(lit(1)).as("n_records"),
             sum(length(col("text")) + 12).as("payload_bytes"),
@@ -3779,8 +3739,7 @@ object ExtQueries {
     // file counts are emitted and the oracle pins the expected values).
     QueryDef("io_compact_small_files",
       (s, d) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact_${graft.io.FileSkipping.pathKey(d, "v1")}"
-        val frag = fragmentedDocsOf(s, d); val comp = s"$base/compact"
+        val frag = fragmentedDocsOf(s, d); val comp = Artifacts.output(d, "compact")
         val (nBefore, nAfter) =
           graft.io.Compaction.compact(s, frag, comp, targetBytes = 64L * 1024 * 1024)
         s.read.parquet(comp).agg(

@@ -2474,23 +2474,19 @@ object R12Queries {
     // side shuffle — the bucketing contract pre-shuffles at write
     // time, the single biggest repeated-join win at 100 TB (the plan
     // law in R12QueriesSpec pins ≤ 1 exchange: only the final
-    // per-priority rollup moves data). Bucket metadata lives in the
-    // session catalog, so the tables are (re)registered per session
-    // from the memoized warehouse write.
+    // per-priority rollup moves data). The tables are
+    // `graft.sources.Bucketing`'s, the ones q3_bucketed reads.
     QueryDef("io_bucketed_join",
-      (s, d) => {
-        bucketedOrdersLineitem(s, d) match { case (ot, lt) =>
-          val o = s.table(ot)
-          val l = s.table(lt)
-          o.join(l, col("o_orderkey") === col("l_orderkey"))
-            .groupBy(col("o_orderpriority"))
-            .agg(count(lit(1)).as("n_lines"),
-              sum(floor(col("l_extendedprice") *
-                (lit(1.0) - col("l_discount")) * 100).cast("long"))
-                .as("revenue_cents"))
-            .orderBy(col("o_orderpriority"))
-        }
-      },
+      (s, d) =>
+        graft.sources.Bucketing.ordersBucketed(s, d)
+          .join(graft.sources.Bucketing.lineitemBucketed(s, d),
+            col("o_orderkey") === col("l_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n_lines"),
+            sum(floor(col("l_extendedprice") *
+              (lit(1.0) - col("l_discount")) * 100).cast("long"))
+              .as("revenue_cents"))
+          .orderBy(col("o_orderpriority")),
       Some("""SELECT o_orderpriority, count(*)::BIGINT AS n_lines,
              |  sum(floor(l_extendedprice * (1.0 - l_discount) * 100)
              |    ::BIGINT)::BIGINT AS revenue_cents
@@ -2599,30 +2595,4 @@ object R12Queries {
              |FROM bw, fin, nn WHERE bw.k = 1""".stripMargin)
     })
   )
-
-  /** Write-once 8-bucket twins of orders/lineitem on the order key,
-    * registered in this session's catalog. The physical write is
-    * memoized per sf-dir; a later session only re-registers. */
-  private[queries] def bucketedOrdersLineitem(
-      s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    val key = graft.io.FileSkipping.pathKey(d, "b8v1").replace('.', '_')
-    val (ot, lt) = (s"graft_orders_$key", s"graft_lineitem_$key")
-    this.synchronized {
-      if (!s.catalog.tableExists(ot)) {
-        graft.sources.Tables.load(s, d, "orders")
-          .write.mode("overwrite").bucketBy(8, "o_orderkey")
-          .sortBy("o_orderkey").option("path",
-            s"${System.getProperty("java.io.tmpdir")}/graft_bkt_$ot")
-          .saveAsTable(ot)
-      }
-      if (!s.catalog.tableExists(lt)) {
-        graft.sources.Tables.load(s, d, "lineitem")
-          .write.mode("overwrite").bucketBy(8, "l_orderkey")
-          .sortBy("l_orderkey").option("path",
-            s"${System.getProperty("java.io.tmpdir")}/graft_bkt_$lt")
-          .saveAsTable(lt)
-      }
-    }
-    (ot, lt)
-  }
 }

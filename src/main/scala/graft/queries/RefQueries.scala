@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.clean.Clean
 import graft.sync.{AsofJoin, EventPivot, Synchronize, TimeGrid}
 import graft.analytics.Stats
+import graft.sources.Tables
 
 /** Reference-surface operators (SURVEY.md §2) expressed over the
   * driver's parquet tables, each with a DuckDB oracle.
@@ -24,7 +25,7 @@ object RefQueries {
   private val TolUs = 10000000L // strict < 10 s, scaled from app.py:185's < 100 ms
 
   private def events(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.events(spark, dir)
+    Tables.events(spark, dir)
 
   /** The composed Y1-Y9 pipeline for one resample method, executed
     * under STATIC planning (the kcore/q_hits discipline, r16): the
@@ -59,17 +60,6 @@ object RefQueries {
     out
   }
 
-  /** The (min, max) event timestamp per sf dir — static metadata of a
-    * static table, memoized so the six grid-based queries don't each
-    * re-run the same scalar aggregate job. */
-  private val windowCache = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-  private def eventsWindowUs(spark: SparkSession, dir: String): (Long, Long) =
-    windowCache.getOrElseUpdate(dir, {
-      val r = events(spark, dir)
-        .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-      (r.getLong(0), r.getLong(1))
-    })
-
   /** Y5 on the 1-minute grid over the events window: events resampled
     * by `AsofJoin.uniformGrid`, with the per-ts max(value) dedupe (the
     * oracle's CTE `e`) fused into the tick aggregate via tieCol. The
@@ -77,14 +67,14 @@ object RefQueries {
     * rename it to `src_ts`. */
   private def y5Resample(s: SparkSession, d: String, method: String,
                          valueCols: Seq[String]): DataFrame = {
-    val (lo, hi) = eventsWindowUs(s, d)
+    val (lo, hi) = Tables.eventsSpanUs(s, d)
     AsofJoin.uniformGrid(s, Seq(AsofJoin.GridSeries(events(s, d), "ts", valueCols, "")),
       lo, MinuteUs, TimeGrid.tickCount(lo, hi, MinuteUs), method,
       tieCol = Some("value"))
   }
 
   private def minuteGrid(spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
-    val (lo, hi) = eventsWindowUs(spark, dir)
+    val (lo, hi) = Tables.eventsSpanUs(spark, dir)
     (TimeGrid.grid(spark, lo, hi, MinuteUs, tickCol = "tick"), lo,
       TimeGrid.tickCount(lo, hi, MinuteUs))
   }
@@ -288,7 +278,7 @@ object RefQueries {
     // Y4 — uniform 33 ms grid (app.py:160) over the first 60 s of events.
     QueryDef("y4_time_grid",
       (s, d) => {
-        val (lo, _) = eventsWindowUs(s, d)
+        val (lo, _) = Tables.eventsSpanUs(s, d)
         TimeGrid.grid(s, lo, lo + 60000000L, 33000L, tickCol = "tick").orderBy(col("tick"))
       },
       Some("""WITH w AS (SELECT epoch_us(min(ts)) AS lo FROM events)

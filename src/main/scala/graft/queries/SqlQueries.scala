@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
+import graft.io.Artifacts
 
 /** Relational / analytical breadth over the TPC-H-ish tables: grouped
   * aggregation, broadcast join + top-k, window analytics,
@@ -23,38 +24,31 @@ object SqlQueries {
 
   /** Maintained daily-aggregate state for `q_incremental_agg` — built
     * ONCE per sf dir (parquet artifact, like the memoized IVF
-    * quantizer) so the query path reads state + one day's delta and
-    * genuinely never rescans history. In production this table lives
-    * in the warehouse and THIS merge is what maintains it. */
-  private val aggStateCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * quantizer) from the days before `StateCut`, so the query path
+    * reads state + one day's delta and genuinely never rescans
+    * history. In production this table lives in the warehouse and THIS
+    * merge is what maintains it. */
   private[queries] def dailyStateOf(s: org.apache.spark.sql.SparkSession,
-                                    d: String, cut: String): String =
-    aggStateCache.getOrElseUpdate(d, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_aggstate_${graft.io.FileSkipping.pathKey(d, "v1")}"
+                                    d: String): String =
+    Artifacts.dir(d, "aggstate", "v1", StateCut) { path =>
       graft.sources.Tables.events(s, d)
-        .filter(to_date(col("ts")) < lit(cut).cast("date"))
+        .filter(to_date(col("ts")) < lit(StateCut).cast("date"))
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).as("sv"))
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   /** Maintained latest-per-user state table for the MERGE queries —
-    * the keyed-state twin of `dailyStateOf` (built once per dir; the
-    * query path reads state + delta, never the history). */
-  private val userStateCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def userStateOf(s: org.apache.spark.sql.SparkSession,
-                          d: String, cut: String): String =
-    userStateCache.getOrElseUpdate(d, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_userstate_${graft.io.FileSkipping.pathKey(d, "v1")}"
+    * the keyed-state twin of `dailyStateOf` (built once per dir from
+    * the events before `MergeCut`; the query path reads state + delta,
+    * never the history). */
+  private def userStateOf(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Artifacts.dir(d, "userstate", "v1", MergeCut) { path =>
       latestPerUser(graft.sources.Tables.events(s, d)
-        .filter(col("ts") < lit(cut).cast("timestamp")))
+        .filter(col("ts") < lit(MergeCut).cast("timestamp")))
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   /** Latest event per user on a unique (ts, event_id) order. */
   private def latestPerUser(ev: org.apache.spark.sql.DataFrame) = {
@@ -66,49 +60,43 @@ object SqlQueries {
 
   private val MergeCut = "2024-01-20"
 
-  /** Build every one-time maintained artifact this module's queries
-    * read (daily-agg state, latest-per-user state) so a bench run can
-    * charge them to index-build, not to the first query that happens
-    * to touch them — they are warehouse tables maintained offline, the
-    * exact analog of the bucketed-table build. */
-  def prewarmArtifacts(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    dailyStateOf(s, d, "2024-01-30")
-    userStateOf(s, d, MergeCut)
-    dayPartitionedCopyOf(s, d)
-    copurchaseEdgesOf(s, d)
-    schemaEvolvedDirOf(s, d)
-    joinStateOf(s, d, "2024-01-30")
-  }
+  /** The day the maintained MV states end and the delta begins. */
+  private val StateCut = "2024-01-30"
+
+  /** Every one-time maintained artifact this module's queries read, by
+    * name, so a bench run charges each to its artifact phase, not to
+    * the first query that happens to touch it — they are warehouse
+    * tables maintained offline, the exact analog of the bucketed-table
+    * build. */
+  val artifacts: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Any)] = Seq(
+    ("aggstate", dailyStateOf),
+    ("userstate", userStateOf),
+    ("dayow", dayPartitionedCopyOf),
+    ("coedges", copurchaseEdgesOf),
+    ("schemaevo", schemaEvolvedDirOf),
+    ("joinmv", joinStateOf))
 
   /** Maintained state for the incremental JOIN view
     * (`q_incremental_join_mv`): the cohort-enriched digest plus the
-    * user→first_day dim, both as of `cut`. The dim is MONOTONE (a
+    * user→first_day dim, both as of `StateCut`. The dim is MONOTONE (a
     * user's first day never moves later), which is what makes the
     * delta-join maintenance exact: history rows never need
     * re-enrichment when new days arrive. */
-  private val joinStateCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[queries] def joinStateOf(s: org.apache.spark.sql.SparkSession,
-                                   d: String, cut: String): String =
-    joinStateCache.getOrElseUpdate(d, {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_joinmv_" +
-        graft.io.FileSkipping.pathKey(d, "v1")
-      if (!new java.io.File(base, "_SUCCESS").isFile) {
-        val hist = graft.sources.Tables.events(s, d)
-          .filter(to_date(col("ts")) < lit(cut).cast("date"))
-        val dim = hist.groupBy(col("user_id"))
-          .agg(min(to_date(col("ts"))).as("first_day"))
-        dim.write.mode("overwrite").parquet(s"$base/dim")
-        hist.join(dim.withColumnRenamed("user_id", "du"),
-            col("user_id") === col("du"))
-          .groupBy(col("first_day").as("cohort_day"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,2)")).as("sv"))
-          .write.mode("overwrite").parquet(s"$base/enriched")
-        new java.io.File(base, "_SUCCESS").createNewFile()
-      }
-      base
-    })
+                                   d: String): String =
+    Artifacts.dir(d, "joinmv", "v1", StateCut) { base =>
+      val hist = graft.sources.Tables.events(s, d)
+        .filter(to_date(col("ts")) < lit(StateCut).cast("date"))
+      val dim = hist.groupBy(col("user_id"))
+        .agg(min(to_date(col("ts"))).as("first_day"))
+      dim.write.mode("overwrite").parquet(s"$base/dim")
+      hist.join(dim.withColumnRenamed("user_id", "du"),
+          col("user_id") === col("du"))
+        .groupBy(col("first_day").as("cohort_day"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).as("sv"))
+        .write.mode("overwrite").parquet(s"$base/enriched")
+    }
 
   /** Two-generation parquet dir for `io_schema_evolution`: generation
     * 1 (even doc_ids) was written before the `lang` column existed;
@@ -116,10 +104,8 @@ object SqlQueries {
     * the query then demonstrates the schema-merging READ, which is
     * the lakehouse reality after any additive schema migration. */
   private[queries] def schemaEvolvedDirOf(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_schemaevo_" +
-      graft.io.FileSkipping.pathKey(d, "v1")
-    if (!new java.io.File(base, "_SUCCESS").isFile) {
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    Artifacts.dir(d, "schemaevo", "v1") { base =>
       val docs = graft.sources.Tables.load(s, d, "documents")
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("n_chars"))
@@ -127,24 +113,18 @@ object SqlQueries {
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/gen=2")
-      new java.io.File(base, "_SUCCESS").createNewFile()
     }
-    base
-  }
 
   /** Maintained co-purchase edge table (support >= 2), the graph the
     * triangle/PageRank queries analyze — one-time graph ETL like the
     * other maintained-state artifacts (the build itself is what
-    * `q_copurchase_edges` times). Parquet-backed per sf dir, reused
-    * across sessions via the `_SUCCESS` marker. */
+    * `q_copurchase_edges` times). */
   private[queries] def copurchaseEdgesOf(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    // v2: the artifact now carries the support weight `w` so affinity
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    // v2: the artifact carries the support weight `w` so affinity
     // consumers (item-item CF) reuse the one co-partitioned pair join
     // instead of re-running it; graph consumers just project (p1, p2)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_coedges_" +
-      graft.io.FileSkipping.pathKey(d, "v2")
-    if (!new java.io.File(base, "_SUCCESS").isFile) {
+    Artifacts.dir(d, "coedges", "v2") { base =>
       val pp = graft.sources.Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       pp.select(col("l_orderkey"), col("l_partkey").as("p1"))
@@ -155,25 +135,19 @@ object SqlQueries {
         .filter(col("w") >= 2).select("p1", "p2", "w")
         .coalesce(1).write.mode("overwrite").parquet(base)
     }
-    base
-  }
 
   /** Day-partitioned scratch copy of events for `q_partition_overwrite`
-    * — one-time table maintenance (built here / in the bench index
-    * phase; reused across sessions via the `_SUCCESS` marker). The
-    * query path then times the partition overwrite itself. */
+    * — one-time table maintenance (built here / in the bench artifact
+    * phase). The query path then times the partition overwrite itself. */
   private[queries] def dayPartitionedCopyOf(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_dayow_" +
-      graft.io.FileSkipping.pathKey(d, "v1")
-    if (!new java.io.File(base, "_SUCCESS").isFile)
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    Artifacts.dir(d, "dayow", "v1") { base =>
       graft.sources.Tables.events(s, d)
         .select(col("ts"), col("event_type"),
           col("value").cast("decimal(18,2)").as("value"),
           to_date(col("ts")).as("day"))
         .write.mode("overwrite").partitionBy("day").parquet(base)
-    base
-  }
+    }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -624,9 +598,9 @@ object SqlQueries {
     // scanning three years of history on every refresh.
     QueryDef("q_incremental_agg",
       (s, d) => {
-        val cut = "2024-01-30"
+        val cut = StateCut
         // state: the maintained parquet artifact (built once per dir)
-        val state = s.read.parquet(dailyStateOf(s, d, cut))
+        val state = s.read.parquet(dailyStateOf(s, d))
         // delta: ONE day's scan (on a date-partitioned layout — see
         // io_partitioned_prune — this scan would open one partition)
         val delta = graft.sources.Tables.events(s, d)
@@ -967,7 +941,7 @@ object SqlQueries {
     // contract of incremental state maintenance.
     QueryDef("q_merge_upsert",
       (s, d) => {
-        val target = s.read.parquet(userStateOf(s, d, MergeCut))
+        val target = s.read.parquet(userStateOf(s, d))
         val delta = latestPerUser(graft.sources.Tables.events(s, d)
           .filter(col("ts") >= lit(MergeCut).cast("timestamp")))
         graft.operators.Merge.upsert(target, delta, Seq("user_id"))
@@ -987,7 +961,7 @@ object SqlQueries {
     // branches (update / insert / keep / delete) in one result.
     QueryDef("q_merge_cdc",
       (s, d) => {
-        val target = s.read.parquet(userStateOf(s, d, MergeCut))
+        val target = s.read.parquet(userStateOf(s, d))
         val delta = latestPerUser(graft.sources.Tables.events(s, d)
           .filter(col("ts") >= lit(MergeCut).cast("timestamp")))
         graft.operators.Merge.upsert(target, delta, Seq("user_id"),
@@ -3386,11 +3360,11 @@ object SqlQueries {
     // you re-enrich one partition, never the history.
     QueryDef("q_incremental_join_mv",
       (s, d) => {
-        val base = joinStateOf(s, d, "2024-01-30")
+        val base = joinStateOf(s, d)
         val dimState = s.read.parquet(s"$base/dim")
         val state = s.read.parquet(s"$base/enriched")
         val delta = graft.sources.Tables.events(s, d)
-          .filter(to_date(col("ts")) >= lit("2024-01-30").cast("date"))
+          .filter(to_date(col("ts")) >= lit(StateCut).cast("date"))
         val dimDelta = delta.groupBy(col("user_id"))
           .agg(min(to_date(col("ts"))).as("first_day"))
         val dim = dimState.unionAll(dimDelta)
@@ -3857,8 +3831,8 @@ object SqlQueries {
     // free once the finest maintained grain exists.
     QueryDef("q_mv_routing",
       (s, d) => {
-        val cut = "2024-01-30"
-        val state = s.read.parquet(dailyStateOf(s, d, cut))
+        val cut = StateCut
+        val state = s.read.parquet(dailyStateOf(s, d))
         val tail = graft.sources.Tables.events(s, d)
           .filter(to_date(col("ts")) >= lit(cut).cast("date"))
           .groupBy(to_date(col("ts")).as("day"), col("event_type"))
@@ -7957,8 +7931,7 @@ object SqlQueries {
     QueryDef("q_gdpr_purge",
       (s, d) => {
         val ev = graft.sources.Tables.events(s, d)
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_gdpr_" +
-          graft.io.FileSkipping.pathKey(d, "v1")
+        val out = Artifacts.output(d, "gdpr")
         ev.filter(pmod(col("user_id"), lit(97)) =!= 0)
           .write.mode("overwrite").parquet(out)
         val back = s.read.parquet(out)

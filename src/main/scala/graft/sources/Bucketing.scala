@@ -9,45 +9,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is THE recurring shuffle; bucketing both sides by the order key
   * removes it from every query that follows.
   *
-  * Tables are written through the session catalog (`saveAsTable` with
-  * `bucketBy`) into the Spark warehouse dir; the bucketing metadata
-  * lives in the catalog, which is what lets the planner elide the
-  * exchanges. One-time per (session, sf dir), memoized. */
+  * The bucketed files are one `Artifacts` directory per sf dir, built
+  * once and reused across JVMs. The bucketing metadata lives in the
+  * session catalog (that is what lets the planner elide the
+  * exchanges), so each table is registered as an external table over
+  * its directory when the catalog does not know it yet. */
 object Bucketing {
 
   val NumBuckets = 8
 
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (String, String)]
+  private val Keys = Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey")
+
+  /** Catalog name of the bucketed table stored at `loc`: derived from
+    * the location, so a name the catalog knows always points there. */
+  private def tableName(table: String, loc: String): String =
+    s"graft_${table}_b" + java.util.UUID.nameUUIDFromBytes(
+      loc.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.replace("-", "")
 
   /** Ensure bucketed twins of orders/lineitem exist for `dir`; returns
     * (ordersTable, lineitemTable) catalog names. */
-  def ensureOrderBucketed(spark: SparkSession, dir: String): (String, String) =
-    built.getOrElseUpdate((System.identityHashCode(spark), dir), {
-      val suffix = graft.io.FileSkipping.pathKey(dir, "v1")
-      val oTbl = s"graft_orders_b$suffix"
-      val liTbl = s"graft_lineitem_b$suffix"
-      // a previous SESSION may have left the managed location on disk
-      // without this catalog knowing the table — overwrite mode can't
-      // reclaim a location it doesn't own, so clear both explicitly
-      def reset(tbl: String): Unit = {
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val path = new org.apache.hadoop.fs.Path(s"$wh/$tbl")
-        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(path)) fs.delete(path, true)
+  def ensureOrderBucketed(spark: SparkSession, dir: String): (String, String) = {
+    val base = graft.io.Artifacts.dir(dir, "bucketed", "v1", NumBuckets) { base =>
+      Keys.foreach { case (t, k) =>
+        Tables.load(spark, dir, t)
+          .write.mode("overwrite")
+          .bucketBy(NumBuckets, k).sortBy(k)
+          .option("path", s"$base/$t")
+          .format("parquet").saveAsTable(tableName(t, s"$base/$t"))
       }
-      reset(oTbl); reset(liTbl)
-      spark.read.parquet(s"$dir/orders.parquet")
-        .write.mode("overwrite")
-        .bucketBy(NumBuckets, "o_orderkey").sortBy("o_orderkey")
-        .format("parquet").saveAsTable(oTbl)
-      spark.read.parquet(s"$dir/lineitem.parquet")
-        .write.mode("overwrite")
-        .bucketBy(NumBuckets, "l_orderkey").sortBy("l_orderkey")
-        .format("parquet").saveAsTable(liTbl)
-      (oTbl, liTbl)
-    })
+    }
+    val Seq(o, l) = Keys.map { case (t, k) =>
+      val tbl = tableName(t, s"$base/$t")
+      if (!spark.catalog.tableExists(tbl))
+        spark.sql(s"CREATE TABLE $tbl (${spark.read.parquet(s"$base/$t").schema.toDDL}) " +
+          s"USING parquet CLUSTERED BY ($k) SORTED BY ($k) INTO $NumBuckets BUCKETS " +
+          s"LOCATION '$base/$t'")
+      tbl
+    }
+    (o, l)
+  }
 
   def ordersBucketed(spark: SparkSession, dir: String): DataFrame =
     spark.table(ensureOrderBucketed(spark, dir)._1)

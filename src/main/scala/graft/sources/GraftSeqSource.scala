@@ -356,11 +356,6 @@ object GraftSeqSource {
     } finally w.close()
   }
 
-  /** True iff a COUNT(*) over this dir would answer from the manifest
-    * (fixture guard for queries that demonstrate the pushdown). */
-  def hasManifestCounts(dir: String): Boolean =
-    readManifestCounts(dir).isDefined
-
   /** Per-shard row counts iff the manifest is valid AND carries them. */
   private[sources] def readManifestCounts(dir: String): Option[Map[Long, Long]] =
     readManifest(dir).flatMap { _ =>

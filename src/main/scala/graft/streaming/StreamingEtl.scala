@@ -409,8 +409,6 @@ object StreamingEtl {
   // tag's last file-sink output (only a tag's NEXT run reclaims it).
   private val stageCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private val maxUsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   locally {
     val _ = sys.addShutdownHook {
       stageCache.values().forEach(p => rmTree(p))
@@ -452,12 +450,6 @@ object StreamingEtl {
       }
     }
   }
-
-  /** max event-time micros of the events table, memoized per dir. */
-  private def eventsMaxUs(spark: SparkSession, dir: String): Long =
-    maxUsCache.computeIfAbsent(dir, _ =>
-      Tables.events(spark, dir)
-        .agg(max(unix_micros(col("ts")))).head().getLong(0)).longValue()
 
   /** Build-once scratch dir keyed by (kind, dir): `build` populates it
     * on first use; later calls (bench trials) reuse the same files. */
@@ -502,7 +494,7 @@ object StreamingEtl {
       rows: Seq[(Long, Long, String)], horizonDays: Int): DataFrame = {
     import spark.implicits._
     val rawSchema = Tables.eventsRawSchema(spark, dir)
-    val sentinelUs = eventsMaxUs(spark, dir) +
+    val sentinelUs = Tables.eventsSpanUs(spark, dir)._2 +
       horizonDays.toLong * 86400 * 1000000
     rows.map { case (id, uid, typ) => (id, sentinelUs, uid, typ, 0.0, "") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")

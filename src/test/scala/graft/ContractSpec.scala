@@ -100,4 +100,24 @@ class ContractSpec extends GraftSpec {
     val bad = names.filterNot(n => allowed.exists(a => n.endsWith(s": $a")))
     assert(bad.isEmpty, s"env knobs read outside the allowed set:\n${bad.mkString("\n")}")
   }
+
+  test("per-dataset artifacts live in graft.io.Artifacts only") {
+    // the store is the one module that knows where an artifact lives
+    // (under java.io.tmpdir, by pathKey) and when it can be reused
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    def read(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val srcs = files(new java.io.File("src/main"))
+    assert(srcs.exists(_.getName == "Artifacts.scala"))
+    val outside = for {
+      f <- srcs if f.getName != "Artifacts.scala"
+      token <- Seq("getProperty(\"java.io.tmpdir\")", "pathKey(") if read(f).contains(token)
+    } yield s"${f.getName}: $token"
+    assert(outside.isEmpty, s"artifact paths resolved outside Artifacts:\n${outside.mkString("\n")}")
+    // a query module memoizes through the store, never a map of its own
+    val memos = files(new java.io.File("src/main/scala/graft/queries"))
+      .filter(f => read(f).contains("TrieMap")).map(_.getName)
+    assert(memos.isEmpty, s"TrieMap memos under queries/: ${memos.mkString(", ")}")
+  }
 }

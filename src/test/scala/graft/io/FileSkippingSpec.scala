@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** File-skipping layout hardening: observed-range quantization before
-  * the morton interleave (wide key domains must still prune), md5 path
-  * keys, and single-read index planning. */
+  * the morton interleave (wide key domains must still prune) and
+  * single-read index planning. */
 class FileSkippingSpec extends GraftSpec {
 
   test("quantize16 maps the observed range onto [0, 65535] monotonically") {
@@ -51,22 +51,5 @@ class FileSkippingSpec extends GraftSpec {
       .filter(col("user_id").between(1000000L, 1200000L) &&
         col("value") >= 0.0 && col("value") < 100000.0).count()
     assert(pruned === full)
-  }
-
-  test("pathKey is stable, filesystem-safe, and collision-resistant") {
-    val a = FileSkipping.pathKey("/data/x", "v1")
-    assert(a === FileSkipping.pathKey("/data/x", "v1"))
-    // <dataset>_<generation>: the dataset segment hashes the path
-    // ALONE so the GC prefix can never cross datasets
-    assert(a.matches("[0-9a-f]{8}_[0-9a-f]{16}"))
-    assert(a !== FileSkipping.pathKey("/data/y", "v1"))
-    assert(a.split("_")(0) !== FileSkipping.pathKey("/data/y", "v1").split("_")(0),
-      "different datasets must differ in the GC-prefix segment")
-    // version tag busts stale layouts — but only the GENERATION
-    // segment moves; same dataset keeps the same GC prefix
-    val v2 = FileSkipping.pathKey("/data/x", "v2")
-    assert(a !== v2)
-    assert(a.split("_")(0) === v2.split("_")(0),
-      "same dataset must share the GC-prefix segment across versions")
   }
 }
