@@ -1,6 +1,7 @@
 package graft.io
 
 import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
@@ -20,22 +21,28 @@ import org.apache.spark.sql.SparkSession
   * parameter. A directory is reused only when it holds [[Marker]],
   * which the store writes after `build` returns; a directory without
   * it (a build that threw, or one a killed JVM left half-written) is
-  * deleted and rebuilt. Before a build, stale generations of the same
-  * kind and dataset are collected. Layouts therefore persist across
-  * JVMs (table maintenance is durable, not session state), and a
-  * regenerated dataset or a bumped version tag invalidates them.
+  * deleted and rebuilt. The marker records the dataset's qualified
+  * path. Before a build, stale generations of the same kind and
+  * dataset are collected, and so is every directory whose recorded
+  * dataset no longer exists (a test's temp dataset). Layouts therefore
+  * persist across JVMs (table maintenance is durable, not session
+  * state), and a regenerated dataset or a bumped version tag
+  * invalidates them.
   *
   * In-memory artifacts ([[memo]], [[sessionMemo]]) are memoized per
   * (kind, dataset) for the life of the JVM, or of a session when the
   * value is bound to one (a DataFrame). */
 object Artifacts {
 
-  /** Written into an artifact directory once its build has returned.
-    * Spark's file listing skips names starting with `_`, so a parquet
-    * read of the directory never sees it. */
+  /** Written into an artifact directory once its build has returned;
+    * it holds the dataset's qualified path. Spark's file listing skips
+    * names starting with `_`, so a parquet read of the directory never
+    * sees it. */
   val Marker = "_GRAFT_ARTIFACT"
 
   private def base: String = System.getProperty("java.io.tmpdir")
+
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** The directory of artifact `kind` of `dataset`, built by `build`
     * (which gets the path and writes there) unless a finished build is
@@ -46,9 +53,12 @@ object Artifacts {
     if (!new File(out, Marker).isFile) {
       deleteTree(out)
       gcStaleSiblings(out)
+      gcOrphans()
       build(out.getPath)
       Files.createDirectories(out.toPath)
-      Files.write(new File(out, Marker).toPath, Array.emptyByteArray)
+      val ds = new org.apache.hadoop.fs.Path(dataset)
+      val qualified = ds.getFileSystem(hadoopConf).makeQualified(ds).toString
+      Files.write(new File(out, Marker).toPath, qualified.getBytes(UTF_8))
     }
     out.getPath
   }
@@ -100,7 +110,7 @@ object Artifacts {
 
   private def md5(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(s.getBytes(UTF_8))
       .map(b => f"$b%02x").mkString
 
   /** name:size:mtime of each parquet entry directly under `sfDir` —
@@ -116,7 +126,7 @@ object Artifacts {
     * cross-JVM freshness. */
   private def dirFingerprint(sfDir: String): String = memo("fingerprint", sfDir) {
     val path = new org.apache.hadoop.fs.Path(sfDir)
-    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = path.getFileSystem(hadoopConf)
     def list(p: org.apache.hadoop.fs.Path) =
       try fs.listStatus(p).toSeq catch { case _: java.io.IOException => Seq.empty }
     list(path).filter(_.getPath.getName.endsWith(".parquet"))
@@ -141,6 +151,25 @@ object Artifacts {
     Option(out.getParentFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(prefix) && f.getName != name)
       .foreach(deleteTree)
+  }
+
+  /** Removes every artifact directory whose marker names a dataset
+    * that no longer exists: nothing can ask for its key again. A
+    * marker that names no dataset (or cannot be read) keeps its
+    * directory. */
+  private def gcOrphans(): Unit = {
+    def gone(dataset: String) = {
+      val p = new org.apache.hadoop.fs.Path(dataset)
+      try !p.getFileSystem(hadoopConf).exists(p) catch { case _: java.io.IOException => false }
+    }
+    Option(new File(base).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("graft_"))
+      .foreach { d =>
+        val dataset =
+          try new String(Files.readAllBytes(new File(d, Marker).toPath), UTF_8)
+          catch { case _: java.io.IOException => "" }
+        if (dataset.nonEmpty && gone(dataset)) deleteTree(d)
+      }
   }
 
   private def deleteTree(f: File): Unit =

@@ -1330,9 +1330,9 @@ object R15Queries {
             .as("c1"),
             sum(when(col("us") >= col("m"), 1L).otherwise(0L))
               .as("c2"))
-        val spine = broadcast(s.range(1, 8).select(col("id").as("dw"))
-          .crossJoin(s.range(0, 24).select(col("id").as("hr"))))
-        val cells = spine.join(cnt, Seq("dw", "hr"), "left")
+        val spine = s.range(1, 8).select(col("id").as("dw"))
+          .crossJoin(s.range(0, 24).select(col("id").as("hr")))
+        val cells = spine.join(broadcast(cnt), Seq("dw", "hr"), "left")
           .select(coalesce(col("c1"), lit(0L)).as("c1"),
             coalesce(col("c2"), lit(0L)).as("c2"))
         val tot = broadcast(cells.agg(sum(col("c1")).as("n1"),

@@ -267,12 +267,14 @@ object StreamingEtl {
     * streaming runs (they are sequential in Bench/Verify anyway). */
   private def withStreamConf[T](spark: SparkSession, needsFlush: Boolean,
       rowsHint: Long)(body: => T): T = synchronized {
-    // state-store checkpoints on the fastest local medium (tmpfs when
-    // available): every micro-batch pays per-partition delta-file
-    // write+fsync on this path, and the default temp checkpoint lands
-    // on disk — measured as task time far above task CPU in the
-    // stateful stages. A cluster would point this at fast local/HDFS
-    // storage the same way. Scratch is reclaimed after the run.
+    // checkpoints on tmpfs when available (see scratchDir), reclaimed
+    // after the run. Every checkpoint file (offsets and commits logs,
+    // state-store files, a file sink's _spark_metadata) goes through
+    // LocalCheckpointFileManager: Hadoop's local file system without
+    // the native library forks a `chmod` per created file and dir and a
+    // `readlink` per rename: 264 processes per q_stream_update_mode
+    // run, 0 with the manager (its warm run 1.01 → 0.69 s at sf0.01 on
+    // 4 cores; walCommit + commitOffsets about 30 → 2 ms per batch).
     val ckptBase = scratchDir("graft_ckpt")
     // throughput-aware state partitioning: 4 partitions is right when
     // the per-store fixed load+commit cost dominates (the bench-scale
@@ -291,6 +293,8 @@ object StreamingEtl {
         rowsHint / 25000L))
     try QueryDef.withConf(spark,
         "spark.sql.streaming.checkpointLocation" -> ckptBase.toString,
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[LocalCheckpointFileManager].getName,
         "spark.sql.shuffle.partitions" -> parts.toString,
         "spark.sql.streaming.noDataMicroBatches.enabled" ->
           needsFlush.toString)(body)
@@ -371,13 +375,12 @@ object StreamingEtl {
   }
 
   /** Scratch base for stream staging, checkpoints and state stores:
-    * the micro-batch WAL fsyncs offsets/commits EVERY batch, so on a
-    * disk-backed temp dir each streaming query pays a fixed multi-
-    * batch fsync tax that its DuckDB batch twin never sees. A
-    * RAM-backed tmpfs (/dev/shm) makes those fsyncs memory writes;
-    * falls back to java.io.tmpdir where no tmpfs exists. Production
-    * clusters point checkpoints at durable storage — this is the
-    * LOCAL-HARNESS choice only, correctness never depends on it. */
+    * every micro-batch writes its offsets and commits log entries and
+    * state files here, and a RAM-backed tmpfs (/dev/shm) keeps those
+    * writes in memory; falls back to java.io.tmpdir where no tmpfs
+    * exists. Production clusters point checkpoints at durable storage
+    * — this is the LOCAL-HARNESS choice only, correctness never
+    * depends on it. */
   private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) &&
@@ -756,9 +759,10 @@ object StreamingEtl {
     // (hash-partitioned rows of every window land in every file); TWO
     // files suffice for that — every window is emitted in batch 0 and
     // re-emitted updated in batch 1, which is the Update-mode point.
-    // A third file only re-pays the ~0.65 s per-batch floor without
-    // demonstrating anything new; the latest emission per key is
-    // split-count-invariant.
+    // A third file only re-pays a micro-batch's fixed cost (warm
+    // triggerExecution 0.2–0.4 s per batch at sf0.1 on 4 cores)
+    // without demonstrating anything new; the latest emission per key
+    // is split-count-invariant.
     val in = splitStream(spark, "upd", dir, 2)(tsTypeValue(spark, dir))
     val log = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     @volatile var outSchema: StructType = null
@@ -809,9 +813,9 @@ object StreamingEtl {
     // TWO staged files: the recovery demonstration needs exactly (a)
     // one batch committed before the crash, (b) a crash, (c) the
     // crashed batch replayed from the WAL after restart; a third file
-    // only re-runs the padded tail at ~0.65 s per batch (measured
-    // addBatch+commit at sf0.1). The Complete-mode result over all
-    // input is split-count-invariant, so the oracle (the batch
+    // only re-runs the padded tail at about 0.3 s per batch (warm
+    // triggerExecution at sf0.1 on 4 cores). The Complete-mode result
+    // over all input is split-count-invariant, so the oracle (the batch
     // tumbling aggregate) does not depend on the file count.
     val agg = tumblingCounts(splitStream(spark, "rec", dir, 2)(tsTypeValue(spark, dir)))
     val cp = scratchDir("graft_rec_cp")

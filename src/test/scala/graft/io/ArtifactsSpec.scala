@@ -92,6 +92,25 @@ class ArtifactsSpec extends GraftSpec {
     }
   }
 
+  test("a build collects the artifacts of a dataset that no longer exists") {
+    withTmpdir { root =>
+      def build(d: String) = Artifacts.dir(d, "orphan", "v1") { out =>
+        Files.createDirectories(new File(out).toPath)
+      }
+      val temp = dataset(root, "temp", 10)
+      val gone = build(temp)
+      assert(new String(Files.readAllBytes(new File(gone, Artifacts.Marker).toPath), "UTF-8")
+        === s"file:$temp", "the marker records the qualified dataset path")
+      Files.walk(new File(temp).toPath).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+      val kept = build(dataset(root, "kept", 10))
+      assert(!new File(gone).exists(), "the orphaned artifact is collected")
+      assert(marked(kept))
+      assert((build(dataset(root, "other", 10)) !== kept) && marked(kept),
+        "an artifact whose dataset exists stays")
+    }
+  }
+
   test("spark.read.parquet of an artifact directory ignores the marker") {
     withTmpdir { root =>
       val d = dataset(root, "ds", 10)
