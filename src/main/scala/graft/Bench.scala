@@ -63,10 +63,10 @@ object Bench {
     val only = args.headOption.map(SparkEntry.names)
     val spark = Graft.session()
     warmUp(spark, sfDir)
-    val indexBuildSec = buildArtifacts(spark, sfDir)
+    val artifactSec = buildArtifacts(spark, sfDir)
     val fullPath = outPath("bench_full", only)
     val names = only.getOrElse(SparkEntry.queries.keys.toSeq).distinct.sorted
-    val (fullJson, line) = run(spark, sfDir, names, indexBuildSec, fullPath)
+    val (fullJson, line) = run(spark, sfDir, names, artifactSec, fullPath)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), fullJson + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
@@ -91,9 +91,11 @@ object Bench {
 
   /** Times `names` through the collector with adaptive trials; returns
     * the full JSON (per-query medians, first-trial jobs and layer
-    * metrics) and the compact stdout line that points at `fullPath`. */
+    * metrics, `artifactSec` as `artifact_sec` and its sum as
+    * `index_build_sec`) and the compact stdout line that points at
+    * `fullPath`. */
   def run(spark: SparkSession, sfDir: String, names: Seq[String],
-      indexBuildSec: Double, fullPath: String): (String, String) = {
+      artifactSec: Seq[(String, Double)], fullPath: String): (String, String) = {
     val queries = SparkEntry.queries
     val probe = new Probe(spark)
     val benchStart = System.nanoTime()
@@ -178,8 +180,9 @@ object Bench {
       .map { case (k, _, jobs, _) => "\"" + k + "\":" + jobs }.mkString("{", ",", "}")
     val layersJson = firstPass
       .map { case (k, _, _, layer) => "\"" + k + "\":" + layer }.mkString("{", ",", "}")
+    val indexBuildSec = artifactSec.map(_._2).sum
     val head = f""""metric":"total_median","value":$total%.3f,"unit":"sec","trials":$Trials,"short_trialed":$shortTrialed,"total_min":$totalMin%.3f,"total_max":$totalMax%.3f,"noisiest":"$noisyName","noisiest_maxmin_ratio":$noisyRatio%.2f,"n_queries":${results.size},"index_build_sec":$indexBuildSec%.3f,"failed":$failedJson"""
-    val fullJson = s"""{$head,"queries":$qs,"jobs":$jobsJson,"layers":$layersJson,"sf":"$sfDir"}"""
+    val fullJson = s"""{$head,"artifact_sec":${secJson(artifactSec)},"queries":$qs,"jobs":$jobsJson,"layers":$layersJson,"sf":"$sfDir"}"""
 
     val byName = results.map { case (k, med, _, _) => k -> med }.toMap
     val headline = Headline.filter(byName.contains)
@@ -200,34 +203,36 @@ object Bench {
     * before a bench): every artifact of `graft.io.Artifacts` the
     * queries read — the bucketed orders/lineitem tables, the
     * hive-partitioned, range-clustered and z-ordered layouts, the ANN
-    * indexes and quantizers, the maintained MV state tables and the
-    * input fixtures — plus any `extra` builds. Building them here
-    * means each query times the operation it exists to demonstrate
-    * (shuffle-free join, pruned read, ANN search, partial-merge
-    * refresh), not offline table maintenance; the returned build
-    * seconds still ship in the JSON so the cost stays machine-readable
-    * next to the query times. On-disk artifacts persist, so a second
-    * JVM on the same sf dir reuses them and this phase only checks
-    * their markers and recomputes the in-memory ones.
+    * indexes and quantizers, the maintained MV state tables, the input
+    * fixtures and the stream stages. Building them here means each
+    * query times the operation it exists to demonstrate (shuffle-free
+    * join, pruned read, ANN search, partial-merge refresh, a stream
+    * replay), not offline table maintenance; the returned seconds per
+    * artifact label still ship in the JSON so the cost stays
+    * machine-readable next to the query times. On-disk artifacts
+    * persist, so a second JVM on the same sf dir reuses them and this
+    * phase only checks their markers and recomputes the in-memory ones.
     *
     * Each artifact gets its own try: a failure in one must not abort
     * the others, or their build cost silently lands on whichever query
     * first touches them — exactly the attribution skew this phase
     * exists to prevent. A failure names its artifact. */
-  def buildArtifacts(spark: SparkSession, sfDir: String,
-      extra: Seq[(String, () => Unit)] = Nil): Double = {
-    val b0 = System.nanoTime()
-    val all = ("bucketed", graft.sources.Bucketing.ensureOrderBucketed _) +:
-      (graft.queries.ExtQueries.artifacts ++ graft.queries.SqlQueries.artifacts)
-    (all.map { case (label, build) => label -> (() => { build(spark, sfDir); () }) } ++ extra)
-      .foreach { case (label, build) =>
-        try build()
+  def buildArtifacts(spark: SparkSession, sfDir: String): Seq[(String, Double)] =
+    (("bucketed", graft.sources.Bucketing.ensureOrderBucketed _) +:
+      (graft.queries.ExtQueries.artifacts ++ graft.queries.SqlQueries.artifacts ++
+        graft.streaming.StreamingEtl.artifacts))
+      .map { case (label, build) =>
+        val t0 = System.nanoTime()
+        try build(spark, sfDir)
         catch { case e: Throwable =>
           System.err.println(s"[bench] artifact build '$label' at '$sfDir' failed: ${e.getMessage}")
         }
+        label -> (System.nanoTime() - t0) / 1e9
       }
-    (System.nanoTime() - b0) / 1e9
-  }
+
+  /** `{"label":seconds,…}` of an artifact phase. */
+  def secJson(sec: Seq[(String, Double)]): String =
+    sec.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
 
   /** Session warm-up: JVM + codegen + parquet footer reads, so query #1
     * doesn't absorb startup; `names` run once each. The grid-kernel query warms the as-of

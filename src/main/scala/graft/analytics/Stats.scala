@@ -16,6 +16,40 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
+  /** Φ⁻¹(p) as Acklam's rational approximation, emitted as ONE SQL
+    * string fed verbatim to Spark `expr()` AND the DuckDB oracle (the
+    * Lanczos-Γ precedent of the R13 queries): neither engine has a
+    * probit/erfinv builtin, and sharing the literal expression makes
+    * the transcendental bit-identical up to the two engines' ln/sqrt
+    * (1-ulp, absorbed by the callers' quantization). Both spell the
+    * natural log `ln`. Valid for p ∈ (0,1); |relative error| < 1.15e-9
+    * (Acklam 2003, public). */
+  def probitSql(p: String): String = {
+    val a = Seq("-3.969683028665376e+01", "2.209460984245205e+02",
+      "-2.759285104469687e+02", "1.383577518672690e+02",
+      "-3.066479806614716e+01", "2.506628277459239e+00")
+    val b = Seq("-5.447609879822406e+01", "1.615858368580409e+02",
+      "-1.556989798598866e+02", "6.680131188771972e+01",
+      "-1.328068155288572e+01")
+    val c = Seq("-7.784894002430293e-03", "-3.223964580411365e-01",
+      "-2.400758277161838e+00", "-2.549732539343734e+00",
+      "4.374664141464968e+00", "2.938163982698783e+00")
+    val dd = Seq("7.784695709041462e-03", "3.224671290700398e-01",
+      "2.445134137142996e+00", "3.754408661907416e+00")
+    def horner(cs: Seq[String], v: String) =
+      cs.tail.foldLeft(s"(${cs.head})")((acc, ci) => s"($acc * $v + ($ci))")
+    val qc = s"(($p) - 0.5)"
+    val rc = s"($qc * $qc)"
+    val central =
+      s"(${horner(a, rc)} * $qc / (${horner(b, rc)} * $rc + 1.0))"
+    val ql = s"sqrt(-2.0 * ln(($p)))"
+    val low = s"(${horner(c, ql)} / (${horner(dd, ql)} * $ql + 1.0))"
+    val qh = s"sqrt(-2.0 * ln(1.0 - ($p)))"
+    val high = s"(-(${horner(c, qh)} / (${horner(dd, qh)} * $qh + 1.0)))"
+    s"(CASE WHEN ($p) < 0.02425 THEN $low" +
+      s" WHEN ($p) > 0.97575 THEN $high ELSE $central END)"
+  }
+
   /** A1 — min/max of a timestamp column, one row. */
   def tsExtremes(df: DataFrame, tsCol: String): DataFrame =
     df.agg(min(col(tsCol)).as("ts_min"), max(col(tsCol)).as("ts_max"))

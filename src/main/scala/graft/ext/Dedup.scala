@@ -29,6 +29,9 @@ object Dedup {
   def strHash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** `strHash60` as DuckDB SQL over the expression `s`, for oracles. */
+  def strHash60Sql(s: String): String = s"('0x'||substring(md5($s),1,15))::BIGINT"
+
   /** Distinct word n-gram shingles of the text (1-based element_at,
     * mirrored by DuckDB 1-based list indexing). Guarded: texts shorter
     * than n tokens yield an empty array (Spark's `sequence(1, 0)`

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 /** The one store for per-dataset artifacts: everything a query reads
   * that is built once from a dataset and reused by later queries
   * (bucketed tables, file-skipping layouts, ANN indexes, maintained MV
-  * state, input fixtures) and the small per-dataset facts computed
+  * state, input fixtures, stream input stages) and the small per-dataset facts computed
   * once per JVM (embedding width, the events time span, trained
   * quantizers). No other module decides where such an artifact lives
   * or when it can be reused.

@@ -386,9 +386,6 @@ object ExtQueries {
        |          sum(CASE WHEN list_dot_product(t.v, pl.pv) > 0 THEN (1::BIGINT << pl.p) ELSE 0 END)::BIGINT AS sig
        |        FROM t$sfx t, pl$sfx pl GROUP BY t.vec_id, pl.tbl)""".stripMargin
 
-  /** DuckDB fragments mirroring Dedup/TextAnalysis column expressions. */
-  private def dkHash60(s: String) = s"('0x'||substring(md5($s),1,15))::BIGINT"
-
   /** IVF quantizer CTE chain for the DuckDB oracle — replays
     * Similarity.fitCentroids' EXACT schedule: round(x·1000) integer
     * grid, 16 seeds ranked by md5('ivfseed:'||vec_id), `iters` Lloyd
@@ -443,7 +440,7 @@ object ExtQueries {
        |${pfx}evd AS (SELECT vec_id, e::DOUBLE[] AS ed,
        |          list_dot_product(e::DOUBLE[], e::DOUBLE[]) AS n2v FROM ${pfx}ev),
        |${pfx}seed AS (SELECT vec_id,
-       |           row_number() OVER (ORDER BY ${dkHash60(s"'ivfseed:'||vec_id")}, vec_id) - 1 AS cell
+       |           row_number() OVER (ORDER BY ${Dedup.strHash60Sql(s"'ivfseed:'||vec_id")}, vec_id) - 1 AS cell
        |         FROM ${pfx}ev QUALIFY cell < $nCentroids),
        |${pfx}c0 AS (SELECT ${pfx}seed.cell, ${pfx}ev.e AS ci, ${pfx}ev.e::DOUBLE[] AS cd
        |       FROM ${pfx}seed JOIN ${pfx}ev USING (vec_id)),
@@ -483,7 +480,7 @@ object ExtQueries {
       s"SELECT doc_id, $b AS band, $key AS bandkey FROM mh"
     }.mkString("\n  UNION ALL ")
     s"""$shingleCte,
-       |hs AS MATERIALIZED (SELECT doc_id, sh, list_transform(sh, s -> ${dkHash60("s")} % $P) AS hs
+       |hs AS MATERIALIZED (SELECT doc_id, sh, list_transform(sh, s -> ${Dedup.strHash60Sql("s")} % $P) AS hs
        |       FROM sh WHERE len(sh) > 0),
        |mh AS (SELECT doc_id,
        |  $mhCols
@@ -513,7 +510,7 @@ object ExtQueries {
       s"(CASE WHEN 2 * len(list_filter(hs, h -> (h >> $i) % 2 = 1)) > len(hs) THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
     s"""tk AS (SELECT doc_id, list_distinct(string_split(lower(text), ' ')) AS tk FROM documents),
-       |hs AS (SELECT doc_id, list_transform(tk, t -> ${dkHash60("t")}) AS hs FROM tk),
+       |hs AS (SELECT doc_id, list_transform(tk, t -> ${Dedup.strHash60Sql("t")}) AS hs FROM tk),
        |fp AS (SELECT doc_id, $bitSum AS fp FROM hs)""".stripMargin
   }
 
@@ -686,7 +683,7 @@ object ExtQueries {
           .orderBy(col("id_a"), col("id_b"))
       },
       Some(s"""WITH $shingleCte,
-              |hs AS (SELECT doc_id, list_transform(sh, s -> ${dkHash60("s")}) AS hs
+              |hs AS (SELECT doc_id, list_transform(sh, s -> ${Dedup.strHash60Sql("s")}) AS hs
               |       FROM sh WHERE len(sh) > 0 AND doc_id < 100),
               |j AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
               |        len(list_intersect(a.hs, b.hs))::DOUBLE
@@ -755,7 +752,7 @@ object ExtQueries {
               |    (count(*) FILTER (WHERE jaccard >= 0.7))::BIGINT AS n_found
               |  FROM j),
               |post AS MATERIALIZED (SELECT DISTINCT doc_id,
-              |    unnest(list_transform(sh, s -> ${dkHash60("s")})) AS h
+              |    unnest(list_transform(sh, s -> ${Dedup.strHash60Sql("s")})) AS h
               |  FROM hs),
               |ln AS MATERIALIZED (SELECT doc_id, count(*)::BIGINT AS l
               |  FROM post GROUP BY 1),
@@ -1406,9 +1403,9 @@ object ExtQueries {
         .filter(col("bucket") < 20)
         .orderBy(col("doc_id")),
       Some(s"""SELECT doc_id,
-              |  ${dkHash60("'sample:'||doc_id")} % 100 AS bucket
+              |  ${Dedup.strHash60Sql("'sample:'||doc_id")} % 100 AS bucket
               |FROM documents
-              |WHERE ${dkHash60("'sample:'||doc_id")} % 100 < 20
+              |WHERE ${Dedup.strHash60Sql("'sample:'||doc_id")} % 100 < 20
               |ORDER BY doc_id""".stripMargin)),
 
     // Quality-WEIGHTED deterministic sampling: per-doc keep probability
@@ -1431,9 +1428,9 @@ object ExtQueries {
       },
       Some(s"""SELECT doc_id, n_chars,
               |  least(950000, greatest(50000, n_chars * 500)) AS keep_ppm,
-              |  ${dkHash60("'wsample:'||doc_id")} % 1000000 AS u_ppm
+              |  ${Dedup.strHash60Sql("'wsample:'||doc_id")} % 1000000 AS u_ppm
               |FROM documents
-              |WHERE ${dkHash60("'wsample:'||doc_id")} % 1000000
+              |WHERE ${Dedup.strHash60Sql("'wsample:'||doc_id")} % 1000000
               |      < least(950000, greatest(50000, n_chars * 500))
               |ORDER BY doc_id""".stripMargin)),
 
@@ -1581,7 +1578,7 @@ object ExtQueries {
               .otherwise(0L)).as("both"))
       },
       Some(s"""WITH $shingleCte,
-              |hs AS (SELECT doc_id, list_transform(sh, s -> ${dkHash60("s")} % $P) AS hs
+              |hs AS (SELECT doc_id, list_transform(sh, s -> ${Dedup.strHash60Sql("s")} % $P) AS hs
               |       FROM sh WHERE len(sh) > 0),
               |mh AS (SELECT doc_id,
               |  ${(0 until 16).map(j => s"list_min(list_transform(hs, h -> (${Dedup.PermA(j)} * h + ${Dedup.PermB(j)}) % $P)) AS mh_$j").mkString(",\n  ")}
@@ -1652,7 +1649,7 @@ object ExtQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH h AS (SELECT doc_id,
-              |    ${dkHash60("'shuf:'||doc_id")} AS hk
+              |    ${Dedup.strHash60Sql("'shuf:'||doc_id")} AS hk
               |  FROM documents)
               |SELECT doc_id, hk % 64 AS shard,
               |  row_number() OVER (PARTITION BY hk % 64 ORDER BY hk, doc_id) - 1 AS pos
@@ -1698,7 +1695,7 @@ object ExtQueries {
             expr("coll * 1000000 div (n * (n - 1))").as("expected_ppm"))
       },
       Some(s"""WITH h AS (SELECT doc_id, source,
-              |    ${dkHash60("'shuf:'||doc_id")} AS hk FROM documents),
+              |    ${Dedup.strHash60Sql("'shuf:'||doc_id")} AS hk FROM documents),
               |sa AS (SELECT source, lag(source) OVER (PARTITION BY hk % 64
               |      ORDER BY hk, doc_id) AS prev_src FROM h),
               |sh AS (SELECT count(*)::BIGINT AS pairs_shuf,
@@ -1746,7 +1743,7 @@ object ExtQueries {
               |      FROM c, t)
               |SELECT d.doc_id, d.source, r.rate_ppm
               |FROM documents d JOIN r USING (source)
-              |WHERE ${dkHash60("'mix:'||d.doc_id")} % 1000000 < r.rate_ppm
+              |WHERE ${Dedup.strHash60Sql("'mix:'||d.doc_id")} % 1000000 < r.rate_ppm
               |ORDER BY d.doc_id""".stripMargin)),
 
     // FILTERED vector search — predicate + ANN composed: restrict the
@@ -1807,7 +1804,7 @@ object ExtQueries {
               |  CASE WHEN CAST(substring(source, 4) AS INT) % 2 = 0 THEN 20 ELSE 50 END AS rate,
               |  count(*) AS n_kept, sum(doc_id)::BIGINT AS id_sum
               |FROM documents
-              |WHERE ${dkHash60("'strat:'||doc_id")} % 100 <
+              |WHERE ${Dedup.strHash60Sql("'strat:'||doc_id")} % 100 <
               |  CASE WHEN CAST(substring(source, 4) AS INT) % 2 = 0 THEN 20 ELSE 50 END
               |GROUP BY 1, 2 ORDER BY source""".stripMargin)),
 
@@ -2021,7 +2018,7 @@ object ExtQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH tk AS (SELECT doc_id,
-             |    ${dkHash60("unnest(string_split(lower(text), ' '))")} AS h
+             |    ${Dedup.strHash60Sql("unnest(string_split(lower(text), ' '))")} AS h
              |  FROM documents),
              |v AS (SELECT h FROM (
              |  SELECT h, count(*) AS cf FROM tk GROUP BY 1
@@ -4056,7 +4053,7 @@ object ExtQueries {
       },
       Some(s"""WITH tk0 AS (SELECT doc_id, string_split(lower(text),' ') AS tk FROM documents),
              |tk AS (SELECT doc_id,
-             |    list_transform(tk, t -> ${dkHash60("t")}) AS hk
+             |    list_transform(tk, t -> ${Dedup.strHash60Sql("t")}) AS hk
              |  FROM tk0 WHERE len(tk) >= 2),
              |b AS (SELECT doc_id, unnest(list_transform(range(1, len(hk)),
              |    i -> struct_pack(h1 := hk[i], h2 := hk[i+1]))) AS u
@@ -4065,7 +4062,7 @@ object ExtQueries {
              |  FROM b GROUP BY 1, 2, 3),
              |cbg AS (SELECT h1, h2, sum(tf)::BIGINT AS c FROM btf GROUP BY 1, 2),
              |ctx AS (SELECT h1 AS ch1, sum(c)::BIGINT AS cw FROM cbg GROUP BY 1),
-             |v AS (SELECT count(DISTINCT ${dkHash60("t")}) AS v FROM
+             |v AS (SELECT count(DISTINCT ${Dedup.strHash60Sql("t")}) AS v FROM
              |  (SELECT unnest(string_split(lower(text),' ')) AS t FROM documents)),
              |lp AS (SELECT cbg.h1, cbg.h2,
              |    round(log10((cbg.c + 1)::DOUBLE / (ctx.cw + v.v)::DOUBLE), 9)::DECIMAL(20,9) AS logp
@@ -4104,8 +4101,8 @@ object ExtQueries {
               |  UNION ALL
               |  SELECT doc_id, 'source' AS feat, 'source='||source AS fv FROM documents)
               |SELECT doc_id, feat,
-              |  ${dkHash60("'slot:'||fv")} % 64 AS slot,
-              |  CASE WHEN ${dkHash60("'sign:'||fv")} % 2 = 0 THEN 1 ELSE -1 END AS sign
+              |  ${Dedup.strHash60Sql("'slot:'||fv")} % 64 AS slot,
+              |  CASE WHEN ${Dedup.strHash60Sql("'sign:'||fv")} % 2 = 0 THEN 1 ELSE -1 END AS sign
               |FROM f ORDER BY doc_id, feat""".stripMargin)),
 
     // Smoothed target encoding (the mean-encoding feature-prep
@@ -4252,7 +4249,7 @@ object ExtQueries {
       },
       Some(s"""WITH docs AS (SELECT doc_id, source,
               |    (n_chars // 4 + 1)::BIGINT AS est_tokens,
-              |    ${dkHash60("'budget:'||doc_id")} % 1000000 AS pri
+              |    ${Dedup.strHash60Sql("'budget:'||doc_id")} % 1000000 AS pri
               |  FROM documents),
               |c AS (SELECT doc_id, source, est_tokens,
               |    sum(est_tokens) OVER (PARTITION BY source
@@ -4288,7 +4285,7 @@ object ExtQueries {
       },
       Some(s"""WITH docs AS (SELECT doc_id,
               |    (n_chars // 256)::BIGINT AS len_bucket,
-              |    ${dkHash60("'batch:'||doc_id")} % 1000000 AS shuf
+              |    ${Dedup.strHash60Sql("'batch:'||doc_id")} % 1000000 AS shuf
               |  FROM documents),
               |r AS (SELECT doc_id, len_bucket, row_number() OVER
               |    (PARTITION BY len_bucket ORDER BY shuf, doc_id) AS rn
@@ -4330,7 +4327,7 @@ object ExtQueries {
       Some(s"""WITH docs AS (SELECT doc_id,
               |    (n_chars // 256)::BIGINT AS len_bucket,
               |    n_chars // 4 + 1 AS est_tok,
-              |    ${dkHash60("'batch:'||doc_id")} % 1000000 AS shuf
+              |    ${Dedup.strHash60Sql("'batch:'||doc_id")} % 1000000 AS shuf
               |  FROM documents),
               |r AS (SELECT doc_id, len_bucket, est_tok, row_number() OVER
               |    (PARTITION BY len_bucket ORDER BY shuf, doc_id) AS rn
@@ -4923,7 +4920,7 @@ object ExtQueries {
             expr("max_chars * n_shards * 1000000 div total_chars")
               .as("char_skew_ppm"))
       },
-      Some(s"""WITH sh AS (SELECT ${dkHash60("'shuf:'||doc_id")} % 64 AS shard,
+      Some(s"""WITH sh AS (SELECT ${Dedup.strHash60Sql("'shuf:'||doc_id")} % 64 AS shard,
               |    count(*) AS n_docs, sum(n_chars)::BIGINT AS chars
               |  FROM documents GROUP BY 1),
               |g AS (SELECT count(*) AS n_shards, min(n_docs)::BIGINT AS min_docs,
@@ -4991,7 +4988,7 @@ object ExtQueries {
           .orderBy(col("source"), col("rank"))
       },
       Some(s"""WITH keyed AS (SELECT doc_id, source, n_chars,
-              |    ln(((${dkHash60("'es:'||doc_id")} % 1000000)::DOUBLE + 0.5)
+              |    ln(((${Dedup.strHash60Sql("'es:'||doc_id")} % 1000000)::DOUBLE + 0.5)
               |        / 1000000.0) / n_chars::DOUBLE AS k
               |  FROM documents),
               |r AS (SELECT source, doc_id, n_chars, k, row_number() OVER
@@ -5062,7 +5059,7 @@ object ExtQueries {
              |    string_split(lower(text), ' ') AS tk FROM documents),
              |bg AS (SELECT DISTINCT source,
              |    unnest(list_transform(range(1, len(tk)),
-             |      i -> ${dkHash60("tk[i] || ' ' || tk[i + 1]")})) AS bh
+             |      i -> ${Dedup.strHash60Sql("tk[i] || ' ' || tk[i + 1]")})) AS bh
              |  FROM tk WHERE len(tk) >= 2),
              |spread AS (SELECT bh, count(*) AS n_sources FROM bg GROUP BY 1),
              |g AS (SELECT source, count(*) AS n_bigrams,
@@ -5528,7 +5525,7 @@ object ExtQueries {
              |  WHERE len(string_split(lower(text), ' ')) >= 3),
              |sh AS (SELECT doc_id, source,
              |    unnest(list_transform(range(1, len(tk) - 1),
-             |      i -> ${dkHash60("tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]")})) AS gh
+             |      i -> ${Dedup.strHash60Sql("tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]")})) AS gh
              |  FROM tk),
              |per_doc AS (SELECT doc_id, source, gh, count(*)::BIGINT AS tf
              |  FROM sh GROUP BY 1, 2, 3),
@@ -5978,7 +5975,7 @@ object ExtQueries {
               |p1 AS (SELECT doc_id, source,
               |    generate_subscripts(tk, 1) - 1 AS pos FROM tk),
               |pos AS (SELECT doc_id, source, pos,
-              |    CASE WHEN ${dkHash60("'mask:'||doc_id||':'||pos")}
+              |    CASE WHEN ${Dedup.strHash60Sql("'mask:'||doc_id||':'||pos")}
               |      % 100 < 15 THEN 1 ELSE 0 END AS m
               |  FROM p1),
               |fl AS (SELECT source, m,
@@ -6117,7 +6114,7 @@ object ExtQueries {
           .orderBy(col("epoch"), col("position"))
       },
       Some(s"""WITH r AS (SELECT e.epoch, doc_id,
-              |    ${dkHash60("'epoch:'||e.epoch||':doc:'||doc_id")}
+              |    ${Dedup.strHash60Sql("'epoch:'||e.epoch||':doc:'||doc_id")}
               |      % 1000000000 AS rk
               |  FROM documents CROSS JOIN (VALUES (0), (1), (2)) e(epoch)),
               |p AS (SELECT epoch, doc_id, row_number() OVER
@@ -7478,7 +7475,7 @@ object ExtQueries {
               |        sh := array_to_string(tk[i+1:i+8], ' ')))) AS u
               |  FROM tk),
               |sh AS MATERIALIZED (SELECT doc_id, n_tokens, u.pos::BIGINT AS pos,
-              |    ${dkHash60("u.sh")} AS h
+              |    ${Dedup.strHash60Sql("u.sh")} AS h
               |  FROM sh0),
               |rep AS (SELECT h FROM sh GROUP BY h HAVING count(*) > 1),
               |dup AS (SELECT doc_id, n_tokens, pos FROM sh JOIN rep USING (h)),
@@ -7570,7 +7567,7 @@ object ExtQueries {
              |        sh := array_to_string(tk[i+1:i+8], ' ')))) AS u
              |  FROM tk),
              |sh AS MATERIALIZED (SELECT doc_id, u.pos::BIGINT AS pos,
-             |    ${dkHash60("u.sh")} AS h FROM sh0),
+             |    ${Dedup.strHash60Sql("u.sh")} AS h FROM sh0),
              |rep AS (SELECT h, min(struct_pack(d := doc_id, p := pos)) AS keep
              |  FROM sh GROUP BY h HAVING count(*) > 1),
              |rem AS (SELECT doc_id, pos FROM sh JOIN rep USING (h)
@@ -7682,7 +7679,7 @@ object ExtQueries {
       },
       Some(s"""WITH tk0 AS (SELECT doc_id, string_split(lower(text),' ') AS tk FROM documents),
              |tk AS (SELECT doc_id,
-             |    list_transform(tk, t -> ${dkHash60("t")}) AS hk
+             |    list_transform(tk, t -> ${Dedup.strHash60Sql("t")}) AS hk
              |  FROM tk0 WHERE len(tk) >= 2),
              |b AS (SELECT doc_id, unnest(list_transform(range(1, len(hk)),
              |    i -> struct_pack(h1 := hk[i], h2 := hk[i+1]))) AS u

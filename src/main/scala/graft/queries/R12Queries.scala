@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object R12Queries {
 
-  /** DuckDB mirror of [[graft.ext.Dedup.strHash60]]. */
-  private def dkHash60(s: String) = s"('0x'||substring(md5($s),1,15))::BIGINT"
-
   val defs: Seq[QueryDef] = Seq(
 
     // Bartlett's test (Bartlett 1937) for variance homogeneity across
@@ -832,7 +829,7 @@ object R12Queries {
                 (lit(2.0) * (col("f2") + 1).cast("double")), 4)
               .as("chao1"))
       },
-      Some(s"""WITH tf AS (SELECT ${dkHash60("term")} AS h,
+      Some(s"""WITH tf AS (SELECT ${graft.ext.Dedup.strHash60Sql("term")} AS h,
              |    count(*)::BIGINT AS n FROM (
              |    SELECT unnest(string_split(lower(text), ' ')) AS term
              |    FROM documents) WHERE term <> '' GROUP BY 1)
@@ -874,7 +871,7 @@ object R12Queries {
             when(col("f3") > 0, round(lit(4.0) * col("f4").cast("double") /
               col("f3").cast("double"), 6)).as("r3_star"))
       },
-      Some(s"""WITH tf AS (SELECT ${dkHash60("term")} AS h,
+      Some(s"""WITH tf AS (SELECT ${graft.ext.Dedup.strHash60Sql("term")} AS h,
              |    count(*)::BIGINT AS n FROM (
              |    SELECT unnest(string_split(lower(text), ' ')) AS term
              |    FROM documents) WHERE term <> '' GROUP BY 1),
@@ -927,7 +924,7 @@ object R12Queries {
             round(round(log(col("v").cast("double")), 9) /
               round(log(col("nt").cast("double")), 9), 6).as("herdan_c"))
       },
-      Some(s"""WITH tf AS (SELECT ${dkHash60("term")} AS h,
+      Some(s"""WITH tf AS (SELECT ${graft.ext.Dedup.strHash60Sql("term")} AS h,
              |    count(*)::BIGINT AS n FROM (
              |    SELECT unnest(string_split(lower(text), ' ')) AS term
              |    FROM documents) WHERE term <> '' GROUP BY 1),
@@ -1002,7 +999,7 @@ object R12Queries {
              |    unnest(string_split(lower(text), ' ')) AS term
              |  FROM documents),
              |tk AS (SELECT doc_id, term FROM toks WHERE term <> ''),
-             |fd AS (SELECT ${dkHash60("term")} AS h,
+             |fd AS (SELECT ${graft.ext.Dedup.strHash60Sql("term")} AS h,
              |    min(doc_id) AS first_doc FROM tk GROUP BY 1),
              |mx AS (SELECT max(doc_id) AS mx FROM documents),
              |ck AS (SELECT d.range AS decile,
@@ -1099,7 +1096,7 @@ object R12Queries {
       Some(s"""WITH RECURSIVE tkl AS (SELECT doc_id,
              |    list_transform(list_filter(string_split(lower(text), ' '),
              |      t -> t <> '')[:120],
-             |      t -> ${dkHash60("t")}) AS hs
+             |      t -> ${graft.ext.Dedup.strHash60Sql("t")}) AS hs
              |  FROM documents WHERE doc_id < 1500),
              |tl AS (SELECT doc_id, len(hs) AS nl FROM tkl WHERE len(hs) > 0),
              |tk AS (SELECT doc_id, unnest(hs) AS h,
@@ -1602,7 +1599,7 @@ object R12Queries {
           .orderBy(col("k"))
       },
       Some(s"""WITH dirs AS (SELECT k.range AS k, j.range AS j,
-             |    (${dkHash60("'swd:' || k.range || ':' || j.range")}
+             |    (${graft.ext.Dedup.strHash60Sql("'swd:' || k.range || ':' || j.range")}
              |      % 2001) - 1000 AS um
              |  FROM range(0, 8) k, range(0, 64) j),
              |zv AS (SELECT vec_id, vec_id % 2 AS par,
@@ -1928,7 +1925,7 @@ object R12Queries {
              |obs AS (SELECT abs(sum(dm))::BIGINT AS t_obs,
              |    count(*)::BIGINT AS n_days FROM daily),
              |tb AS (SELECT p.range AS b,
-             |    abs(sum(d.dm * ((${dkHash60("'perm:' || p.range || ':' || d.day")}
+             |    abs(sum(d.dm * ((${graft.ext.Dedup.strHash60Sql("'perm:' || p.range || ':' || d.day")}
              |      % 2) * 2 - 1)))::BIGINT AS t_b
              |  FROM daily d, range(1, 201) p GROUP BY 1)
              |SELECT obs.t_obs AS t_obs_milli, obs.n_days,
@@ -2182,7 +2179,7 @@ object R12Queries {
       Some(s"""WITH conv AS (SELECT user_id,
              |    max(CASE WHEN event_type = 'purchase' AND value > 180
              |      THEN 1 ELSE 0 END)::BIGINT AS c,
-             |    (${dkHash60("'ab:' || user_id")} % 2) AS v
+             |    (${graft.ext.Dedup.strHash60Sql("'ab:' || user_id")} % 2) AS v
              |  FROM events GROUP BY 1),
              |vg AS (SELECT v, count(*)::BIGINT AS n, sum(c)::BIGINT AS cv
              |  FROM conv GROUP BY 1),

@@ -21,46 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object R14Queries {
 
-  /** DuckDB mirror of [[graft.ext.Dedup.strHash60]]. */
-  private def dkHash60(s: String) = s"('0x'||substring(md5($s),1,15))::BIGINT"
-
-  /** Φ⁻¹(p) as Acklam's rational approximation, emitted as ONE SQL
-    * string fed verbatim to Spark `expr()` AND the DuckDB oracle (the
-    * R13 Lanczos-Γ precedent): neither engine has a probit/erfinv
-    * builtin, and sharing the literal expression makes the
-    * transcendental bit-identical up to the two engines' ln/sqrt
-    * (1-ulp, absorbed by the caller's 9 dp quantization). Valid for
-    * p ∈ (0,1); |relative error| < 1.15e-9 (Acklam 2003, public). */
-  private def probitSql(p: String): String = {
-    val a = Seq("-3.969683028665376e+01", "2.209460984245205e+02",
-      "-2.759285104469687e+02", "1.383577518672690e+02",
-      "-3.066479806614716e+01", "2.506628277459239e+00")
-    val b = Seq("-5.447609879822406e+01", "1.615858368580409e+02",
-      "-1.556989798598866e+02", "6.680131188771972e+01",
-      "-1.328068155288572e+01")
-    val c = Seq("-7.784894002430293e-03", "-3.223964580411365e-01",
-      "-2.400758277161838e+00", "-2.549732539343734e+00",
-      "4.374664141464968e+00", "2.938163982698783e+00")
-    val dd = Seq("7.784695709041462e-03", "3.224671290700398e-01",
-      "2.445134137142996e+00", "3.754408661907416e+00")
-    def horner(cs: Seq[String], v: String) =
-      cs.tail.foldLeft(s"(${cs.head})")((acc, ci) =>
-        s"($acc * $v + ($ci))")
-    val qc = s"(($p) - 0.5)"
-    val rc = s"($qc * $qc)"
-    val central =
-      s"(${horner(a, rc)} * $qc / (${horner(b, rc)} * $rc + 1.0))"
-    val ql = s"sqrt(-2.0 * ln(($p)))"
-    val low = s"(${horner(c, ql)} / (${horner(dd, ql)} * $ql + 1.0))"
-    val qh = s"sqrt(-2.0 * ln(1.0 - ($p)))"
-    val high = s"(-(${horner(c, qh)} / (${horner(dd, qh)} * $qh + 1.0)))"
-    s"(CASE WHEN ($p) < 0.02425 THEN $low" +
-      s" WHEN ($p) > 0.97575 THEN $high ELSE $central END)"
-  }
-
-  /** Spark spelling of `low`/`high` above needs `ln` — Spark SQL's
-    * natural log is also `ln`, so the shared string parses on both. */
-
   val defs: Seq[QueryDef] = Seq(
 
     // Fisher's exact test (Fisher 1935) on the weekend × purchase
@@ -1205,7 +1165,7 @@ object R14Queries {
              |nr AS (SELECT count(*)::BIGINT AS n, max(p)::BIGINT AS tot
              |  FROM pfx),
              |slots AS (SELECT b, i, n, tot,
-             |    ${dkHash60("'bb:' || b || ':' || i")} % (n - 6) AS st,
+             |    ${graft.ext.Dedup.strHash60Sql("'bb:' || b || ':' || i")} % (n - 6) AS st,
              |    least(7, n - i * 7) AS k
              |  FROM (SELECT unnest(generate_series(0, 99)) AS b) bb,
              |    (SELECT unnest(generate_series(0, 63)) AS i) ii, nr
@@ -1755,7 +1715,7 @@ object R14Queries {
           " / (cast(n as double) + 0.25)"
         daily.crossJoin(n)
           .withColumn("m", expr(
-            s"cast(round(${probitSql(pExpr)}, 9) as decimal(12,9))"))
+            s"cast(round(${graft.analytics.Stats.probitSql(pExpr)}, 9) as decimal(12,9))"))
           .agg(max(col("n")).as("nd"),
             sum(col("m") * col("y").cast("decimal(12,0)")).as("smy"),
             sum((col("m") * col("m")).cast("decimal(38,18)")).as("smm"),
@@ -1778,7 +1738,7 @@ object R14Queries {
            |    row_number() OVER (ORDER BY y, day) AS i FROM daily),
            |nn AS (SELECT count(*)::BIGINT AS n FROM rk),
            |m AS (SELECT y,
-           |    round(${probitSql(pExpr)}, 9)::DECIMAL(12,9) AS m
+           |    round(${graft.analytics.Stats.probitSql(pExpr)}, 9)::DECIMAL(12,9) AS m
            |  FROM rk, nn),
            |a AS (SELECT max(nn.n)::BIGINT AS nd,
            |    sum(m.m * m.y::DECIMAL(12,0)) AS smy,

@@ -32,34 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object R16Queries {
 
-  /** Φ⁻¹(p) — Acklam's rational approximation as ONE shared SQL
-    * string (the R14 precedent; |rel err| < 1.15e-9). */
-  private def probitSql(p: String): String = {
-    val a = Seq("-3.969683028665376e+01", "2.209460984245205e+02",
-      "-2.759285104469687e+02", "1.383577518672690e+02",
-      "-3.066479806614716e+01", "2.506628277459239e+00")
-    val b = Seq("-5.447609879822406e+01", "1.615858368580409e+02",
-      "-1.556989798598866e+02", "6.680131188771972e+01",
-      "-1.328068155288572e+01")
-    val c = Seq("-7.784894002430293e-03", "-3.223964580411365e-01",
-      "-2.400758277161838e+00", "-2.549732539343734e+00",
-      "4.374664141464968e+00", "2.938163982698783e+00")
-    val dd = Seq("7.784695709041462e-03", "3.224671290700398e-01",
-      "2.445134137142996e+00", "3.754408661907416e+00")
-    def horner(cs: Seq[String], v: String) =
-      cs.tail.foldLeft(s"(${cs.head})")((acc, ci) => s"($acc * $v + ($ci))")
-    val qc = s"(($p) - 0.5)"
-    val rc = s"($qc * $qc)"
-    val central =
-      s"(${horner(a, rc)} * $qc / (${horner(b, rc)} * $rc + 1.0))"
-    val ql = s"sqrt(-2.0 * ln(($p)))"
-    val low = s"(${horner(c, ql)} / (${horner(dd, ql)} * $ql + 1.0))"
-    val qh = s"sqrt(-2.0 * ln(1.0 - ($p)))"
-    val high = s"(-(${horner(c, qh)} / (${horner(dd, qh)} * $qh + 1.0)))"
-    s"(CASE WHEN ($p) < 0.02425 THEN $low" +
-      s" WHEN ($p) > 0.97575 THEN $high ELSE $central END)"
-  }
-
   /** The 8 Gopher "must contain ≥2" stop words (Rae et al. 2021). */
   private val GopherStops =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
@@ -328,7 +300,7 @@ object R16Queries {
     // One shuffle to the daily digest; everything after is ≤366 rows.
     QueryDef("q_grubbs_test",
       (s, d) => {
-        val zExpr = probitSql(
+        val zExpr = graft.analytics.Stats.probitSql(
           "1.0e0 - 5.0e-2 / (2.0e0 * cast(n_days as double))")
         val daily = graft.sources.Tables.events(s, d)
           .groupBy(to_date(col("ts")).as("day"))
@@ -369,7 +341,7 @@ object R16Queries {
              |    abs(a.n_days::DECIMAL(38,0) * x - a.sx)::DECIMAL(38,0) AS m
              |  FROM daily, a ORDER BY m DESC, day DESC LIMIT 1),
              |zc AS (SELECT n_days, sx, sxx,
-             |    ${probitSql("1.0e0 - 5.0e-2 / (2.0e0 * cast(n_days as double))")} AS z
+             |    ${graft.analytics.Stats.probitSql("1.0e0 - 5.0e-2 / (2.0e0 * cast(n_days as double))")} AS z
              |  FROM a),
              |gr AS (SELECT zc.n_days, dev.day AS outlier_day,
              |    dev.m::DOUBLE / (zc.n_days::DOUBLE

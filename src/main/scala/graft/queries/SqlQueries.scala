@@ -17,11 +17,6 @@ import graft.io.Artifacts
   */
 object SqlQueries {
 
-  /** DuckDB-side twin of `Dedup.strHash60` (md5-derived 60-bit key)
-    * — same idiom as ExtQueries' private helper. */
-  private def dkHash60s(s: String) =
-    s"('0x'||substring(md5($s),1,15))::BIGINT"
-
   /** Maintained daily-aggregate state for `q_incremental_agg` — built
     * ONCE per sf dir (parquet artifact, like the memoized IVF
     * quantizer) from the days before `StateCut`, so the query path
@@ -2753,7 +2748,7 @@ object SqlQueries {
       },
       Some(s"""WITH o AS (SELECT o_orderkey,
               |    CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-              |    ${dkHash60s("'diff:'||o_orderkey")} % 100 AS h
+              |    ${Dedup.strHash60Sql("'diff:'||o_orderkey")} % 100 AS h
               |  FROM orders),
               |v1 AS (SELECT o_orderkey AS k1, price AS p1 FROM o),
               |v2 AS (SELECT o_orderkey AS k2,
@@ -3964,7 +3959,7 @@ object SqlQueries {
       Some(s"""WITH c AS (SELECT event_type, count(*) AS n
               |  FROM events GROUP BY 1),
               |un AS (SELECT event_type, n,
-              |    ((${dkHash60s("'dp:'||event_type")} % 1000000)::DOUBLE + 0.5)
+              |    ((${Dedup.strHash60Sql("'dp:'||event_type")} % 1000000)::DOUBLE + 0.5)
               |      / 1000000.0 AS u
               |  FROM c)
               |SELECT event_type, n,
@@ -9523,15 +9518,15 @@ object SqlQueries {
       },
       Some(s"""WITH ev AS (SELECT 'events' AS table_name,
               |    count(*)::BIGINT AS n_rows,
-              |    (sum((${dkHash60s("event_id::VARCHAR||'|'||epoch_us(ts)::VARCHAR||'|'||user_id::VARCHAR||'|'||event_type")} % 2305843009213693951)::HUGEINT)
+              |    (sum((${Dedup.strHash60Sql("event_id::VARCHAR||'|'||epoch_us(ts)::VARCHAR||'|'||user_id::VARCHAR||'|'||event_type")} % 2305843009213693951)::HUGEINT)
               |      % 2305843009213693951)::BIGINT AS checksum
               |  FROM events),
               |o AS (SELECT 'orders' AS table_name, count(*)::BIGINT AS n_rows,
-              |    (sum((${dkHash60s("o_orderkey::VARCHAR||'|'||o_custkey::VARCHAR")} % 2305843009213693951)::HUGEINT)
+              |    (sum((${Dedup.strHash60Sql("o_orderkey::VARCHAR||'|'||o_custkey::VARCHAR")} % 2305843009213693951)::HUGEINT)
               |      % 2305843009213693951)::BIGINT AS checksum
               |  FROM orders),
               |c AS (SELECT 'customer' AS table_name, count(*)::BIGINT AS n_rows,
-              |    (sum((${dkHash60s("c_custkey::VARCHAR||'|'||c_nationkey::VARCHAR")} % 2305843009213693951)::HUGEINT)
+              |    (sum((${Dedup.strHash60Sql("c_custkey::VARCHAR||'|'||c_nationkey::VARCHAR")} % 2305843009213693951)::HUGEINT)
               |      % 2305843009213693951)::BIGINT AS checksum
               |  FROM customer)
               |SELECT * FROM c UNION ALL SELECT * FROM ev

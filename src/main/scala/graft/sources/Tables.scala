@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Artifacts
 
 /** Central loaders for the driver's parquet tables.
   *
@@ -27,12 +28,8 @@ object Tables {
     * are immutable for the life of a session. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else tableCache.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, name),
+    else Artifacts.sessionMemo(spark, s"table-$name", dir)(
       spark.read.parquet(s"$dir/$name.parquet"))
-
-  private val tableCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
 
   /** Fold any on-disk `ts` encoding (raw int64 nanos, TIMESTAMP_NTZ,
     * TIMESTAMP) into us-precision TimestampType. */
@@ -73,20 +70,17 @@ object Tables {
     * for schema inference each time. Plan reuse is free; the scan
     * itself still streams per query — nothing is persisted. */
   def events(spark: SparkSession, dir: String): DataFrame =
-    eventsCache.getOrElseUpdate((System.identityHashCode(spark), dir), {
+    Artifacts.sessionMemo(spark, "table-events", dir) {
       ensureNanosAsLong(spark)
       normalizeEventsTs(spark.read.parquet(s"$dir/events.parquet"))
-    })
-
-  private val eventsCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
+    }
 
   /** The (min, max) event time of `dir`'s events in epoch micros —
     * static metadata of a static table, computed once per JVM so the
     * grid queries and the stream sentinels don't each re-run the same
     * scalar aggregate job. */
   def eventsSpanUs(spark: SparkSession, dir: String): (Long, Long) =
-    graft.io.Artifacts.memo("events-span", dir) {
+    Artifacts.memo("events-span", dir) {
       val r = events(spark, dir)
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
       (r.getLong(0), r.getLong(1))

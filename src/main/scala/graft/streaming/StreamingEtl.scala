@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.ext.TextAnalysis
+import graft.io.Artifacts
 import graft.queries.QueryDef
 import graft.sources.Tables
 
@@ -24,8 +25,9 @@ import graft.sources.Tables
   * into one of three sinks — a memory table, parquet files, or a
   * driver-side `foreachBatch` body. Inputs come in three shapes: the
   * events table as a file stream (`eventsStream`), events plus
-  * far-future sentinel rows (`sentinelStream`), or a staged n-file
-  * split read one file per micro-batch (`splitStream`).
+  * far-future sentinel rows (`sentinelStream`), or an n-file split
+  * read one file per micro-batch (`splitStream`). The last two replay
+  * a [[Stage]], a per-dataset artifact of `graft.io.Artifacts`.
   *
   * Scale notes: the tumbling aggregate is a streaming state store keyed
   * by (window, event_type) — bounded by watermark eviction; the
@@ -199,7 +201,7 @@ object StreamingEtl {
   private case object Memory extends Sink
   /** Parquet files at `out`, read back through the sink's commit log:
     * row-heavy results (see `fileSinkRun`). */
-  private final case class Parquet(out: java.nio.file.Path) extends Sink
+  private final case class Parquet(out: String) extends Sink
   /** A driver-side body per micro-batch; the scenario keeps its result
     * in its own state, so the run returns an empty frame. */
   private final case class EachBatch(f: (DataFrame, Long) => Unit) extends Sink
@@ -223,7 +225,7 @@ object StreamingEtl {
       val pinned = checkpoint.fold(w)(w.option("checkpointLocation", _))
       (sink match {
         case Memory => pinned.format("memory").queryName(view)
-        case Parquet(out) => pinned.format("parquet").option("path", out.toString)
+        case Parquet(out) => pinned.format("parquet").option("path", out)
         case EachBatch(f) => pinned.foreachBatch(f)
       }).start().awaitTermination()
     }
@@ -234,16 +236,12 @@ object StreamingEtl {
         val rows = spark.table(view)
         spark.catalog.dropTempView(view)
         rows
-      case Parquet(out) => spark.read.parquet(out.toString)
+      case Parquet(out) => spark.read.parquet(out)
       case EachBatch(_) => spark.emptyDataFrame
     }
   }
 
   private val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Previous file-sink run's output dir per scenario tag, reclaimed
-    * on the next run (see fileSinkRun). */
-  private val fileSinkLast =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
   /** State-store partition count for the harness's streaming runs.
     * Stateful operators allocate one state store PER shuffle
@@ -301,12 +299,6 @@ object StreamingEtl {
     finally rmTree(ckptBase)
   }
 
-  /** Delete one file-sink run: its output dir and `.ckpt` sibling. */
-  private def rmFileSinkRun(out: java.nio.file.Path): Unit = {
-    rmTree(out)
-    rmTree(out.resolveSibling(out.getFileName.toString + ".ckpt"))
-  }
-
   /** Run a streaming Dataset to a parquet FILE sink and return the
     * committed result. For row-heavy outputs (dedup: the whole deduped
     * table; sessionize: ~one session per event) the memory sink
@@ -314,23 +306,21 @@ object StreamingEtl {
     * floor that grows linearly with data. The parquet file sink writes
     * from the state partitions in parallel with exactly-once commit
     * via `_spark_metadata` (which the read-back honors), and is the
-    * sink shape a production pipeline would use anyway. UNIQUE
-    * out+checkpoint dirs per run (not a per-JVM counter: a counter
-    * resets across JVMs and a leftover checkpoint would silently
-    * RESUME against a previous run's staged source paths — measured as
-    * a basePath mismatch abort), so each timed trial replays the full
-    * stream from scratch. The previous run's dirs are reclaimed on the
-    * next entry per tag (the returned DataFrame may be lazily read any
-    * time until then, which makes next-entry the earliest safe
-    * deletion point); each tag's last run is reclaimed by the staging
-    * shutdown hook. */
-  private def fileSinkRun(ds: Dataset[_], needsFlush: Boolean,
+    * sink shape a production pipeline would use anyway. Output and
+    * checkpoint are the dataset's `filesink-<tag>` and
+    * `filesink-<tag>-ckpt` dirs of `Artifacts.output`, both deleted on
+    * entry: a leftover checkpoint would RESUME against a previous
+    * run's source files (measured as a basePath mismatch abort), and
+    * each timed trial must replay the full stream from scratch. The
+    * returned DataFrame reads the output lazily, so it stays readable
+    * until the tag's next run on the same dataset. */
+  private def fileSinkRun(ds: Dataset[_], dir: String, needsFlush: Boolean,
       rowsHint: Long, tag: String): DataFrame = {
-    Option(fileSinkLast.remove(tag)).foreach(rmFileSinkRun)
-    val out = scratchDir(s"graft_${tag}_out")
-    fileSinkLast.put(tag, out)
+    val out = Artifacts.output(dir, s"filesink-$tag")
+    val ckpt = Artifacts.output(dir, s"filesink-$tag-ckpt")
+    Seq(out, ckpt).foreach(p => rmTree(java.nio.file.Paths.get(p)))
     runStream(ds, Parquet(out), needsFlush = needsFlush, rowsHint = rowsHint,
-      checkpoint = Some(s"$out.ckpt"))
+      checkpoint = Some(ckpt))
   }
 
   /** Rows a `foreachBatch` collector gathered on the driver, as a
@@ -374,13 +364,15 @@ object StreamingEtl {
         col("n"))
   }
 
-  /** Scratch base for stream staging, checkpoints and state stores:
-    * every micro-batch writes its offsets and commits log entries and
-    * state files here, and a RAM-backed tmpfs (/dev/shm) keeps those
-    * writes in memory; falls back to java.io.tmpdir where no tmpfs
-    * exists. Production clusters point checkpoints at durable storage
-    * — this is the LOCAL-HARNESS choice only, correctness never
-    * depends on it. */
+  /** Per-run scratch: a run's checkpoint and state stores, and what a
+    * scenario writes for one run only (foreachBatch state versions,
+    * the late-data run's growing input dir). Every micro-batch writes
+    * its offsets and commits log entries and state files here, and a
+    * RAM-backed tmpfs (/dev/shm) keeps those writes in memory; falls
+    * back to java.io.tmpdir where no tmpfs exists. Per-dataset inputs
+    * are [[Stage]]s of the artifact store instead. Production clusters
+    * point checkpoints at durable storage — this is the LOCAL-HARNESS
+    * choice only, correctness never depends on it. */
   private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) &&
@@ -389,8 +381,7 @@ object StreamingEtl {
     else java.nio.file.Files.createTempDirectory(prefix)
   }
 
-  /** Recursive scratch-dir cleanup (post-run; the memory sink already
-    * holds the rows, so the staged input is dead weight). */
+  /** Recursive delete of a run's scratch or output dir. */
   private def rmTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     try {
@@ -400,79 +391,100 @@ object StreamingEtl {
     } catch { case _: java.io.IOException => () }
   }
 
-  // ---- memoized staging ---------------------------------------------------
-  // Every streaming scenario stages its input (events copy, sentinel
-  // row, repartitioned split) into a scratch dir before the stream
-  // runs. The staging is DETERMINISTIC per (dir, shape), yet Bench
-  // re-runs each query 3 trials and Verify+Bench share a session — so
-  // without memoization each trial re-pays 2-3 Spark jobs (max-ts
-  // probe, sentinel write) plus file copies that have nothing to do
-  // with the streaming operator being measured. Staged dirs live for
-  // the JVM and are torn down by one shutdown hook, together with each
-  // tag's last file-sink output (only a tag's NEXT run reclaims it).
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  locally {
-    val _ = sys.addShutdownHook {
-      stageCache.values().forEach(p => rmTree(p))
-      fileSinkLast.values().forEach(p => rmFileSinkRun(p))
-    }
-  }
+  // ---- input stages -------------------------------------------------------
+  // A scenario that does not read the events table directly replays a
+  // stage: the dataset's files copied, joined by sentinel rows, or split
+  // into n files. A stage is a deterministic function of the dataset, so
+  // it is an artifact of graft.io.Artifacts: built once per dataset,
+  // reused by every trial and every later JVM, and collected with its
+  // dataset. It is keyed by what it holds, not by the scenario that
+  // reads it, so scenarios with the same input share one directory. The
+  // file stream source skips the store's `_GRAFT_ARTIFACT` marker, as
+  // it skips every name starting with `_`.
 
-  /** tmpfs budget for the memoized stages: /dev/shm is RAM, and
-    * ~14 scenario stages × every dir a session touches (ScaleBench
-    * visits 1× AND 10×) would otherwise accumulate until shutdown.
-    * When the cached total passes the budget, the OLDEST entries are
-    * deleted (an evicted key simply re-stages on next use; eviction
-    * order is insertion order, and a stage is only read between a
-    * scenario's start() and awaitTermination(), which the cache's
-    * synchronized build + the withStreamConf lock serialize). */
-  private val StageBudgetBytes: Long = 4096L << 20
-  private val stageOrder =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** One stage: `kind` names its contents and, with `key`, keys its
+    * directory; `build` writes the files into `out`. Two stages of one
+    * dataset must differ in `kind`: the store collects every other
+    * generation of a kind. */
+  private sealed abstract class Stage(val kind: String, key: Any*) {
+    protected def build(spark: SparkSession, dir: String, out: java.nio.file.Path): Unit
 
-  private def dirBytes(p: java.nio.file.Path): Long = {
-    import java.nio.file.Files
-    val s = Files.walk(p)
-    try s.filter(Files.isRegularFile(_))
-      .mapToLong(f => Files.size(f)).sum()
-    finally s.close()
-  }
-
-  private def evictOverBudget(keep: String): Unit = stageCache.synchronized {
-    var total = 0L
-    stageCache.values().forEach(p => total += dirBytes(p))
-    var candidates = stageOrder.size()
-    while (total > StageBudgetBytes && candidates > 0) {
-      candidates -= 1
-      val oldest = stageOrder.poll()
-      if (oldest == keep) stageOrder.add(oldest) // never evict the caller's
-      else {
-        val p = stageCache.remove(oldest)
-        if (p != null) { total -= dirBytes(p); rmTree(p) }
+    /** The stage's directory for dataset `dir`, built on first use. */
+    def path(spark: SparkSession, dir: String): String =
+      Artifacts.dir(dir, kind, "v1", key: _*) { out =>
+        build(spark, dir, java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out)))
       }
+  }
+
+  /** The events table plus far-future rows (event_id, user_id,
+    * event_type), `horizonDays` past the last event, in a file named to
+    * sort last (`zz_sentinel.parquet`). */
+  private final class Sentinels(rows: Seq[(Long, Long, String)], horizonDays: Int)
+      extends Stage(s"stream-sentinel-${rows.map(_._3).mkString("-")}-${horizonDays}d",
+        rows, horizonDays) {
+    protected def build(spark: SparkSession, dir: String, out: java.nio.file.Path): Unit = {
+      copyEventsTable(dir, out, "a")
+      writeOneFile(sentinelDf(spark, dir, rows, horizonDays), out.resolve("zz_sentinel.parquet"))
     }
   }
 
-  /** Build-once scratch dir keyed by (kind, dir): `build` populates it
-    * on first use; later calls (bench trials) reuse the same files. */
-  private def cachedStage(key: String)(
-      build: java.nio.file.Path => Unit): java.nio.file.Path =
-    // compute + evict under ONE monitor (the same one evictOverBudget
-    // takes): without it, a concurrent cachedStage call could evict
-    // (rmTree) a stage another thread just obtained but whose stream
-    // hasn't read yet. Scenarios run sequentially today; this makes
-    // the cache safe if they ever don't.
-    stageCache.synchronized {
-      val path = stageCache.computeIfAbsent(key, _ => {
-        val p = scratchDir("graft_stage")
-        build(p)
-        stageOrder.add(key)
-        p
-      })
-      evictOverBudget(keep = key)
-      path
+  /** `cols` of `table`, split by `repartition(files)` into `files` files. */
+  private final class Split(table: String, cols: Seq[String], files: Int)
+      extends Stage(s"stream-split-$table-${cols.mkString("-")}-x$files") {
+    protected def build(spark: SparkSession, dir: String, out: java.nio.file.Path): Unit =
+      Tables.load(spark, dir, table).select(cols.map(col): _*)
+        .repartition(files).write.mode("overwrite").parquet(out.toString)
+  }
+
+  /** The far-future click + purchase pair of a synthetic user that
+    * drags both join watermarks past every real row. */
+  private val JoinFlush = new Sentinels(Seq((-1L, -1L, "click"), (-2L, -1L, "purchase")), 30)
+  private val ViewFlush = new Sentinels(Seq((-1L, -1L, "view")), 30)
+  private val EosFlush = new Sentinels(Seq((-1L, -1L, "eos")), 30)
+  private val Scd2Flush = new Sentinels(Seq((-1L, -1L, "view")), 90)
+
+  /** The (ts, event_type, value) slice the window scenarios read. */
+  private val WindowCols = Seq("ts", "event_type", "value")
+  private val WindowSplit2 = new Split("events", WindowCols, 2)
+  private val WindowSplit3 = new Split("events", WindowCols, 3)
+  private val DocSplit = new Split("documents", Seq("doc_id", "text"), 3)
+  private val UserSplit = new Split("events", Seq("user_id"), 3)
+
+  /** The events table staged twice (`a_…` and `b_…`), so every event
+    * arrives as an exact duplicate. */
+  private object EventsTwice extends Stage("stream-events-x2") {
+    protected def build(spark: SparkSession, dir: String, out: java.nio.file.Path): Unit =
+      for (n <- Seq("a", "b")) copyEventsTable(dir, out, n)
+  }
+
+  /** The late-data scenario's two tranches: everything from the third
+    * UTC day on plus one flush row 30 days past the last event
+    * (`a_ontime.parquet`), and the first two days (`b_late.parquet`). */
+  private object LateTranches extends Stage("stream-late-tranches") {
+    protected def build(spark: SparkSession, dir: String, out: java.nio.file.Path): Unit = {
+      val ev = Tables.events(spark, dir).select(WindowCols.map(col): _*)
+      val bounds = ev.agg(min(unix_micros(col("ts"))),
+        max(unix_micros(col("ts")))).head()
+      val DayUs = 86400000000L
+      // UTC-day boundary arithmetic in exact micros, mirroring the
+      // oracle's min(ts)::DATE + 2
+      val cutoffUs = (Math.floorDiv(bounds.getLong(0), DayUs) + 2) * DayUs
+      val sentinelUs = bounds.getLong(1) + 30 * DayUs
+      val sentinel = spark.range(1).select(
+        timestamp_micros(lit(sentinelUs)).as("ts"),
+        lit("__flush").as("event_type"), lit(0.0).as("value"))
+      writeOneFile(ev.filter(unix_micros(col("ts")) >= cutoffUs).union(sentinel),
+        out.resolve("a_ontime.parquet"))
+      writeOneFile(ev.filter(unix_micros(col("ts")) < cutoffUs),
+        out.resolve("b_late.parquet"))
     }
+  }
+
+  /** Every stage the `q_stream_*` queries read, by kind, so Bench's
+    * artifact phase builds them (`graft.Bench.buildArtifacts`). */
+  val artifacts: Seq[(String, (SparkSession, String) => Any)] =
+    Seq(JoinFlush, ViewFlush, EosFlush, Scd2Flush, WindowSplit2, WindowSplit3,
+      DocSplit, UserSplit, EventsTwice, LateTranches).map(s => s.kind -> s.path _)
 
   /** Write `df` as a single parquet file at `target` (coalesce-to-one
     * part + move — the file-source staging shape). */
@@ -541,41 +553,27 @@ object StreamingEtl {
     * int64 nanos or timestamp — every file, sentinels included, reads
     * under it), then normalized. */
   private def stagedEventsStream(spark: SparkSession, dir: String,
-      stage: java.nio.file.Path): DataFrame =
+      stage: String): DataFrame =
     Tables.normalizeEventsTs(spark.readStream
-      .schema(Tables.eventsRawSchema(spark, dir)).parquet(stage.toString))
+      .schema(Tables.eventsRawSchema(spark, dir)).parquet(stage))
 
-  /** events.parquet plus a far-future sentinel file, staged into one
-    * scratch dir — memoized per (kind, dir) — and read as one stream.
-    * The sentinel sorts LAST by name, so `maxFilesPerTrigger=1` would
-    * run it as its own batch; a plain AvailableNow read lists both in
-    * one batch (the watermark still advances AFTER that batch, so the
-    * no-data micro-batch flushes expiring state either way). */
-  private def sentinelStream(spark: SparkSession, dir: String, kind: String,
-      rows: Seq[(Long, Long, String)], horizonDays: Int): DataFrame =
-    stagedEventsStream(spark, dir, cachedStage(s"$kind|$dir") { stage =>
-      copyEventsTable(dir, stage, "a")
-      writeOneFile(sentinelDf(spark, dir, rows, horizonDays),
-        stage.resolve("zz_sentinel.parquet"))
-    })
+  /** events.parquet plus the far-future sentinel file of `flush`, read
+    * as one stream. The sentinel sorts LAST by name, so
+    * `maxFilesPerTrigger=1` would run it as its own batch; a plain
+    * AvailableNow read lists both in one batch (the watermark still
+    * advances AFTER that batch, so the no-data micro-batch flushes
+    * expiring state either way). */
+  private def sentinelStream(spark: SparkSession, dir: String,
+      flush: Sentinels): DataFrame =
+    stagedEventsStream(spark, dir, flush.path(spark, dir))
 
-  /** `df` split by `repartition(n)` into n staged files — memoized per
-    * (kind, dir) — and read back one file per micro-batch, so the run
-    * has n real batches. */
-  private def splitStream(spark: SparkSession, kind: String, dir: String,
-      n: Int)(df: => DataFrame): DataFrame = {
-    val stage = cachedStage(s"$kind|$dir") { p =>
-      df.repartition(n).write.mode("overwrite").parquet(p.toString)
-    }
-    spark.readStream.schema(spark.read.parquet(stage.toString).schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage.toString)
+  /** A split stage read back one file per micro-batch, so the run has
+    * one real batch per file. */
+  private def splitStream(spark: SparkSession, dir: String, split: Split): DataFrame = {
+    val stage = split.path(spark, dir)
+    spark.readStream.schema(spark.read.parquet(stage).schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
   }
-
-  /** The (ts, event_type, value) slice the split-staged window
-    * scenarios read. */
-  private def tsTypeValue(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("ts"), col("event_type"), col("value"))
 
   /** Watermarked streaming dedup — the exactly-once ingest pattern.
     * The events table is deliberately staged TWICE into the stream, so
@@ -587,9 +585,7 @@ object StreamingEtl {
     * the watermark passes the event's time + delay, so it stays
     * O(events inside the watermark horizon), not O(all events ever). */
   def dedupViaStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = cachedStage(s"dedup|$dir") { p =>
-      for (n <- Seq("a", "b")) copyEventsTable(dir, p, n)
-    }
+    val stage = EventsTwice.path(spark, dir)
     // project BEFORE the stateful op: streaming state ops don't get
     // automatic column pruning through the shuffle, and the dedup's
     // consumer aggregates only (event_type, event_id, value) — carrying
@@ -605,7 +601,7 @@ object StreamingEtl {
     // and every staged row flows through the store (free from the
     // parquet footer; ×2 for the duplicate copy)
     val rowsHint = 2L * Tables.footerRowCount(spark, dir, "events")
-    fileSinkRun(in, needsFlush = false, rowsHint = rowsHint, tag = "dedup")
+    fileSinkRun(in, dir, needsFlush = false, rowsHint = rowsHint, tag = "dedup")
   }
 
   /** The click/purchase interval join over ONE streaming source — a
@@ -635,10 +631,6 @@ object StreamingEtl {
         unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
   }
 
-  /** The far-future click + purchase pair of a synthetic user that
-    * drags both join watermarks past every real row. */
-  private val JoinSentinels = Seq((-1L, -1L, "click"), (-2L, -1L, "purchase"))
-
   /** Stream-stream INTERVAL join — the attribution pattern
     * (`clickPurchaseJoin`). Inner-join results emit as soon as both
     * sides arrive — no end-of-stream flush sentinel needed, unlike the
@@ -665,8 +657,7 @@ object StreamingEtl {
     * horizon) at any scale. The driver oracle is the equivalent batch
     * LEFT JOIN — unified-API parity including the unmatched rows. */
   def leftOuterJoinViaStream(spark: SparkSession, dir: String): DataFrame =
-    runStream(clickPurchaseJoin(sentinelStream(spark, dir, "loj",
-        JoinSentinels, horizonDays = 30), "leftOuter")
+    runStream(clickPurchaseJoin(sentinelStream(spark, dir, JoinFlush), "leftOuter")
       .select("click_id", "user_id", "purchase_id", "delta_us"),
       Memory, needsFlush = true)
       .filter(col("click_id") >= 0)
@@ -679,8 +670,7 @@ object StreamingEtl {
     * batch, so the no-data batch expires and flushes all state).
     * Oracle is the batch FULL JOIN. */
   def fullOuterJoinViaStream(spark: SparkSession, dir: String): DataFrame =
-    runStream(clickPurchaseJoin(sentinelStream(spark, dir, "foj",
-        JoinSentinels, horizonDays = 30), "fullOuter")
+    runStream(clickPurchaseJoin(sentinelStream(spark, dir, JoinFlush), "fullOuter")
       .select(col("click_id"),
         coalesce(col("user_id"), col("p_user_id")).as("user_id"),
         col("purchase_id"), col("delta_us")),
@@ -708,7 +698,7 @@ object StreamingEtl {
     // (and its oracle) does not depend on the file count, while each
     // further file costs one ~8-job foreachBatch round (state read +
     // versioned write).
-    val in = splitStream(spark, "mv", dir, 3)(tsTypeValue(spark, dir))
+    val in = splitStream(spark, dir, WindowSplit3)
     val stateBase = scratchDir("graft_mv_state")
     var statePath: Option[String] = None
     runStream(in, EachBatch { (batch, batchId) =>
@@ -763,7 +753,7 @@ object StreamingEtl {
     // triggerExecution 0.2–0.4 s per batch at sf0.1 on 4 cores)
     // without demonstrating anything new; the latest emission per key
     // is split-count-invariant.
-    val in = splitStream(spark, "upd", dir, 2)(tsTypeValue(spark, dir))
+    val in = splitStream(spark, dir, WindowSplit2)
     val log = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     @volatile var outSchema: StructType = null
     // a finite watermark would drop genuinely-on-time rows that land
@@ -817,7 +807,7 @@ object StreamingEtl {
     // triggerExecution at sf0.1 on 4 cores). The Complete-mode result
     // over all input is split-count-invariant, so the oracle (the batch
     // tumbling aggregate) does not depend on the file count.
-    val agg = tumblingCounts(splitStream(spark, "rec", dir, 2)(tsTypeValue(spark, dir)))
+    val agg = tumblingCounts(splitStream(spark, dir, WindowSplit2))
     val cp = scratchDir("graft_rec_cp")
     val stateBase = scratchDir("graft_rec_state")
     @volatile var lastState: Option[String] = None
@@ -860,27 +850,10 @@ object StreamingEtl {
     * silently kept late rows (or failed to flush) hash-fails. */
   def lateDataViaStream(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
-    // the two tranche FILES are deterministic per dir — build them once
-    // (two coalesce-writes + the bounds probe) and copy per run; the
-    // stage dir itself must be fresh per run because the late tranche
-    // is added mid-scenario and the checkpoint must start empty
-    val tranches = cachedStage(s"late|$dir") { p =>
-      val ev = tsTypeValue(spark, dir)
-      val bounds = ev.agg(min(unix_micros(col("ts"))),
-        max(unix_micros(col("ts")))).head()
-      val DayUs = 86400000000L
-      // UTC-day boundary arithmetic in exact micros, mirroring the
-      // oracle's min(ts)::DATE + 2
-      val cutoffUs = (Math.floorDiv(bounds.getLong(0), DayUs) + 2) * DayUs
-      val sentinelUs = bounds.getLong(1) + 30 * DayUs
-      val sentinel = spark.range(1).select(
-        timestamp_micros(lit(sentinelUs)).as("ts"),
-        lit("__flush").as("event_type"), lit(0.0).as("value"))
-      writeOneFile(ev.filter(unix_micros(col("ts")) >= cutoffUs).union(sentinel),
-        p.resolve("a_ontime.parquet"))
-      writeOneFile(ev.filter(unix_micros(col("ts")) < cutoffUs),
-        p.resolve("b_late.parquet"))
-    }
+    // the two tranche FILES are a stage; the run's input dir itself
+    // must be fresh per run because the late tranche is added
+    // mid-scenario and the checkpoint must start empty
+    val tranches = java.nio.file.Paths.get(LateTranches.path(spark, dir))
     val stage = scratchDir("graft_late_stage")
     val cp = scratchDir("graft_late_cp")
     def stageTranche(name: String): Unit =
@@ -1012,8 +985,7 @@ object StreamingEtl {
     * the batch as-of twin in SQL (`q_stream_asof`). */
   def asofEnrichViaStream(spark: SparkSession, dir: String): Dataset[AsofOut] = {
     import spark.implicits._
-    val in = sentinelStream(spark, dir, "asof",
-        Seq((-1L, -1L, "view")), horizonDays = 30)
+    val in = sentinelStream(spark, dir, ViewFlush)
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         floor(col("value") * 1000).cast("long").as("vmilli"))
@@ -1068,9 +1040,7 @@ object StreamingEtl {
     // the candidate superset, which the MG guarantee makes
     // batch-split-invariant — each further file only re-pays one
     // aggregate-plus-head batch round (~0.3 s).
-    val in = splitStream(spark, "hh", dir, 3)(
-      spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text")))
+    val in = splitStream(spark, dir, DocSplit)
     val state = new graft.functions.MGBuf(k)
     runStream(in, EachBatch { (batch, _) =>
       val sketch = batch
@@ -1134,8 +1104,7 @@ object StreamingEtl {
     // input, identical under any batch split, so the estimate (and
     // oracle) does not depend on the file count, while each further
     // file costs one per-batch distinct+collect round.
-    val in = splitStream(spark, "kmv", dir, 3)(
-      Tables.events(spark, dir).select(col("user_id")))
+    val in = splitStream(spark, dir, UserSplit)
     val h40 = pmod(conv(substring(md5(concat(lit("kmv:"),
       col("user_id").cast("string"))), 1, 15), 16, 10).cast("long"),
       lit(1099511627776L))
@@ -1179,8 +1148,7 @@ object StreamingEtl {
     * drops nothing. */
   def sessionizeViaStream(spark: SparkSession, dir: String): Dataset[Session] = {
     import spark.implicits._
-    val in = sentinelStream(spark, dir, "sess",
-        Seq((-1L, -1L, "eos")), horizonDays = 30)
+    val in = sentinelStream(spark, dir, EosFlush)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value")).as[Event]
 
@@ -1190,7 +1158,7 @@ object StreamingEtl {
     // ~one session per event at this data's density, so it takes the
     // parallel file sink, not a driver-side memory collect.
     val rowsHint = Tables.footerRowCount(spark, dir, "events")
-    fileSinkRun(sessionize(in, watermark = "1 hour").filter(_.user_id >= 0),
+    fileSinkRun(sessionize(in, watermark = "1 hour").filter(_.user_id >= 0), dir,
       needsFlush = true, rowsHint = rowsHint, tag = "sess")
       .as[Session]
   }
@@ -1210,8 +1178,7 @@ object StreamingEtl {
     * (user, open session) and evicted on emission — bounded by the
     * watermark horizon at any scale. */
   def sessionWindowViaStream(spark: SparkSession, dir: String): DataFrame =
-    runStream(sentinelStream(spark, dir, "sw",
-        Seq((-1L, -1L, "eos")), horizonDays = 30)
+    runStream(sentinelStream(spark, dir, EosFlush)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
@@ -1289,8 +1256,7 @@ object StreamingEtl {
     * (ts, event_id) order. */
   def scd2ViaStream(spark: SparkSession, dir: String): Dataset[Scd2Row] = {
     import spark.implicits._
-    val in = sentinelStream(spark, dir, "scd2",
-        Seq((-1L, -1L, "view")), horizonDays = 90)
+    val in = sentinelStream(spark, dir, Scd2Flush)
       .filter(col("user_id") < 100) // the batch twin's dimension slice
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .as[Scd2Event]

@@ -115,9 +115,18 @@ class ContractSpec extends GraftSpec {
       token <- Seq("getProperty(\"java.io.tmpdir\")", "pathKey(") if read(f).contains(token)
     } yield s"${f.getName}: $token"
     assert(outside.isEmpty, s"artifact paths resolved outside Artifacts:\n${outside.mkString("\n")}")
-    // a query module memoizes through the store, never a map of its own
-    val memos = files(new java.io.File("src/main/scala/graft/queries"))
-      .filter(f => read(f).contains("TrieMap")).map(_.getName)
-    assert(memos.isEmpty, s"TrieMap memos under queries/: ${memos.mkString(", ")}")
+    // a module memoizes or stages through the store, never through a
+    // map, a registry or a shutdown hook of its own. The one exception:
+    // BloomFunctions maps handle ids to broadcast bloom filters, since a
+    // registered SQL function is built from child expressions only and
+    // finds its broadcast by the id; a broadcast belongs to the running
+    // session, not to a dataset.
+    val exempt = Map("BloomFunctions.scala" -> Set("TrieMap"))
+    val stores = for {
+      f <- srcs if f.getName != "Artifacts.scala"
+      token <- Seq("ConcurrentHashMap", "TrieMap", "computeIfAbsent", "addShutdownHook")
+      if read(f).contains(token) && !exempt.getOrElse(f.getName, Set.empty)(token)
+    } yield s"${f.getName}: $token"
+    assert(stores.isEmpty, s"per-dataset state kept outside Artifacts:\n${stores.mkString("\n")}")
   }
 }

@@ -39,7 +39,7 @@ class ProbeSpec extends GraftSpec {
     import graft.clean.Clean
     import graft.sources.SampleData
     import graft.sync.Synchronize
-    val out = java.nio.file.Files.createTempDirectory("graft-probe-export").resolve("sync")
+    val out = tempDir("graft-probe-export").resolve("sync")
     try {
       val r = probe("clean_sync_export") { (s, _) =>
         val cam = Clean.clean(SampleData.camera(s, n = 500), "camera")._1
@@ -150,9 +150,13 @@ class ProbeSpec extends GraftSpec {
 
   test("Bench's runner writes every query under queries, jobs and layers") {
     val names = Seq("a1_minmax", "q1_pricing_summary")
-    val (full, line) = Bench.run(spark, sfDir, names, 0.0, "bench_full_test.json")
+    val artifactSec = Seq("stage-a" -> 1.5, "stage-b" -> 0.25)
+    val (full, line) = Bench.run(spark, sfDir, names, artifactSec, "bench_full_test.json")
     val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(full)
     assert(json.get("n_queries").asInt === 2)
+    assert(json.get("index_build_sec").asDouble === 1.75)
+    assert(json.get("artifact_sec").get("stage-a").asDouble === 1.5)
+    assert(json.get("artifact_sec").get("stage-b").asDouble === 0.25)
     assert(json.get("failed").size === 0)
     for (key <- Seq("queries", "jobs", "layers"); n <- names)
       assert(json.get(key).has(n), s"$n missing under $key")

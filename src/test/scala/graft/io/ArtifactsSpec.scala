@@ -8,21 +8,8 @@ import graft.GraftSpec
 /** The artifact store's reuse rules: one build per key, a marker
   * written only after a build returns, stale generations collected per
   * dataset, markers invisible to parquet readers, and a base that
-  * follows `java.io.tmpdir`. Each test runs under its own temp dir,
-  * deleted afterwards. */
+  * follows `java.io.tmpdir`. Each test runs under its own temp dir. */
 class ArtifactsSpec extends GraftSpec {
-
-  private def withTmpdir[T](body: File => T): T = {
-    val old = System.getProperty("java.io.tmpdir")
-    val dir = Files.createTempDirectory("graft-artifacts").toFile
-    System.setProperty("java.io.tmpdir", dir.getPath)
-    try body(dir)
-    finally {
-      System.setProperty("java.io.tmpdir", old)
-      Files.walk(dir.toPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    }
-  }
 
   /** A one-table dataset dir with `n` rows. */
   private def dataset(root: File, name: String, n: Int): String = {

@@ -2,7 +2,6 @@ package graft.io
 
 import graft.GraftSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** File-skipping layout hardening: observed-range quantization before
   * the morton interleave (wide key domains must still prune) and
@@ -28,7 +27,7 @@ class FileSkippingSpec extends GraftSpec {
     // user ids 1M..6M and values 0..1e6: both dimensions far beyond
     // 65535 — the old clamp collapsed every key into one z-cell and
     // pruning silently degenerated to a full scan
-    val dir = Files.createTempDirectory("graft-zwide").toFile.getAbsolutePath
+    val dir = tempDir("graft-zwide").toFile.getAbsolutePath
     val n = 20000
     val rows = (0 until n).map { i =>
       val user = 1000000L + (i % 500) * 10000L

@@ -72,7 +72,7 @@ class QueryDefSpec extends GraftSpec {
   }
 
   test("q_hits over empty orders and lineitem returns no rows") {
-    val dir = java.nio.file.Files.createTempDirectory("hits_empty").toString
+    val dir = tempDir("hits_empty").toString
     Seq("orders", "lineitem").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").limit(0)
         .write.parquet(s"$dir/$t.parquet")

@@ -20,7 +20,7 @@ class R11QueriesSpec extends GraftSpec {
 
   private def eventsDirP(rows: Seq[(Long, Long, String, Double, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11ev").toString
+    val dir = tempDir("r11ev").toString
     rows.zipWithIndex
       .map { case ((us, uid, et, v, p), i) => (i.toLong, us, uid, et, v, p) }
       .toDF("event_id", "__us", "user_id", "event_type", "value", "props")
@@ -137,7 +137,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("emb_mmd_poly: identical groups have zero MMD, disjoint ones positive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11emb").toString
+    val dir = tempDir("r11emb").toString
     def vec(seed: Int) = (1 to 16).map(i => (seed * i % 7).toFloat / 3f) ++
       Seq.fill(48)(0f)
     // labels 0 and 1 hold the SAME two vectors; label 2 a different one
@@ -155,7 +155,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_hits: the full-basket customer out-hubs the single-item one") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11hits").toString
+    val dir = tempDir("r11hits").toString
     Seq((100L, 1L), (101L, 2L)).toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Seq((100L, 10L), (100L, 20L), (100L, 30L), (101L, 10L))
@@ -190,7 +190,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("text_textrank_keywords ranks the co-occurrence hub first") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11tr").toString
+    val dir = tempDir("r11tr").toString
     Seq((1L, "hub alpha"), (2L, "hub beta"), (3L, "hub gamma"))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -233,7 +233,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_clustering_coeff: triangle plus pendant edge gives 0.6") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11cc").toString
+    val dir = tempDir("r11cc").toString
     // orders 1,2 each buy {a,b,c}; orders 3,4 each buy {a,d} →
     // triangle abc (support 2) + edge ad: 1 triangle, 5 wedges
     val li = Seq(1L -> 100L, 1L -> 200L, 1L -> 300L,
@@ -367,7 +367,7 @@ class R11QueriesSpec extends GraftSpec {
     val flat = Array.tabulate(256)(i => if (i == 7) 384L else 0L)
     assert(MediaKernels.histEntropyNats(flat) === 0.0 +- 1e-12)
     // end-to-end over the real codec: bounded by ln 256, mostly-distinct bytes
-    val dir = java.nio.file.Files.createTempDirectory("r11me").toString
+    val dir = tempDir("r11me").toString
     import spark.implicits._
     Seq((1L, "t", "en", "s", 1L), (2L, "t", "en", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -380,7 +380,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("emb_mmd_rbf: zero on identical label groups, positive on different") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11rbf").toString
+    val dir = tempDir("r11rbf").toString
     def vec(seed: Int) = (1 to 16).map(i => (seed * i % 7).toFloat / 3f) ++
       Seq.fill(48)(0f)
     val rows = Seq((1L, vec(1), 0), (2L, vec(2), 0), (3L, vec(1), 1),
@@ -412,7 +412,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_lz78_complexity parses known strings exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11lz").toString
+    val dir = tempDir("r11lz").toString
     Seq((1L, "aaaa"), (2L, "abcd"), (3L, "abab"))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -425,7 +425,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_rich_club: the triangle core has phi = 1") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11rc").toString
+    val dir = tempDir("r11rc").toString
     val li = Seq(1L -> 100L, 1L -> 200L, 1L -> 300L,
       2L -> 100L, 2L -> 200L, 2L -> 300L,
       3L -> 100L, 3L -> 400L, 4L -> 100L, 4L -> 400L)
@@ -465,7 +465,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("emb_kcenter_greedy covers the three clusters first, radius non-increasing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11kc").toString
+    val dir = tempDir("r11kc").toString
     def v(base: Float, j: Int) =
       (1 to 16).map(i => base + (i + j) % 3 * 0.01f) ++ Seq.fill(48)(0f)
     // clusters at 0, +500, -900 (asymmetric so argmax ties can't occur)
@@ -485,7 +485,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("pipe_dsir_weights ranks target-vocabulary docs above disjoint ones") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11ds").toString
+    val dir = tempDir("r11ds").toString
     val docs = Seq(
       (1L, "aa bb cc aa bb", "src0"), (2L, "aa cc bb cc aa", "src0"),
       (3L, "aa bb aa bb aa", "src1"),   // target-like proposal doc
@@ -802,7 +802,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("emb_calinski_harabasz separates two tight far-apart clusters") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11ch").toString
+    val dir = tempDir("r11ch").toString
     def v(base: Float, j: Int) =
       (1 to 16).map(i => base + (i + j) % 3 * 0.01f) ++ Seq.fill(48)(0f)
     val rows = (0 until 4).map(j => (j.toLong, v(0f, j), 0)) ++
@@ -818,7 +818,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_taylor_law recovers slope 2 for Var = 2*Mean^2 demand patterns") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11tl").toString
+    val dir = tempDir("r11tl").toString
     // week 0 carries only a constant-demand part (var 0 -> excluded,
     // but it pins W = 2 global weeks); parts 1..4 order 2m in week 1
     // only -> mean m, var 2m^2, so ln var = ln 2 + 2 ln mean exactly
@@ -938,7 +938,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("text_dup_ngram_profile counts repeated n-gram instances per size") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11dup").toString
+    val dir = tempDir("r11dup").toString
     Seq((1L, "a b a b", "en", "s0", 7L), (2L, "a b c", "en", "s0", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -991,7 +991,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_price_index: a uniform price doubling doubles all three indices") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11pi").toString
+    val dir = tempDir("r11pi").toString
     Seq((1L, "1992-01-02"), (2L, "1993-01-02"))
       .toDF("o_orderkey", "o_orderdate")
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
@@ -1008,7 +1008,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_network_density_weekly: repeat baskets contribute zero new edges") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11nd").toString
+    val dir = tempDir("r11nd").toString
     Seq((1L, "1992-01-02"), (2L, "1992-01-09"))
       .toDF("o_orderkey", "o_orderdate")
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
@@ -1135,7 +1135,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("pipe_l_diversity flags the uniform-band class, passes the diverse one") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11ld").toString
+    val dir = tempDir("r11ld").toString
     Seq(("S", 1L, 500.0), ("S", 1L, 1500.0),   // class (S,1): l = 2
       ("S", 2L, 5500.0), ("S", 2L, 5800.0))    // class (S,2): l = 1
       .toDF("c_mktsegment", "c_nationkey", "c_acctbal")
@@ -1149,7 +1149,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("pipe_t_closeness: classes mirroring the global distribution have EMD 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11tc").toString
+    val dir = tempDir("r11tc").toString
     Seq(("S", 1L, 500.0), ("S", 1L, 1500.0),
       ("S", 2L, 600.0), ("S", 2L, 1600.0))
       .toDF("c_mktsegment", "c_nationkey", "c_acctbal")
@@ -1162,7 +1162,7 @@ class R11QueriesSpec extends GraftSpec {
 
   test("q_abc_analysis splits an 80/15/5 revenue ladder into A/B/C") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r11abc").toString
+    val dir = tempDir("r11abc").toString
     Seq((1L, 1L, 80.0), (2L, 2L, 15.0), (3L, 3L, 5.0))
       .toDF("l_orderkey", "l_partkey", "l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")

@@ -13,7 +13,7 @@ class R12QueriesSpec extends GraftSpec {
 
   private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r12ev").toString
+    val dir = tempDir("r12ev").toString
     rows.zipWithIndex
       .map { case ((us, uid, et, v), i) => (i.toLong, us, uid, et, v, "{}") }
       .toDF("event_id", "__us", "user_id", "event_type", "value", "props")
@@ -24,7 +24,7 @@ class R12QueriesSpec extends GraftSpec {
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r12doc").toString
+    val dir = tempDir("r12doc").toString
     rows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -214,7 +214,7 @@ class R12QueriesSpec extends GraftSpec {
 
   private def lineitemDir(rows: Seq[(Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r12li").toString
+    val dir = tempDir("r12li").toString
     rows.toDF("l_partkey", "__d", "l_quantity")
       .withColumn("l_shipdate", to_timestamp(col("__d"))).drop("__d")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -318,7 +318,7 @@ class R12QueriesSpec extends GraftSpec {
   /** lineitem fixture with order keys: (orderkey, partkey, shipdate, qty) */
   private def lineitemDirO(rows: Seq[(Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r12lo").toString
+    val dir = tempDir("r12lo").toString
     rows.toDF("l_orderkey", "l_partkey", "__d", "l_quantity")
       .withColumn("l_shipdate", to_timestamp(col("__d"))).drop("__d")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -380,7 +380,7 @@ class R12QueriesSpec extends GraftSpec {
 
   private def embDir(rows: Seq[(Long, Array[Float], Int)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r12emb").toString
+    val dir = tempDir("r12emb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -7,32 +7,15 @@ import org.apache.spark.sql.functions._
   * a closed-form fixture outcome a same-formula-on-both-engines slip
   * could not fake (ramp → FD exactly 1, ramp → zero mobility, AM-GM
   * flatness bound), plus sf0.001 range sanity. */
-class R13QueriesSpec extends GraftSpec with org.scalatest.BeforeAndAfterAll {
+class R13QueriesSpec extends GraftSpec {
 
   private def byName(name: String) = R13Queries.defs.find(_.name == name).get.fn
-
-  /** A fixture dataset dir, deleted after the suite: the artifacts
-    * built on it are then collected by the next artifact build. */
-  private val datasets = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private def tempDataset(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    datasets.add(dir)
-    dir.toString
-  }
-
-  override def afterAll(): Unit =
-    datasets.forEach { d =>
-      val s = java.nio.file.Files.walk(d)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
-    }
 
   /** events.parquet with one row per (day-index, count) pair: `cnt`
     * events on day `di`. */
   private def dailyDir(counts: Seq[Int]): String = {
     import spark.implicits._
-    val dir = tempDataset("r13ev")
+    val dir = tempDir("r13ev").toString
     val day0 = 1704067200000000L // 2024-01-01 UTC micros
     counts.zipWithIndex.flatMap { case (cnt, di) =>
       (0 until cnt).map { j =>
@@ -248,7 +231,7 @@ class R13QueriesSpec extends GraftSpec with org.scalatest.BeforeAndAfterAll {
   /** events.parquet with one row per (user, day-index, type, value). */
   private def typedDir(rows: Seq[(Long, Int, String, Double)]): String = {
     import spark.implicits._
-    val dir = tempDataset("r13ty")
+    val dir = tempDir("r13ty").toString
     val day0 = 1704067200000000L // 2024-01-01 UTC micros
     rows.zipWithIndex.map { case ((uid, di, tp, v), j) =>
       (j.toLong, day0 + di * 86400000000L + j * 1000000L, uid, tp, v, "{}")
@@ -349,7 +332,7 @@ class R13QueriesSpec extends GraftSpec with org.scalatest.BeforeAndAfterAll {
   private def basketDir(baskets: Seq[Seq[Int]],
       brand: Int => String = p => s"B$p"): String = {
     import spark.implicits._
-    val dir = tempDataset("r13bk")
+    val dir = tempDir("r13bk").toString
     baskets.zipWithIndex.flatMap { case (ps, oid) =>
       ps.map(p => (oid.toLong, p.toLong))
     }.toDF("l_orderkey", "l_partkey")
@@ -677,7 +660,7 @@ class R13QueriesSpec extends GraftSpec with org.scalatest.BeforeAndAfterAll {
   /** lineitem.parquet with explicit quantity/price per part. */
   private def priceDir(rows: Seq[(Long, Double, Double)]): String = {
     import spark.implicits._
-    val dir = tempDataset("r13pr")
+    val dir = tempDir("r13pr").toString
     rows.zipWithIndex.map { case ((pk, qty, ep), i) =>
       (i.toLong, pk, qty, ep)
     }.toDF("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
@@ -889,7 +872,7 @@ class R13QueriesSpec extends GraftSpec with org.scalatest.BeforeAndAfterAll {
   /** events.parquet with `cnt` events in hour-bucket `hb` of day 0. */
   private def hourDir(counts: Seq[Int]): String = {
     import spark.implicits._
-    val dir = tempDataset("r13hr")
+    val dir = tempDir("r13hr").toString
     val day0 = 1704067200000000L
     counts.zipWithIndex.flatMap { case (cnt, hb) =>
       (0 until cnt).map { j =>

@@ -16,7 +16,7 @@ class R14QueriesSpec extends GraftSpec {
 
   private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14ev").toString
+    val dir = tempDir("r14ev").toString
     rows.zipWithIndex
       .map { case ((us, uid, et, v), i) => (i.toLong, us, uid, et, v, "{}") }
       .toDF("event_id", "__us", "user_id", "event_type", "value", "props")
@@ -27,7 +27,7 @@ class R14QueriesSpec extends GraftSpec {
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14doc").toString
+    val dir = tempDir("r14doc").toString
     rows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -37,7 +37,7 @@ class R14QueriesSpec extends GraftSpec {
   private def liPartDir(li: Seq[(Long, Double)],
                         parts: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14li").toString
+    val dir = tempDir("r14li").toString
     li.zipWithIndex.map { case ((pk, px), i) => (i.toLong, pk, px) }
       .toDF("l_orderkey", "l_partkey", "l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -78,7 +78,7 @@ class R14QueriesSpec extends GraftSpec {
     // below its expectation → a mid-range two-sided p that an
     // independent driver-side Lanczos-Γ evaluation must reproduce.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14fx").toString
+    val dir = tempDir("r14fx").toString
     val sat0 = sat * 1L; val wed0 = wed * 1L
     spark.range(0, 9000000L, 1, 8)
       .selectExpr("id AS event_id",
@@ -317,7 +317,7 @@ class R14QueriesSpec extends GraftSpec {
 
   private def liDir(rows: Seq[(Long, Long)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14co").toString
+    val dir = tempDir("r14co").toString
     rows.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir
@@ -446,7 +446,7 @@ class R14QueriesSpec extends GraftSpec {
 
   private def embDir16(rows: Seq[(Long, Float, Int)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14emb").toString
+    val dir = tempDir("r14emb").toString
     rows.map { case (id, x0, lbl) =>
       (id, Array.fill(16)(0f).updated(0, x0), lbl)
     }.toDF("vec_id", "embedding", "label")
@@ -646,7 +646,7 @@ class R14QueriesSpec extends GraftSpec {
       li: Seq[(Long, Long, Long)], orders: Seq[(Long, String)],
       parts: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14xyz").toString
+    val dir = tempDir("r14xyz").toString
     li.toDF("l_orderkey", "l_partkey", "l_quantity")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     orders.toDF("o_orderkey", "__d")

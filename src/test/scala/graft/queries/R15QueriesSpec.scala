@@ -19,7 +19,7 @@ class R15QueriesSpec extends GraftSpec {
 
   private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r15ev").toString
+    val dir = tempDir("r15ev").toString
     rows.zipWithIndex
       .map { case ((us, uid, et, v), i) => (i.toLong, us, uid, et, v, "{}") }
       .toDF("event_id", "__us", "user_id", "event_type", "value", "props")
@@ -176,7 +176,7 @@ class R15QueriesSpec extends GraftSpec {
   test("q_rec_eval: one hitting and one missing customer make every " +
     "metric a closed-form fraction") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r15rec").toString
+    val dir = tempDir("r15rec").toString
     // train (1992-01-01, before the 01-06 midpoint): order 1 makes
     // parts 1..5 popular with counts 6,5,4,3,2 (part 99 appears once)
     val trainLi = (1L to 5L).flatMap(p =>
@@ -202,7 +202,7 @@ class R15QueriesSpec extends GraftSpec {
 
   private def embDir(rows: Seq[(Long, Seq[Double])]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r15emb").toString
+    val dir = tempDir("r15emb").toString
     rows.map { case (id, v) => (id, v.map(_.toFloat).toArray, 0L) }
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -369,7 +369,7 @@ class R15QueriesSpec extends GraftSpec {
   private def eventsPropsDir(
       rows: Seq[(Long, Long, String, Double, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r15evp").toString
+    val dir = tempDir("r15evp").toString
     rows.zipWithIndex
       .map { case ((us, uid, et, v, pr), i) => (i.toLong, us, uid, et, v, pr) }
       .toDF("event_id", "__us", "user_id", "event_type", "value", "props")

@@ -17,7 +17,7 @@ class R16QueriesSpec extends GraftSpec {
 
   private def docsDir(texts: Seq[String]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r16doc").toString
+    val dir = tempDir("r16doc").toString
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -30,7 +30,7 @@ class R16QueriesSpec extends GraftSpec {
   /** events dir where day i carries exactly counts(i) view rows. */
   private def countsDir(counts: Seq[Long]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r16ev").toString
+    val dir = tempDir("r16ev").toString
     val rows = counts.zipWithIndex.flatMap { case (c, i) =>
       (0L until c).map(j =>
         (i * 1000L + j, day0 + i * dayUs + j * 1000000L, j, "view", 1.0, "{}"))

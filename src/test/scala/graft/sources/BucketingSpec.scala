@@ -45,7 +45,7 @@ class BucketingSpec extends GraftSpec {
   test("the bucketed artifact is registered again when the catalog lost it") {
     import spark.implicits._
     val old = System.getProperty("java.io.tmpdir")
-    val root = java.nio.file.Files.createTempDirectory("graft-bucketing")
+    val root = tempDir("graft-bucketing")
     System.setProperty("java.io.tmpdir", root.toString)
     try {
       val dir = s"$root/ds"

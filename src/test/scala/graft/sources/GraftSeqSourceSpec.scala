@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * and deterministic shard bytes. */
 class GraftSeqSourceSpec extends GraftSpec {
 
-  private def tmp() = java.nio.file.Files
-    .createTempDirectory("graft_gseq_spec").toString
+  private def tmp() = tempDir("graft_gseq_spec").toString
 
   test("round-trip preserves every record; scan plans one partition per shard") {
     import spark.implicits._

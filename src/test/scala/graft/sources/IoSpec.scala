@@ -11,7 +11,7 @@ import java.nio.file.Files
 class IoSpec extends GraftSpec {
 
   private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    tempDir(prefix).toFile.getAbsolutePath
 
   test("CSV round-trip: empty cells -> null, sentinels survive, schema explicit") {
     val dir = tmp("graft-csv")

@@ -15,24 +15,9 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem,
   * system writes (modes, `.crc` side files, Spark's state checksums,
   * atomic commits) without starting a process, and every
   * `StreamingEtl` run uses it. */
-class LocalCheckpointFileManagerSpec extends GraftSpec
-    with org.scalatest.BeforeAndAfterAll {
+class LocalCheckpointFileManagerSpec extends GraftSpec {
 
   private val Manager = "spark.sql.streaming.checkpointFileManagerClass"
-
-  private val made = new java.util.concurrent.ConcurrentLinkedQueue[JPath]()
-  private def tmp(prefix: String): JPath = {
-    val d = Files.createTempDirectory(prefix)
-    made.add(d)
-    d
-  }
-
-  override def afterAll(): Unit =
-    made.forEach { d =>
-      val s = Files.walk(d)
-      try s.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
 
   private def manager(dir: JPath) =
     new LocalCheckpointFileManager(new Path(dir.toUri), new Configuration())
@@ -60,7 +45,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
     new Path(dir.toUri).getFileSystem(LocalCheckpointFileManager.noForkConf(new Configuration()))
 
   test("the manager's conf copy runs the no-fork file system; the shared FileSystem cache keeps Hadoop's") {
-    val dir = tmp("graft-lcfm")
+    val dir = tempDir("graft-lcfm")
     assert(noForkFs(dir).isInstanceOf[LocalCheckpointFileManager.NoForkLocalFileSystem])
     assert(noForkFs(dir) ne noForkFs(dir), "uncached: one instance per manager")
     for (conf <- Seq(new Configuration(), spark.sparkContext.hadoopConfiguration))
@@ -76,7 +61,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
   }
 
   test("created files, dirs and .crc files get the modes Hadoop's LocalFileSystem gives") {
-    val (ours, hadoops) = (tmp("graft-lcfm-ours"), tmp("graft-lcfm-hadoop"))
+    val (ours, hadoops) = (tempDir("graft-lcfm-ours"), tempDir("graft-lcfm-hadoop"))
     val fm = manager(ours)
     fm.mkdirs(new Path(ours.toUri.toString + "/a/b"))
     write(fm, new Path(ours.toUri.toString + "/a/b/f"), "x")
@@ -93,7 +78,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
   }
 
   test("getFileLinkStatus equals Hadoop's answer for a symlink, a file and a dir") {
-    val root = tmp("graft-lcfm-link")
+    val root = tempDir("graft-lcfm-link")
     val target = Files.write(root.resolve("t"), "abc".getBytes(UTF_8))
     Files.createSymbolicLink(root.resolve("l"), target)
     val ours = noForkFs(root).asInstanceOf[LocalFileSystem].getRawFileSystem
@@ -112,7 +97,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
   }
 
   test("createAtomic(overwrite = false) over an existing file throws and keeps the file") {
-    val root = tmp("graft-lcfm-atomic")
+    val root = tempDir("graft-lcfm-atomic")
     val fm = manager(root)
     val p = new Path(root.toUri.toString + "/f")
     write(fm, p, "first")
@@ -123,7 +108,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
   }
 
   test("cancel() leaves no temp file behind") {
-    val root = tmp("graft-lcfm-cancel")
+    val root = tempDir("graft-lcfm-cancel")
     val out = manager(root).createAtomic(new Path(root.toUri.toString + "/f"), false)
     out.write("partial".getBytes(UTF_8))
     out.cancel()
@@ -149,7 +134,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
       r.getLong(2), r.getDouble(3))).sorted.toSeq
 
   private def stageEvents(n: Int): JPath = {
-    val in = tmp("graft-lcfm-in")
+    val in = tempDir("graft-lcfm-in")
     Files.copy(java.nio.file.Paths.get(s"$Sf/events.parquet"),
       in.resolve(s"events$n.parquet"))
     in
@@ -157,7 +142,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
 
   test("a stateful run writes the checkpoint files Hadoop's manager writes, modes and checksums included") {
     val in = stageEvents(0)
-    val (ours, default) = (tmp("graft-lcfm-ck"), tmp("graft-lcfm-ck-default"))
+    val (ours, default) = (tempDir("graft-lcfm-ck"), tempDir("graft-lcfm-ck-default"))
     QueryDef.withConf(spark, Manager -> classOf[LocalCheckpointFileManager].getName) {
       countStream(in, ours, "lcfm_ours")
     }
@@ -176,7 +161,7 @@ class LocalCheckpointFileManagerSpec extends GraftSpec
 
   test("a restart from a checkpoint the manager wrote resumes to the batch answer") {
     val in = stageEvents(0)
-    val ckpt = tmp("graft-lcfm-restart")
+    val ckpt = tempDir("graft-lcfm-restart")
     val (first, second) =
       QueryDef.withConf(spark, Manager -> classOf[LocalCheckpointFileManager].getName) {
         val first = countStream(in, ckpt, "lcfm_restart")

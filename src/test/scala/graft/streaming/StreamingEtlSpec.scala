@@ -36,8 +36,8 @@ class StreamingEtlSpec extends GraftSpec {
   }
 
   test("tumblingCounts: stream over a file source equals the batch result") {
-    val dir = Files.createTempDirectory("graft-stream-in").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft-stream-ck").toFile.getAbsolutePath
+    val dir = tempDir("graft-stream-in").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-stream-ck").toFile.getAbsolutePath
     val ds = mkEvents((0 until 200).map { i =>
       (i.toLong, i.toLong * 97 * 1000000, (i % 7).toLong,
         Seq("click", "view", "purchase")(i % 3), i / 10.0)
@@ -59,8 +59,8 @@ class StreamingEtlSpec extends GraftSpec {
   }
 
   test("slidingCounts: every event lands in exactly duration/slide windows; stream == batch") {
-    val dir = Files.createTempDirectory("graft-slide-in").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft-slide-ck").toFile.getAbsolutePath
+    val dir = tempDir("graft-slide-in").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-slide-ck").toFile.getAbsolutePath
     val ds = mkEvents((0 until 100).map { i =>
       (i.toLong, i.toLong * 131 * 1000000, (i % 5).toLong,
         Seq("click", "view")(i % 2), i / 7.0)
@@ -79,7 +79,7 @@ class StreamingEtlSpec extends GraftSpec {
   }
 
   test("eventsStream reads the real nanos-timestamp events table incrementally") {
-    val ckpt = Files.createTempDirectory("graft-ev-ck").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-ev-ck").toFile.getAbsolutePath
     val stream = StreamingEtl.eventsStream(spark, "/root/testdata/sf0.001")
     assert(stream.isStreaming)
     assert(stream.schema("ts").dataType.typeName === "timestamp")
@@ -114,8 +114,8 @@ class StreamingEtlSpec extends GraftSpec {
   }
 
   test("sessionize(stream): a gap inside one batch closes and emits the session") {
-    val dir = Files.createTempDirectory("graft-sess-in").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft-sess-ck").toFile.getAbsolutePath
+    val dir = tempDir("graft-sess-in").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-sess-ck").toFile.getAbsolutePath
     import spark.implicits._
     // ts=0 sits exactly on the initial watermark and would be dropped
     // as late under the event-time timeout; use a real epoch base
@@ -139,8 +139,8 @@ class StreamingEtlSpec extends GraftSpec {
   }
 
   test("sessionize(stream): watermark advance times out and evicts the idle session") {
-    val dir = Files.createTempDirectory("graft-sess2-in").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft-sess2-ck").toFile.getAbsolutePath
+    val dir = tempDir("graft-sess2-in").toFile.getAbsolutePath
+    val ckpt = tempDir("graft-sess2-ck").toFile.getAbsolutePath
     import spark.implicits._
     val T0 = 1704067200L * 1000000
     mkEvents((1L, T0, 1L, "click", 1.0))
@@ -334,7 +334,7 @@ class StreamingEtlSpec extends GraftSpec {
   }
 
   test("a memory-sink run drops its graft_stream_* view; the returned frame still reads its rows") {
-    val dir = Files.createTempDirectory("graft-stream-view")
+    val dir = tempDir("graft-stream-view")
     val ds = mkEvents((0 until 120).map { i =>
       (i.toLong, i.toLong * 61 * 1000000, (i % 5).toLong, Seq("click", "view")(i % 2), i / 4.0)
     }: _*)
@@ -442,4 +442,61 @@ class StreamingEtlSpec extends GraftSpec {
       assert(got === rows(batch()), name)
     }
   }
+
+  private def stageDirs(base: java.io.File): Set[String] =
+    base.listFiles().filter(d => d.getName.startsWith("graft_stream-") &&
+      new java.io.File(d, graft.io.Artifacts.Marker).isFile).map(_.getName).toSet
+
+  test("the q_stream_* queries share 10 stages, and neither a second call nor a second JVM rebuilds one") {
+    val dir = "/root/testdata/sf0.001"
+    withTmpdir { base =>
+      val streams = graft.queries.StreamQueries.defs
+      assert(streams.size === 19)
+      streams.foreach(q => q.fn(spark, dir).write.mode("overwrite").format("noop").save())
+      val built = stageDirs(base)
+      // 10 distinct inputs: the outer joins, the two sessionizers and the
+      // update-mode and recovery runs each share one stage
+      assert(built.size === 10, built)
+      // a rebuild deletes the directory first, and with it this file
+      built.foreach(n => Files.createFile(new java.io.File(base, s"$n/_kept").toPath))
+      val listed = StreamingEtl.artifacts.map { case (_, stage) => stage(spark, dir).toString }
+      assert(listed.map(p => new java.io.File(p).getName).toSet === built)
+
+      val javaBin = s"${System.getProperty("java.home")}/bin/java"
+      val child = new ProcessBuilder(javaBin, "-Xmx256m", s"-Djava.io.tmpdir=$base",
+        "-cp", System.getProperty("java.class.path"), "graft.streaming.StageDirs", dir)
+        .redirectErrorStream(true).start()
+      val out = new String(child.getInputStream.readAllBytes(), "UTF-8")
+      assert(child.waitFor() === 0, out)
+      val found = out.linesIterator.filter(_.startsWith("stage ")).map(_.stripPrefix("stage ")).toSeq
+      assert(found === listed, out)
+      assert(stageDirs(base) === built)
+      built.foreach(n => assert(Files.exists(new java.io.File(base, s"$n/_kept").toPath), s"$n was rebuilt"))
+    }
+  }
+
+  test("a stage built on a temp dataset is collected by the next build once the dataset is gone") {
+    withTmpdir { base =>
+      val twice = StreamingEtl.artifacts.toMap.apply("stream-events-x2")
+      val ds = tempDir("graft-stage-ds")
+      Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
+        ds.resolve("events.parquet"))
+      val orphan = twice(spark, ds.toString).toString
+      assert(stageDirs(base) === Set(new java.io.File(orphan).getName))
+      Files.delete(ds.resolve("events.parquet"))
+      Files.delete(ds)
+      val kept = twice(spark, "/root/testdata/sf0.001").toString
+      assert(!new java.io.File(orphan).exists(), "the orphaned stage is collected")
+      assert(stageDirs(base) === Set(new java.io.File(kept).getName))
+    }
+  }
+}
+
+/** Prints the directory of every stream stage of the dataset `args(0)`,
+  * one `stage <path>` line each, without a Spark session: a stage that
+  * had to be built would need one, so a run in a second JVM shows that
+  * the stages on disk are found and reused. */
+object StageDirs {
+  def main(args: Array[String]): Unit =
+    StreamingEtl.artifacts.foreach { case (_, stage) => println(s"stage ${stage(null, args(0))}") }
 }
